@@ -430,7 +430,7 @@ FV_PROBE_RNS = (40, 70)
 
 def q_feature_vectors_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME point-in-time pipeline as ``feature_vectors``, probed at
-    fixed turn ordinals (the 40th and 150th event per user) so DuckDB can
+    fixed turn ordinals (the 40th and 70th event per user) so DuckDB can
     replay every one of the 30 output columns per probe — relational
     state read at the matched turn, zones (both the raw and the binned
     histogram path), median width, lc/uc contour OLS + local extremes +
@@ -441,7 +441,7 @@ def q_feature_vectors_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = tr.filter(
         F.col("turn_idx").isin([r - 1 for r in FV_PROBE_RNS])
     ).select("conv_id", "ts")
-    out = point_in_time_features(tr, probes, num_buckets=64)
+    out = point_in_time_features(tr, probes)
     return out.select(
         "conv_id",
         "ts",

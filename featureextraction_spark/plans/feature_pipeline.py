@@ -7,34 +7,35 @@ leakage-free prefix ``ts' <= ts`` of that conversation:
   session_id (W6), turn_count, prev_role (W11), last_tool (W12),
   role_transitions (A7) — computed per turn, read at the probe's matched
   turn;
-- numeric half (Arrow-vectorized ``applyInPandas`` cogroup): the reference's
-  five feature families transposed onto per-conversation series
-  (``functions/series_kernels.py``) — zones, median width, lc/uc contour,
-  slantness.
+- numeric half (Arrow-vectorized ``mapInPandas`` over conv_id buckets):
+  the reference's five feature families transposed onto per-conversation
+  series (``functions/series_kernels.py``) — zones, median width, lc/uc
+  contour, slantness.
 
-Scale design: the only shuffle key is ``conv_id`` (both cogroup sides);
+Scale design: the only shuffle key is ``conv_id`` (state and probe sides);
 ``text`` is pruned to two small numeric columns (n_chars, n_tokens) before
 the Arrow exchange, so a mega-conversation ships kilobytes per turn, not
 its transcript. Probes are deduplicated on (conv_id, ts) — the vector is a
 pure function of that pair.
 
-Probe-density cost bound: each probe evaluates its full prefix, so a
-conversation of n turns with p probes costs O(p·n) kernel work (plus the
-O(min(n,64)²) zones grid per probe) — quadratic in n only when probing
-EVERY turn. The shipped pipeline defaults to a few probes per conversation
-(``run_pipeline --probes-per-conv``, last-N turns), which keeps the work
-linear. Dense probing is bounded in practice by the numpy kernels'
-throughput — ``bench.py`` reports a ``feature_vectors_dense_sec``
-datapoint (probe = every turn) alongside the sparse default so regressions
-in the dense regime are visible. If your workload probes every turn at
-mega-conversation lengths, precompute prefix-cumulative state instead
-(the zones/contour families are cumsum-expressible; the extremes/slopes
-families are not — they would need a sliding-window reformulation).
+Stage sizing: rows are hash-partitioned into buckets of whole
+conversations, one pandas call per bucket (``point_in_time_features``).
+The bucket count follows the state side's size as the optimizer estimates
+it, never below the cluster's cores.
+
+Probe-density cost: the stage runs the prefix-cumulative kernel
+(``compute_probe_features_dense``). It builds each conversation's state
+once and evaluates most families per probe in O(1) or in small batches;
+median width still scans each distinct prefix, so probing every turn of an
+n-turn conversation costs O(n²) in that family alone.
+``compute_probe_features`` is the per-prefix reference it is tested
+against, bit for bit.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -61,6 +62,12 @@ NUMERIC_FEATURES = [
     "uc_max_slopes_left_avg", "uc_max_slopes_right_avg",
     "uc_min_slopes_left_avg", "uc_min_slopes_right_avg",
     "slantness_max_angle", "slantness_avg_angle", "slantness_stdev_angle",
+]
+
+# the turn_state columns the feature kernel reads
+STATE_COLS = [
+    "conv_id", "turn_idx", "ts", "n_chars", "n_tokens",
+    "session_id", "prev_role", "last_tool", "role_transitions",
 ]
 
 
@@ -116,11 +123,12 @@ def compute_probe_features(
     extremes_window: int = K.EXTREMES_WINDOW,
     slope_distance: int = K.SLOPE_DISTANCE,
 ) -> pd.DataFrame:
-    """Numeric+state features for one conversation's probes (pandas batch).
+    """Numeric+state features for one conversation's probes (pandas batch),
+    every family evaluated from scratch on each probe's prefix.
 
-    Shared by the Spark cogroup UDF and the pandas oracle pipeline — the
-    distributed machinery around it (grouping, pruning, ordering, Arrow) is
-    what the Spark-vs-oracle tests actually exercise.
+    The per-prefix reference: ``point_in_time_features`` runs
+    :func:`compute_probe_features_dense`, which the tests and ``perfbench``
+    check against this function bit for bit.
     """
     cols = (
         ["conv_id", "ts", "session_id", "turn_count"]
@@ -551,13 +559,34 @@ class _DenseSeries:
         ]
 
 
+# Target optimizer-estimated state bytes per feature bucket. A checkpointed
+# (parquet) state estimates at its compressed file size, ~12 bytes per turn
+# on the benchmark's state, so a 10^7-turn run_pipeline state plans ~115
+# buckets of ~90k turns each.
+BUCKET_BYTES = 1 << 20
+# The most buckets the stage plans; unknown sizes (Long.MaxValue) get this.
+MAX_BUCKETS = 256
+
+
+def bucket_count(state: DataFrame) -> int:
+    """Feature buckets for ``state`` (pruned to ``STATE_COLS``): one per
+    ``BUCKET_BYTES`` of its optimizer size estimate, clamped to
+    [cores, ``MAX_BUCKETS``].
+
+    The estimate (``stats().sizeInBytes``) comes from the optimized plan
+    and runs no Spark job.
+    """
+    size = state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cores = state.sparkSession.sparkContext.defaultParallelism
+    return max(cores, min(-(-int(size) // BUCKET_BYTES), MAX_BUCKETS))
+
+
 def point_in_time_features(
     transcripts: DataFrame,
     probes: DataFrame,
     gap_seconds: int = 1800,
     extremes_window: int = K.EXTREMES_WINDOW,
     slope_distance: int = K.SLOPE_DISTANCE,
-    num_buckets: int = 256,
     state: DataFrame | None = None,
     dense_probes: bool = False,
 ) -> DataFrame:
@@ -570,20 +599,18 @@ def point_in_time_features(
     training-label column, excluded from point-in-time vectors
     (FIXTURES.md §3).
 
+    ``dense_probes`` is accepted and ignored: the stage always runs
+    :func:`compute_probe_features_dense`.
+
     Physical shape: state rows and probe rows are unioned with a tag and
-    grouped by ``pmod(hash(conv_id), num_buckets)`` — ONE Arrow batch and
-    ONE pandas kernel call per bucket of ~conversations/num_buckets convs,
-    instead of one per conversation. Per-group Arrow/pandas overhead
-    (~ms) dominates wall time when conversations are small; bucketing
-    amortizes it while hash-balancing skew. The per-conversation math is
-    unchanged (``compute_probe_features``, shared with the oracle).
+    hash-partitioned on ``conv_id`` into ``bucket_count(state)``
+    partitions. Each partition is ONE Arrow stream and ONE pandas call over
+    its conversations, not one per conversation: per-call Arrow/pandas
+    overhead (~ms) dominates when conversations are small.
     """
     if state is None:
         state = turn_state(transcripts, gap_seconds)
-    state = state.select(
-        "conv_id", "turn_idx", "ts", "n_chars", "n_tokens",
-        "session_id", "prev_role", "last_tool", "role_transitions",
-    )
+    state = state.select(*STATE_COLS)
     probes_d = probes.select("conv_id", "ts").distinct()
     schema = _feature_schema(probes_d.schema["ts"].dataType)
 
@@ -591,40 +618,30 @@ def point_in_time_features(
         probes_d.withColumn("__tag", F.lit(1)), allowMissingColumns=True
     )
 
-    state_cols = [
-        "conv_id", "turn_idx", "ts", "n_chars", "n_tokens",
-        "session_id", "prev_role", "last_tool", "role_transitions",
-    ]
-
-    # row-equal kernels: the per-prefix baseline, or the prefix-cumulative
-    # dense formulation when the caller declares a high probe density
-    kernel_fn = compute_probe_features_dense if dense_probes else compute_probe_features
-
-    def bucket_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def bucket_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True)
         outs = []
         for _conv, g in pdf.groupby("conv_id", sort=False):
             probes_pdf = g.loc[g["__tag"] == 1, ["conv_id", "ts"]]
             if not len(probes_pdf):
                 continue
-            state_pdf = g.loc[g["__tag"] == 0, state_cols]
+            state_pdf = g.loc[g["__tag"] == 0, STATE_COLS]
             outs.append(
-                kernel_fn(
+                compute_probe_features_dense(
                     state_pdf, probes_pdf, extremes_window, slope_distance
                 )
             )
-        if not outs:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        return pd.concat(outs, ignore_index=True)
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
 
     # EXPLICIT repartition, not a bare groupBy exchange: AQE sizes shuffle
     # partitions by BYTES and would coalesce this small-but-CPU-heavy stage
     # to 1-2 tasks (the kernel is ~1 ms/probe of numpy, not bytes). A fixed
     # repartition count is exempt from AQE coalescing, keeping every core's
-    # Python worker busy.
-    bucket = F.pmod(F.hash("conv_id"), F.lit(num_buckets))
-    return (
-        u.withColumn("__bucket", bucket)
-        .repartition(num_buckets, "__bucket")
-        .groupBy("__bucket")
-        .applyInPandas(bucket_kernel, schema=schema)
+    # Python worker busy. A conversation's rows all hash to one partition.
+    return u.repartition(bucket_count(state), "conv_id").mapInPandas(
+        bucket_kernel, schema=schema
     )

@@ -24,10 +24,13 @@ Stages (each checkpointed + manifested):
   3. features    — point-in-time vectors at the probes
   4. store       — snapshot append into the parquet/Iceberg feature store
 
-Re-running with the same --work and unchanged input fingerprints skips
-completed stages (their outputs are re-read from the checkpoint parquet);
-the final JSON line reports which stages resumed vs recomputed plus
-per-stage wall/rows from the manifest.
+Each stage is keyed on a chained hash of the input fingerprint, its own
+parameters and its upstream stages' keys (``stage_key``). Re-running with
+the same --work skips a completed stage only when its key is unchanged
+(its output is re-read from the checkpoint parquet): a new --gap-seconds
+recomputes turn_state, features and store, a new --probes-per-conv
+recomputes probes, features and store. The final JSON line reports which
+stages resumed vs recomputed plus per-stage wall/rows from the manifest.
 """
 
 from __future__ import annotations
@@ -57,6 +60,12 @@ def input_fingerprint(path: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
+def stage_key(name: str, *parts) -> str:
+    """Resume key of stage ``name``: a hash of its parameters and the keys
+    (or input fingerprint) it reads, so any upstream change reaches it."""
+    return hashlib.md5("|".join(map(str, (name, *parts))).encode()).hexdigest()
+
+
 def main(argv: list[str] | None = None) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="transcripts parquet path")
@@ -78,11 +87,17 @@ def main(argv: list[str] | None = None) -> dict:
     spark = get_spark("fex-pipeline", parallelism=args.cpus or None)
     ckpt = CheckpointedRunner(spark, os.path.join(args.work, "ckpt"), args.run_id)
     fp = input_fingerprint(args.input)
+    keys = {
+        "turn_state": stage_key("turn_state", fp, args.gap_seconds),
+        "probes": stage_key("probes", fp, args.probes_per_conv),
+    }
+    keys["features"] = stage_key("features", keys["turn_state"], keys["probes"])
+    keys["store"] = stage_key("store", keys["features"])
 
     state = ckpt.stage(
         "turn_state",
         lambda: turn_state(spark.read.parquet(args.input), args.gap_seconds),
-        fingerprint=fp,
+        fingerprint=keys["turn_state"],
     )
 
     def probes_fn():
@@ -95,22 +110,25 @@ def main(argv: list[str] | None = None) -> dict:
             .distinct()
         )
 
-    probes = ckpt.stage("probes", probes_fn, fingerprint=fp)
+    probes = ckpt.stage("probes", probes_fn, fingerprint=keys["probes"])
 
     features = ckpt.stage(
         "features",
         lambda: point_in_time_features(
             None, probes, args.gap_seconds, state=state
         ),
-        fingerprint=fp,
+        fingerprint=keys["features"],
     )
 
     store = FeatureStore(
         spark, os.path.join(args.work, "feature_store"), key_cols=["conv_id", "ts"]
     )
     store_manifest = ckpt.read_manifest("store")
-    store_tag = f"{args.run_id}:{fp}:store"
-    if store_manifest is not None and store_manifest.get("input_fingerprint") == fp:
+    store_tag = f"{args.run_id}:{keys['store']}:store"
+    if (
+        store_manifest is not None
+        and store_manifest.get("input_fingerprint") == keys["store"]
+    ):
         ckpt.resumed.append("store")
         version = store_manifest.get("store_version", store.current_version())
     else:
@@ -126,7 +144,7 @@ def main(argv: list[str] | None = None) -> dict:
             version = store.append(features, tag=store_tag)
         n = store.read(version=version).count()
         ckpt.record(
-            "store", fp, n, int((_t.perf_counter() - t0) * 1000),
+            "store", keys["store"], n, int((_t.perf_counter() - t0) * 1000),
             extra={"store_version": version},
             resumed=adopted,
         )

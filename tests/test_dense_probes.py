@@ -15,12 +15,16 @@ import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as hst
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from featureextraction_spark.plans.feature_pipeline import (
     NUMERIC_FEATURES,
+    STATE_COLS,
     compute_probe_features,
     compute_probe_features_dense,
     point_in_time_features,
+    turn_state,
 )
 
 _BASE_TS = np.datetime64("2025-01-01T00:00:00", "ns")
@@ -149,13 +153,43 @@ def test_dense_equals_per_prefix_property(vals, probe_mask):
     _roundtrip(state, probes)
 
 
-def test_point_in_time_dense_flag_matches_default(spark, transcripts):
-    """End-to-end Spark twin: dense_probes=True must reproduce the default
-    path exactly (same rows, same bits) when probing every turn."""
-    probes = transcripts.select("conv_id", "ts").distinct()
-    base = point_in_time_features(transcripts, probes).toPandas()
-    dense = point_in_time_features(transcripts, probes, dense_probes=True).toPandas()
-    _assert_bit_equal(dense, base)
+def _last_turns(transcripts, n: int):
+    w = Window.partitionBy("conv_id").orderBy(F.desc("ts"), F.desc("turn_idx"))
+    return (
+        transcripts.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
+        .select("conv_id", "ts")
+    )
+
+
+@pytest.mark.parametrize("probe_set", ["last_3_turns", "every_turn"])
+def test_point_in_time_matches_per_prefix_reference(spark, transcripts, probe_set):
+    """End-to-end Spark twin: the bucketed Arrow stage (dense kernel) must
+    reproduce the per-prefix kernel run in-process per conversation on the
+    same turn state — same rows, same bits — on the adversarial fixture
+    (mega-conversations, ts ties, null tools)."""
+    if probe_set == "every_turn":
+        probes = transcripts.select("conv_id", "ts")
+    else:
+        probes = _last_turns(transcripts, 3)
+    got = point_in_time_features(transcripts, probes).toPandas()
+
+    state = turn_state(transcripts).select(*STATE_COLS).toPandas()
+    probes_pdf = probes.distinct().toPandas()
+    states = dict(tuple(state.groupby("conv_id", sort=False)))
+    ref = pd.concat(
+        [
+            compute_probe_features(states[conv_id], conv_probes)
+            for conv_id, conv_probes in probes_pdf.groupby("conv_id", sort=False)
+        ],
+        ignore_index=True,
+    )
+    key = ["conv_id", "ts"]
+    assert (
+        got[key].sort_values(key).reset_index(drop=True)
+        .equals(ref[key].sort_values(key).reset_index(drop=True))
+    )
+    _assert_bit_equal(got, ref)
 
 
 def test_dense_math_sanity():

@@ -1,6 +1,7 @@
 """Full point-in-time pipeline: Spark engine vs independent pandas oracle
 (naive reference kernels) — the BASELINE.json allclose correctness gate —
-plus the zero-temporal-leakage property on the Spark output itself."""
+plus the zero-temporal-leakage property on the Spark output itself, and
+the feature stage's bucket-count derivation."""
 
 from __future__ import annotations
 
@@ -10,8 +11,13 @@ from pyspark.sql import functions as F
 
 from featureextraction_spark.oracle.feature_oracle import point_in_time_features_oracle
 from featureextraction_spark.plans.feature_pipeline import (
+    BUCKET_BYTES,
+    MAX_BUCKETS,
     NUMERIC_FEATURES,
+    STATE_COLS,
+    bucket_count,
     point_in_time_features,
+    turn_state,
 )
 
 
@@ -86,3 +92,24 @@ def test_pipeline_probe_before_first_turn(spark, transcripts, probes):
     assert len(pre) > 0
     assert pre["session_id"].isna().all()
     assert pre[NUMERIC_FEATURES].isna().all().all()
+
+
+def test_bucket_count_small_parquet_state_gets_cores(spark, transcripts, tmp_path):
+    path = str(tmp_path / "state.parquet")
+    turn_state(transcripts).write.parquet(path)
+    state = spark.read.parquet(path).select(*STATE_COLS)
+    assert bucket_count(state) == spark.sparkContext.defaultParallelism
+
+
+def test_bucket_count_unknown_size_gets_max(spark, transcripts):
+    """An RDD-backed frame has no size estimate (Long.MaxValue)."""
+    state = turn_state(transcripts).select(*STATE_COLS)
+    from_rdd = spark.createDataFrame(state.rdd, state.schema)
+    assert bucket_count(from_rdd) == MAX_BUCKETS
+
+
+def test_bucket_count_grows_past_cores_with_size(spark):
+    cores = spark.sparkContext.defaultParallelism
+    # Range estimates 8 bytes per id row without running a job
+    big = spark.range(BUCKET_BYTES * cores)
+    assert cores < bucket_count(big) <= MAX_BUCKETS

@@ -7,7 +7,9 @@ are the ones you'd want on a 1000-executor cluster:
 - column pruning reaches the scan (`text` never deserialized when unused);
 - filters are pushed into the parquet scan;
 - dimension joins broadcast (no shuffle of the fact side);
-- the as-of join introduces no per-row Python (no BatchEvalPython).
+- the as-of join introduces no per-row Python (no BatchEvalPython);
+- the feature UDF reads one shuffle of the derived bucket count, which AQE
+  does not coalesce.
 """
 
 from __future__ import annotations
@@ -1052,3 +1054,26 @@ def test_canonical_pick_rank1_via_group_limit(spark):
     plan = plan_of(canonical_pick(docs, clusters))
     assert "WindowGroupLimit" in plan, plan
     assert "BatchEvalPython" not in plan
+
+
+def test_feature_stage_one_uncoalesced_exchange(spark, tr_parquet):
+    """The feature UDF reads ONE shuffle, hash-partitioned on conv_id to the
+    derived bucket count; AQE has not coalesced it (no AQEShuffleRead)."""
+    from featureextraction_spark.plans.feature_pipeline import (
+        STATE_COLS,
+        bucket_count,
+        point_in_time_features,
+        turn_state,
+    )
+
+    n = bucket_count(turn_state(tr_parquet).select(*STATE_COLS))
+    out = point_in_time_features(tr_parquet, tr_parquet.select("conv_id", "ts"))
+    out.collect()  # executes this DataFrame's own plan to its final form
+    final = plan_of(out).split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    udf_input = final[final.index("MapInPandas"):]
+    udf_input = udf_input[: udf_input.index("Exchange ") + 200]
+    assert "AQEShuffleRead" not in udf_input, final
+    assert re.search(
+        rf"Exchange hashpartitioning\(conv_id#\d+, {n}\), REPARTITION_BY_NUM", udf_input
+    ), final
+    assert final.count("REPARTITION_BY_NUM") == 1, final

@@ -2,7 +2,8 @@
 
 Asserts: full run lands features in the store; an identical re-run resumes
 every stage (no recompute, no double-append); changing the input
-fingerprint forces recompute."""
+fingerprint forces recompute; changing a stage parameter recomputes that
+stage and everything downstream of it."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
@@ -84,3 +86,41 @@ def test_crash_between_append_and_manifest_is_idempotent(spark, input_path, tmp_
     assert second["store_version"] == first["store_version"]
     assert second["feature_rows"] == first["feature_rows"]
     assert "store" in second["resumed"] and "store" not in second["recomputed"]
+
+
+def test_changed_params_recompute_affected_stages(spark, input_path, tmp_path):
+    """A rerun on the same --work with a new --probes-per-conv or
+    --gap-seconds must not resume the first run's rows: each stage is keyed
+    on its own parameters and its upstream stages."""
+    import run_pipeline
+
+    from featureextraction_spark.plans.feature_pipeline import turn_state
+
+    work = str(tmp_path / "work4")
+    base = ["--input", input_path, "--work", work, "--cpus", "4"]
+    n_convs = spark.read.parquet(input_path).select("conv_id").distinct().count()
+
+    def features_ckpt():
+        return spark.read.parquet(os.path.join(work, "ckpt", "run1", "features", "data"))
+
+    first = run_pipeline.main(base + ["--probes-per-conv", "2"])
+    assert features_ckpt().count() > n_convs
+
+    fewer = run_pipeline.main(base + ["--probes-per-conv", "1"])
+    assert fewer["resumed"] == ["turn_state"]
+    assert fewer["recomputed"] == ["features", "probes", "store"]
+    assert features_ckpt().count() == n_convs
+    assert fewer["store_version"] == first["store_version"] + 1
+
+    regap = run_pipeline.main(base + ["--probes-per-conv", "1", "--gap-seconds", "60"])
+    assert regap["resumed"] == ["probes"]
+    assert regap["recomputed"] == ["features", "store", "turn_state"]
+    expected = (
+        turn_state(spark.read.parquet(input_path), gap_seconds=60)
+        .join(features_ckpt().select("conv_id", "ts"), ["conv_id", "ts"])
+        .groupBy("conv_id", "ts")
+        .agg(F.max("session_id").alias("session_id"))
+    )
+    got = features_ckpt().select("conv_id", "ts", "session_id")
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
