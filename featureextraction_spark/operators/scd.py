@@ -121,8 +121,7 @@ def scd2_lookup(
     as a join residual — one key exchange each side, no range explode;
     per-entity version chains are short (a dimension, not a log), so the
     residual scan is bounded. Probing a mega-entity's long chain at 100×
-    → bucket both sides on ``by`` (``sources.bucketed``) for a
-    zero-exchange sort-merge.
+    → bucket both sides on ``by`` for a zero-exchange sort-merge.
     """
     # rename the dim's key: probes and dim often share lineage (both cut
     # from one log), and same-name equality on a shared source resolves

@@ -14,8 +14,7 @@ number of sources with zero temporal leakage:
 Each source contributes prefix-namespaced columns; probes with no
 eligible row keep NULLs (the as-of contract). Every stage keys on the
 same entity column, so at scale the chain is one hash exchange per
-source over entity-partitioned data — bucketed tables
-(``sources.bucketed``) drop even those.
+source over entity-partitioned data.
 
 Reference analog: the reference's per-image metadata lookup + derived
 state (``src/preparation/models.py:21-24``) is the single-source,

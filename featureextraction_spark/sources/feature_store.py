@@ -185,9 +185,16 @@ class FeatureStore:
         snaps = self.snapshots()
         if not snaps:
             raise FileNotFoundError(f"empty feature store at {self.path}")
-        snap = snaps[-1] if version is None else next(
-            s for s in snaps if s["version"] == version
-        )
+        if version is None:
+            snap = snaps[-1]
+        else:
+            snap = next((s for s in snaps if s["version"] == version), None)
+            if snap is None:
+                live = [s["version"] for s in snaps]
+                raise ValueError(
+                    f"feature store at {self.path} has no version {version}; "
+                    f"live versions: {live}"
+                )
         paths = [os.path.join(self.path, "data", g) for g in snap["files"]]
         return self.spark.read.parquet(*paths).select(*snap["schema"])
 

@@ -48,15 +48,23 @@ from pyspark.sql import functions as F
 
 
 def input_fingerprint(path: str) -> str:
-    """Deterministic fingerprint of the input: file names + sizes."""
-    parts = []
+    """Deterministic fingerprint of the input: the relative path, size and
+    mtime of every data file, walked recursively so a Hive-partitioned
+    directory (``col=val/part-*.parquet``) is covered. Names starting with
+    ``_`` or ``.`` (``_SUCCESS``, ``.crc``, ``_temporary``) are skipped, as
+    Spark's reader skips them."""
     if os.path.isdir(path):
-        for f in sorted(os.listdir(path)):
-            fp = os.path.join(path, f)
-            if f.endswith(".parquet") or f == "_SUCCESS":
-                parts.append(f"{f}:{os.path.getsize(fp)}")
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            files += [os.path.join(root, n) for n in names if not n.startswith(("_", "."))]
     else:
-        parts.append(f"{os.path.basename(path)}:{os.path.getsize(path)}")
+        files = [path]
+    parts = []
+    for fp in sorted(files):
+        st = os.stat(fp)
+        rel = os.path.relpath(fp, path) if fp != path else os.path.basename(fp)
+        parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 

@@ -389,8 +389,8 @@ def main() -> None:
         # north-rule pipeline's evidence
         return
     # write the fresh run to *_RUN.* — the curated BENCH_SCALING.{json,md}
-    # carry the hand-merged multi-run history and floors (the BENCH_LOCAL
-    # merge-not-overwrite policy); a raw run must never clobber them
+    # carry the hand-merged multi-run history and floors
+    # (merge-not-overwrite); a raw run must never clobber them
     with open(os.path.join(REPO, "BENCH_SCALING_RUN.json"), "w") as f:
         json.dump(summary, f)
 

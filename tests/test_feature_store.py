@@ -118,6 +118,17 @@ def test_expire_snapshots_keeps_latest_readable(spark, store):
     assert len(out) == 2 and "f3" in out.columns
 
 
+def test_read_unknown_version_names_live_versions(spark, store):
+    store.append(_batch(spark, [("a", T0, 1.0)]))
+    store.append(_batch(spark, [("b", T1, 2.0)]))
+    store.expire_snapshots(keep_last=1)
+    with pytest.raises(ValueError, match=r"no version 0; live versions: \[1\]"):
+        store.read(version=0)
+    with pytest.raises(ValueError, match="no version 7"):
+        store.read(version=7)
+    assert store.read(version=1).count() == 2
+
+
 def test_iceberg_gated_off_in_this_container(spark):
     assert not iceberg_available(spark)
     with pytest.raises(RuntimeError, match="Iceberg"):

@@ -1,0 +1,90 @@
+"""Every ``featureextraction_spark`` import in the package, the scripts and
+the driver entry resolves — including imports inside functions, which
+otherwise fail only when someone calls them. Pure AST walk, no Spark."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "featureextraction_spark"
+
+
+def _sources() -> list[str]:
+    out = [os.path.join(ROOT, "__spark_entry__.py")]
+    for top in (PKG, "scripts"):
+        for d, _, names in os.walk(os.path.join(ROOT, top)):
+            out += [os.path.join(d, n) for n in names if n.endswith(".py")]
+    return sorted(out)
+
+
+def _module_file(mod: str) -> str | None:
+    base = os.path.join(ROOT, *mod.split("."))
+    for cand in (os.path.join(base, "__init__.py"), base + ".py"):
+        if os.path.isfile(cand):
+            return cand
+    return None
+
+
+def _module_of(path: str) -> str:
+    rel = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
+    return rel[: -len(".__init__")] if rel.endswith(".__init__") else rel
+
+
+def _top_level_names(path: str) -> set[str]:
+    names: set[str] = set()
+    todo = list(ast.parse(open(path).read()).body)
+    while todo:
+        n = todo.pop()
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(n.name)
+        elif isinstance(n, (ast.Assign, ast.AnnAssign)):
+            targets = n.targets if isinstance(n, ast.Assign) else [n.target]
+            names |= {x.id for t in targets for x in ast.walk(t) if isinstance(x, ast.Name)}
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            names |= {(a.asname or a.name).split(".")[0] for a in n.names}
+        elif isinstance(n, (ast.If, ast.Try)):
+            todo += n.body + n.orelse + getattr(n, "finalbody", [])
+            todo += [s for h in getattr(n, "handlers", []) for s in h.body]
+    return names
+
+
+def _package_imports(path: str):
+    """(line, module, name-or-None) for every package import in ``path``."""
+    is_init = path.endswith("__init__.py")
+    here = _module_of(path).split(".")
+    for n in ast.walk(ast.parse(open(path).read())):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                if a.name.split(".")[0] == PKG:
+                    yield n.lineno, a.name, None
+        elif isinstance(n, ast.ImportFrom):
+            mod = n.module or ""
+            if n.level:
+                pkg = here if is_init else here[:-1]
+                pkg = pkg[: len(pkg) - (n.level - 1)]
+                mod = ".".join(pkg + ([mod] if mod else []))
+            if mod.split(".")[0] == PKG:
+                for a in n.names:
+                    yield n.lineno, mod, a.name
+
+
+def test_package_imports_resolve():
+    missing = []
+    for path in _sources():
+        rel = os.path.relpath(path, ROOT)
+        for line, mod, name in _package_imports(path):
+            f = _module_file(mod)
+            if f is None:
+                missing.append(f"{rel}:{line}: no module {mod}")
+            elif name is not None and name != "*" and _module_file(f"{mod}.{name}") is None:
+                if name not in _top_level_names(f):
+                    missing.append(f"{rel}:{line}: {mod} has no {name}")
+    assert not missing, "dangling imports:\n" + "\n".join(missing)
+
+
+def test_oracles_only_for_registered_queries():
+    import __spark_entry__ as entry
+
+    assert set(entry.oracle_sql()) <= set(entry.queries())

@@ -2,8 +2,9 @@
 
 Asserts: full run lands features in the store; an identical re-run resumes
 every stage (no recompute, no double-append); changing the input
-fingerprint forces recompute; changing a stage parameter recomputes that
-stage and everything downstream of it."""
+fingerprint forces recompute, also for a Hive-partitioned input directory;
+changing a stage parameter recomputes that stage and everything downstream
+of it."""
 
 from __future__ import annotations
 
@@ -124,3 +125,35 @@ def test_changed_params_recompute_affected_stages(spark, input_path, tmp_path):
     got = features_ckpt().select("conv_id", "ts", "session_id")
     assert got.exceptAll(expected).count() == 0
     assert expected.exceptAll(got).count() == 0
+
+
+def test_rewritten_partitioned_input_recomputes(spark, tmp_path):
+    """A Hive-partitioned input (``role=.../part-*.parquet``) rewritten with
+    different conversations must not resume: the rerun on the same --work
+    recomputes every stage and returns the new conversations' features."""
+    import run_pipeline
+
+    from featureextraction_spark.datagen import to_spark
+
+    src = str(tmp_path / "partitioned")
+    work = str(tmp_path / "work5")
+    args = ["--input", src, "--work", work, "--probes-per-conv", "1", "--cpus", "4"]
+
+    def write(n_conversations, seed):
+        pdf = make_transcripts(n_conversations=n_conversations, mean_turns=8, seed=seed)
+        to_spark(spark, pdf).write.mode("overwrite").partitionBy("role").parquet(src)
+        return set(pdf["conv_id"])
+
+    write(12, 7)
+    first = run_pipeline.main(args)
+    assert first["feature_rows"] == 12
+
+    new_convs = write(5, 11)
+    second = run_pipeline.main(args)
+    assert second["resumed"] == []
+    assert second["recomputed"] == ["features", "probes", "store", "turn_state"]
+    # the store is append-only: a new snapshot adds the 5 new probe rows
+    assert second["store_version"] == first["store_version"] + 1
+    assert second["feature_rows"] == 12 + 5
+    features = spark.read.parquet(os.path.join(work, "ckpt", "run1", "features", "data"))
+    assert {r.conv_id for r in features.select("conv_id").collect()} == new_convs
