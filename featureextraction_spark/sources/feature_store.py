@@ -35,6 +35,7 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _LOG = "_feature_store_log.json"
 
@@ -68,8 +69,12 @@ class FeatureStore:
         <path>/data/<uuid>/part-*.parquet     immutable data-file groups
         <path>/_feature_store_log.json        snapshot log (atomic rename)
 
-    Each snapshot is ``{"version", "op", "files": [dirs], "schema"}``; reads
-    union the referenced dirs. ``version`` is monotonically increasing.
+    Each snapshot is ``{"version", "op", "files": [dirs], "schema",
+    "struct"}``: ``schema`` lists the column names, ``struct`` is the Spark
+    struct as JSON (Iceberg keeps the table schema in metadata the same way).
+    Reads union the referenced dirs with that struct, so they infer nothing
+    from the files; a snapshot without one (an older log) is read by
+    inference. ``version`` is monotonically increasing.
     """
 
     def __init__(self, spark: SparkSession, path: str, key_cols: list[str]):
@@ -94,11 +99,18 @@ class FeatureStore:
         return snaps[-1]["version"] if snaps else None
 
     def _commit(
-        self, op: str, files: list[str], schema: list[str], tag: str | None = None
+        self,
+        op: str,
+        files: list[str],
+        schema: list[str],
+        struct: dict | None,
+        tag: str | None = None,
     ) -> int:
         snaps = self.snapshots()
         version = (snaps[-1]["version"] + 1) if snaps else 0
         snap = {"version": version, "op": op, "files": files, "schema": schema}
+        if struct is not None:
+            snap["struct"] = struct
         if tag is not None:
             snap["tag"] = tag
         snaps.append(snap)
@@ -135,20 +147,28 @@ class FeatureStore:
         reference appends headerless CSV rows positionally,
         ``writer.py:32-34`` — a silent-corruption hazard we do not copy).
         ``tag`` stamps the snapshot for idempotent-restart lookup
-        (``find_version_by_tag``).
+        (``find_version_by_tag``). A column whose type differs from the
+        table's is rejected before anything is written.
         """
         snaps = self.snapshots()
         if snaps:
             schema = snaps[-1]["schema"]
+            struct = snaps[-1].get("struct")
             missing = [c for c in schema if c not in df.columns]
             if missing:
                 raise ValueError(f"append missing columns: {missing}")
             df = df.select(*schema)  # name-aligned, order-normalized
+            if struct is not None:
+                table = {f.name: f.dataType.simpleString() for f in StructType.fromJson(struct)}
+                wrong = [f"{c}: {t} (table has {table[c]})" for c, t in df.dtypes if t != table[c]]
+                if wrong:
+                    raise ValueError(f"append column types differ from the table: {wrong}")
         else:
             schema = df.columns
+            struct = df.schema.jsonValue()
         group = self._write_group(df)
         prev_files = snaps[-1]["files"] if snaps else []
-        return self._commit("append", prev_files + [group], schema, tag=tag)
+        return self._commit("append", prev_files + [group], schema, struct, tag=tag)
 
     def merge_columns(
         self,
@@ -178,7 +198,9 @@ class FeatureStore:
             raise ValueError("merge_columns: right side has duplicate keys")
         merged = current.join(right, on=self.key_cols, how="left")
         group = self._write_group(merged)
-        return self._commit("merge_columns", [group], schema + list(new_cols), tag=tag)
+        return self._commit(
+            "merge_columns", [group], schema + list(new_cols), merged.schema.jsonValue(), tag=tag
+        )
 
     def read(self, version: int | None = None) -> DataFrame:
         """Read the table at ``version`` (default: latest) — time travel."""
@@ -196,7 +218,10 @@ class FeatureStore:
                     f"live versions: {live}"
                 )
         paths = [os.path.join(self.path, "data", g) for g in snap["files"]]
-        return self.spark.read.parquet(*paths).select(*snap["schema"])
+        reader = self.spark.read
+        if "struct" in snap:
+            reader = reader.schema(StructType.fromJson(snap["struct"]))
+        return reader.parquet(*paths).select(*snap["schema"])
 
     def expire_snapshots(self, keep_last: int = 1) -> int:
         """Drop unreferenced file groups (Iceberg ``expire_snapshots``)."""

@@ -6,13 +6,21 @@ protects against late failure (``src/preparation/writer.py:114-128``) —
 formalized here as stage-granular checkpointing:
 
 - every stage writes its output to ``<base>/<run_id>/<stage>/data`` (parquet,
-  partition-atomic: Spark commits via _SUCCESS);
-- a manifest row per partition ``(run_id, stage, partition_id, row_count)``
-  plus stage-level ``(input_fingerprint, wall_ms, total_rows, status)`` is
-  committed AFTER the data — the commit-ordering invariant that makes
-  restart safe: a manifest entry implies readable data;
-- on restart, stages whose manifest entry is ``done`` AND whose
-  input_fingerprint matches are loaded from their checkpoint, not recomputed.
+  partition-atomic: Spark commits via _SUCCESS) in one write, nothing added
+  to its rows;
+- the per-partition lineage ``(partition_id, row_count)`` comes from the
+  committed files' parquet footers, read on the driver: the NNNNN of each
+  ``part-NNNNN-*`` file is the partition that wrote it, and its footer
+  holds its row count (Iceberg keeps record counts in metadata the same
+  way). Reading every footer also proves each committed file is complete;
+- the manifest entry — stage-level ``(input_fingerprint, wall_ms,
+  total_rows, status)``, the partitions and the output's Spark schema — is
+  committed AFTER the data: the commit-ordering invariant that makes
+  restart safe (a manifest entry implies readable data);
+- on restart, stages whose manifest entry is ``done``, whose
+  input_fingerprint matches and which carry a schema are loaded from their
+  checkpoint with that schema, not recomputed. Neither the commit nor the
+  read-back runs a Spark job beyond the write itself.
 
 Spark gives task-level retry within a job but nothing across driver
 restarts; this is the custom subsystem the north rule asks for. Local-FS
@@ -24,17 +32,29 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
+from collections import Counter
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-_PART_COL = "__checkpoint_partition_id"
+_PART_FILE = re.compile(r"part-(\d+)-")
 
 
-class StageSkipped(Exception):
-    """Raised internally when a stage is resumed from checkpoint."""
+def _footer_lineage(data_path: str) -> list[dict]:
+    """Rows per write partition of a committed parquet directory, summed
+    over each ``part-NNNNN-*`` file's footer (a partition writes several
+    files under ``spark.sql.files.maxRecordsPerFile``). Partitions with no
+    rows are left out, so an all-empty output has no partitions."""
+    rows: Counter[int] = Counter()
+    for fn in os.listdir(data_path):
+        m = _PART_FILE.match(fn)
+        if m:
+            rows[int(m.group(1))] += pq.read_metadata(os.path.join(data_path, fn)).num_rows
+    return [{"partition_id": p, "row_count": n} for p, n in sorted(rows.items()) if n]
 
 
 class CheckpointedRunner:
@@ -75,9 +95,39 @@ class CheckpointedRunner:
         rows = []
         mdir = os.path.join(self.base, "manifest")
         for fn in sorted(os.listdir(mdir)):
+            if not fn.endswith(".json"):  # an uncommitted ``.tmp``
+                continue
             with open(os.path.join(mdir, fn)) as f:
                 rows.append(json.load(f))
         return rows
+
+    def _commit(
+        self,
+        name: str,
+        fingerprint: str | None,
+        wall_ms: int,
+        total_rows: int,
+        partitions: list[dict],
+        **extra,
+    ) -> None:
+        """Commit stage ``name``'s manifest entry: temp file + atomic rename,
+        called only after the stage's data has committed."""
+        entry = {
+            "run_id": self.run_id,
+            "stage": name,
+            "status": "done",
+            "input_fingerprint": fingerprint,
+            "wall_ms": wall_ms,
+            "total_rows": total_rows,
+            "n_partitions": len(partitions),
+            "partitions": partitions,
+            "committed_at_unix": int(time.time()),
+            **extra,
+        }
+        tmp = self._manifest_path(name) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(entry, f, indent=1)
+        os.replace(tmp, self._manifest_path(name))
 
     # -- execution -----------------------------------------------------------
 
@@ -89,54 +139,33 @@ class CheckpointedRunner:
     ) -> DataFrame:
         """Run (or resume) one stage; returns the stage's output DataFrame
         backed by its checkpoint parquet (stable lineage for downstream
-        stages even across restarts)."""
+        stages even across restarts). A manifest without a schema (an older
+        format) counts as not done."""
         manifest = self.read_manifest(name)
         data_path = self._data_path(name)
         if (
             manifest is not None
             and manifest.get("status") == "done"
             and manifest.get("input_fingerprint") == fingerprint
+            and "schema" in manifest
             and os.path.exists(os.path.join(data_path, "_SUCCESS"))
         ):
             self.resumed.append(name)
-            return self.spark.read.parquet(data_path).drop(_PART_COL)
+            schema = StructType.fromJson(manifest["schema"])
+            return self.spark.read.schema(schema).parquet(data_path)
 
         t0 = time.perf_counter()
-        df = df_fn().withColumn(_PART_COL, F.spark_partition_id())
+        df = df_fn()
         df.write.mode("overwrite").parquet(data_path)  # partition-atomic commit
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
-        # per-partition lineage from the committed data (cheap columnar scan)
-        written = self.spark.read.parquet(data_path)
-        counts = (
-            written.groupBy(_PART_COL)
-            .agg(F.count(F.lit(1)).alias("row_count"))
-            .collect()
+        partitions = _footer_lineage(data_path)
+        self._commit(
+            name, fingerprint, wall_ms, sum(p["row_count"] for p in partitions),
+            partitions, schema=df.schema.jsonValue(),
         )
-        partitions = sorted(
-            [{"partition_id": int(r[_PART_COL]), "row_count": int(r["row_count"])} for r in counts],
-            key=lambda d: d["partition_id"],
-        )
-        total = sum(p["row_count"] for p in partitions)
-
-        # manifest committed strictly AFTER data: temp file + atomic rename
-        entry = {
-            "run_id": self.run_id,
-            "stage": name,
-            "status": "done",
-            "input_fingerprint": fingerprint,
-            "wall_ms": wall_ms,
-            "total_rows": total,
-            "n_partitions": len(partitions),
-            "partitions": partitions,
-            "committed_at_unix": int(time.time()),
-        }
-        tmp = self._manifest_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entry, f, indent=1)
-        os.replace(tmp, self._manifest_path(name))
         self.recomputed.append(name)
-        return written.drop(_PART_COL)
+        return self.spark.read.schema(df.schema).parquet(data_path)
 
     def record(
         self,
@@ -152,22 +181,7 @@ class CheckpointedRunner:
         so restarts can skip the side effect too. ``resumed=True`` records
         the manifest without counting the stage as recomputed (healing a
         lost manifest for a side effect that had already committed)."""
-        entry = {
-            "run_id": self.run_id,
-            "stage": name,
-            "status": "done",
-            "input_fingerprint": fingerprint,
-            "wall_ms": wall_ms,
-            "total_rows": total_rows,
-            "n_partitions": 0,
-            "partitions": [],
-            "committed_at_unix": int(time.time()),
-            **(extra or {}),
-        }
-        tmp = self._manifest_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entry, f, indent=1)
-        os.replace(tmp, self._manifest_path(name))
+        self._commit(name, fingerprint, wall_ms, total_rows, [], **(extra or {}))
         (self.resumed if resumed else self.recomputed).append(name)
 
     def metrics(self) -> DataFrame:

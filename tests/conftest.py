@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pandas as pd
 import pytest
 
@@ -56,3 +58,16 @@ def assert_pdf_equal(actual: pd.DataFrame, expected: pd.DataFrame, sort_cols, **
     a = actual.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
     e = expected.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
     pd.testing.assert_frame_equal(a[sorted(a.columns)], e[sorted(e.columns)], **kwargs)
+
+
+def count_spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group in the status store."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)  # the store is fed asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -5,6 +5,8 @@ the reference's writer SHOULD have had (its own TODO, writer.py:47)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +23,7 @@ from featureextraction_spark.sources.feature_store import (
     iceberg_available,
 )
 
-from conftest import assert_pdf_equal
+from conftest import assert_pdf_equal, count_spark_jobs
 
 
 @pytest.fixture()
@@ -127,6 +129,61 @@ def test_read_unknown_version_names_live_versions(spark, store):
     with pytest.raises(ValueError, match="no version 7"):
         store.read(version=7)
     assert store.read(version=1).count() == 2
+
+
+def test_read_schema_same_with_and_without_recorded_struct(spark, store):
+    """Every snapshot records its Spark struct, and a read with it gives the
+    schema a read by inference gives (a log without structs), for every
+    time-travel version, after ``merge_columns`` too."""
+    import json
+
+    store.append(_batch(spark, [("a", T0, 1.0)]))
+    store.append(_batch(spark, [("b", T1, 2.0)]).select("f1", "ts", "conv_id"))
+    store.merge_columns(
+        spark.createDataFrame(
+            pd.DataFrame([("a", T0, 7)], columns=["conv_id", "ts", "n"]),
+            schema="conv_id string, ts timestamp, n int",
+        )
+    )
+    store.append(spark.createDataFrame(
+        pd.DataFrame([("c", T2, 3.0, 4)], columns=["conv_id", "ts", "f1", "n"]),
+        schema="conv_id string, ts timestamp, f1 double, n int",
+    ))
+    snaps = store.snapshots()
+    assert all("struct" in s for s in snaps)
+    with_struct = {s["version"]: store.read(version=s["version"]) for s in snaps}
+    for s in snaps:
+        del s["struct"]
+    with open(store._log_path(), "w") as f:
+        json.dump(snaps, f)
+    for v, df in with_struct.items():
+        inferred = store.read(version=v)
+        assert df.schema == inferred.schema
+        assert sorted(df.collect()) == sorted(inferred.collect())
+    assert [f.name for f in with_struct[3].schema] == ["conv_id", "ts", "f1", "n"]
+    assert dict(with_struct[3].dtypes)["n"] == "int"
+
+
+def test_append_type_mismatch_rejected(spark, store):
+    """An append whose column type differs from the table's is refused
+    before it writes or commits anything."""
+    store.append(_batch(spark, [("a", T0, 1.0)]))
+    bad = spark.createDataFrame([("b", T1.to_pydatetime(), "2.0")],
+                                schema="conv_id string, ts timestamp, f1 string")
+    with pytest.raises(ValueError, match="f1: string .table has double"):
+        store.append(bad)
+    assert len(store.snapshots()) == 1
+    assert len(os.listdir(os.path.join(store.path, "data"))) == 1
+    assert store.read().count() == 1
+
+
+def test_read_runs_no_spark_job(spark, store):
+    """Reading a snapshot infers nothing from its files: building the
+    frame runs no Spark job."""
+    store.append(_batch(spark, [("a", T0, 1.0)]))
+    store.append(_batch(spark, [("b", T1, 2.0)]))
+    assert count_spark_jobs(spark, store.read) == 0
+    assert count_spark_jobs(spark, lambda: store.read(version=0)) == 0
 
 
 def test_iceberg_gated_off_in_this_container(spark):

@@ -3,11 +3,16 @@ stages not recomputed (SURVEY.md §5 'resume test')."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.sessionize import sessionize
 from featureextraction_spark.streaming.manifest import CheckpointedRunner
+
+from conftest import count_spark_jobs
 
 
 @pytest.fixture()
@@ -87,3 +92,93 @@ def test_metrics_dataframe(spark, transcripts, base_dir):
     assert list(m["stage"]) == ["load"]
     assert m["wall_ms"].iloc[0] >= 0
     assert m["total_rows"].iloc[0] == transcripts.count()
+
+
+def _rows_per_part_file(df) -> list[dict]:
+    """Rows per ``part-NNNNN`` file index, read back with Spark."""
+    part = F.regexp_extract(F.input_file_name(), r"part-(\d+)-", 1).cast("int")
+    rows = df.groupBy(part.alias("p")).count().collect()
+    return sorted(({"partition_id": r["p"], "row_count": r["count"]} for r in rows),
+                  key=lambda d: d["partition_id"])
+
+
+@pytest.mark.parametrize(
+    "case, make, max_records",
+    [
+        ("empty_partition", lambda s: s.range(0, 20, 1, 4).filter("id < 3 OR id >= 15"), 0),
+        ("several_files_per_partition", lambda s: s.range(0, 50, 1, 3), 7),
+        ("all_empty", lambda s: s.range(0, 20, 1, 4).filter("id < 0"), 0),
+    ],
+)
+def test_footer_lineage_matches_part_files(spark, base_dir, case, make, max_records):
+    """The manifest's partitions are the rows each write partition committed,
+    summed over its ``part-NNNNN`` files and without empty partitions, as
+    a Spark read-back through ``input_file_name()`` sees them."""
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(max_records))
+    try:
+        r = CheckpointedRunner(spark, base_dir, run_id=case)
+        out = r.stage("s", lambda: make(spark), fingerprint="v1")
+    finally:
+        spark.conf.set(key, old)
+    m = r.read_manifest("s")
+    data = os.path.join(base_dir, case, "s", "data")
+    files = [f for f in os.listdir(data) if f.startswith("part-")]
+    assert m["partitions"] == _rows_per_part_file(spark.read.parquet(data))
+    assert m["total_rows"] == out.count() == make(spark).count()
+    assert m["n_partitions"] == len(m["partitions"])
+    if case == "empty_partition":
+        assert [p["partition_id"] for p in m["partitions"]] == [0, 3]
+    if case == "several_files_per_partition":
+        assert len(files) > len(m["partitions"]) == 3
+    if case == "all_empty":
+        assert m["partitions"] == [] and m["total_rows"] == 0
+
+
+def test_fresh_resumed_and_plain_read_schemas_equal(spark, transcripts, base_dir):
+    """The frame a stage returns has the same schema whether it was just
+    written or resumed, and the same as a plain parquet read of its data —
+    also for columns its input declared non-nullable."""
+    from featureextraction_spark.plans.feature_pipeline import turn_state
+
+    state = turn_state(transcripts, 1800)
+    assert not all(f.nullable for f in state.schema)
+    fresh = CheckpointedRunner(spark, base_dir, run_id="schema").stage(
+        "turn_state", lambda: state, fingerprint="v1"
+    )
+    r = CheckpointedRunner(spark, base_dir, run_id="schema")
+    resumed = r.stage("turn_state", lambda: state, fingerprint="v1")
+    assert r.resumed == ["turn_state"]
+    plain = spark.read.parquet(os.path.join(base_dir, "schema", "turn_state", "data"))
+    assert fresh.schema == resumed.schema == plain.schema
+    assert resumed.exceptAll(plain).count() == 0 and plain.exceptAll(resumed).count() == 0
+
+
+def test_manifest_without_schema_is_recomputed(spark, transcripts, base_dir):
+    """A manifest in the format before schemas were recorded resumes
+    nothing: the stage is recomputed and its manifest gains the schema."""
+    r1 = CheckpointedRunner(spark, base_dir, run_id="old")
+    r1.stage("load", lambda: transcripts, fingerprint="v1")
+    path = os.path.join(base_dir, "old", "manifest", "load.json")
+    with open(path) as f:
+        entry = json.load(f)
+    del entry["schema"]
+    with open(path, "w") as f:
+        json.dump(entry, f)
+    r2 = CheckpointedRunner(spark, base_dir, run_id="old")
+    out = r2.stage("load", lambda: transcripts, fingerprint="v1")
+    assert r2.recomputed == ["load"] and r2.resumed == []
+    assert "schema" in r2.read_manifest("load")
+    assert out.count() == transcripts.count()
+
+
+def test_stage_commit_and_resume_run_no_extra_spark_job(spark, base_dir):
+    """Committing a shuffle-free stage runs exactly its write job; resuming
+    it runs none: lineage comes from footers, the schema from the manifest."""
+    r = CheckpointedRunner(spark, base_dir, run_id="jobs")
+    assert count_spark_jobs(spark, lambda: r.stage("s", lambda: spark.range(100), "v1")) == 1
+    r2 = CheckpointedRunner(spark, base_dir, run_id="jobs")
+    assert count_spark_jobs(spark, lambda: r2.stage("s", lambda: spark.range(100), "v1")) == 0
+    assert r2.resumed == ["s"]
+

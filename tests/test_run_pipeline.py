@@ -4,7 +4,8 @@ Asserts: full run lands features in the store; an identical re-run resumes
 every stage (no recompute, no double-append); changing the input
 fingerprint forces recompute, also for a Hive-partitioned input directory;
 changing a stage parameter recomputes that stage and everything downstream
-of it."""
+of it; a crash between any stage's data commit and its manifest commit
+reruns to the store a clean run leaves."""
 
 from __future__ import annotations
 
@@ -17,6 +18,8 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
 from featureextraction_spark.datagen import make_transcripts  # noqa: E402
+
+from conftest import assert_pdf_equal  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -157,3 +160,64 @@ def test_rewritten_partitioned_input_recomputes(spark, tmp_path):
     assert second["feature_rows"] == 12 + 5
     features = spark.read.parquet(os.path.join(work, "ckpt", "run1", "features", "data"))
     assert {r.conv_id for r in features.select("conv_id").collect()} == new_convs
+
+
+def _store(spark, work):
+    from featureextraction_spark.sources.feature_store import FeatureStore
+
+    return FeatureStore(spark, os.path.join(work, "feature_store"), key_cols=["conv_id", "ts"])
+
+
+@pytest.fixture(scope="module")
+def clean_store(spark, input_path, tmp_path_factory):
+    import run_pipeline
+
+    work = str(tmp_path_factory.mktemp("clean"))
+    run_pipeline.main(
+        ["--input", input_path, "--work", work, "--probes-per-conv", "2", "--cpus", "4"]
+    )
+    return _store(spark, work).read().toPandas()
+
+
+@pytest.mark.parametrize("crashed", ["turn_state", "probes", "features", "store"])
+def test_crash_between_data_and_manifest_commit(spark, input_path, tmp_path, monkeypatch,
+                                                clean_store, crashed):
+    """Kill the job after stage ``crashed`` committed its data (checkpoint
+    parquet, or the store snapshot) and before its manifest's atomic rename.
+    The rerun on the same --work resumes only stages with a manifest and
+    leaves the store as a clean run would."""
+    import run_pipeline
+
+    from featureextraction_spark.streaming import manifest
+    from featureextraction_spark.streaming.manifest import CheckpointedRunner
+
+    work = str(tmp_path / "work")
+    args = ["--input", input_path, "--work", work, "--probes-per-conv", "2", "--cpus", "4"]
+    replace = os.replace
+
+    def crash_once(src, dst):
+        if dst.endswith(os.path.join("manifest", f"{crashed}.json")):
+            monkeypatch.setattr(manifest.os, "replace", replace)
+            raise OSError("simulated crash before the manifest commit")
+        return replace(src, dst)
+
+    monkeypatch.setattr(manifest.os, "replace", crash_once)
+    with pytest.raises(OSError, match="simulated crash"):
+        run_pipeline.main(args)
+    assert os.replace is replace  # the crash fired
+    if crashed == "store":
+        assert len(_store(spark, work).snapshots()) == 1
+    else:
+        assert os.path.exists(os.path.join(work, "ckpt", "run1", crashed, "data", "_SUCCESS"))
+    stages = ["turn_state", "probes", "features", "store"]
+    with_manifest = {m["stage"] for m in CheckpointedRunner(
+        spark, os.path.join(work, "ckpt"), "run1").manifest_rows()}
+    assert with_manifest == set(stages[: stages.index(crashed)])
+
+    rerun = run_pipeline.main(args)
+    adopted = {"store"} if crashed == "store" else set()
+    assert set(rerun["resumed"]) == with_manifest | adopted
+    assert set(rerun["recomputed"]) == set(stages) - with_manifest - adopted
+    store = _store(spark, work)
+    assert rerun["store_version"] == 0 and len(store.snapshots()) == 1
+    assert_pdf_equal(store.read().toPandas(), clean_store, ["conv_id", "ts"])
