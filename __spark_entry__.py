@@ -8716,7 +8716,7 @@ def _training_ops_oracle_sql() -> dict[str, str]:
                          THEN length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0
                               / length(text) ELSE 0 END, 6) AS alpha_ratio,
                    round(CASE WHEN length(text) > 0
-                         THEN length(regexp_replace(text, $$[^.,;:!?'"()\[\]{{}}-]$$, '', 'g')) * 1.0
+                         THEN length(regexp_replace(text, $$[^.,;:!?'"()\\[\\]{{}}-]$$, '', 'g')) * 1.0
                               / length(text) ELSE 0 END, 6) AS punct_ratio,
                    round(CASE WHEN length(regexp_extract_all(text, {_TOKENS_RE})) > 0
                          THEN length(text) * 1.0
@@ -8732,7 +8732,7 @@ def _training_ops_oracle_sql() -> dict[str, str]:
                             THEN length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0
                                  / length(text) ELSE 0 END
                           + (1.0 - least(CASE WHEN length(text) > 0
-                              THEN length(regexp_replace(text, $$[^.,;:!?'"()\[\]{{}}-]$$, '', 'g')) * 1.0
+                              THEN length(regexp_replace(text, $$[^.,;:!?'"()\\[\\]{{}}-]$$, '', 'g')) * 1.0
                                    / length(text) ELSE 0 END * 5.0, 1.0))
                           + least(CASE WHEN length(regexp_extract_all(text, {_TOKENS_RE})) > 0
                               THEN length(regexp_extract_all(lower(text),

@@ -35,3 +35,8 @@ def epoch_seconds(df: DataFrame, col: str) -> Column:
 
 def with_epoch_seconds(df: DataFrame, col: str, out: str) -> DataFrame:
     return df.withColumn(out, epoch_seconds(df, col))
+
+
+def time_bucket(df: DataFrame, col: str, bucket_seconds: int) -> Column:
+    """Contiguous time-bucket id, ``floor(epoch seconds / bucket_seconds)``."""
+    return F.floor(epoch_seconds(df, col) / F.lit(float(bucket_seconds))).cast("long")

@@ -12,12 +12,15 @@ The reference has no as-of join; its closest analogs are the memoized
 
 Three physical strategies, one logical semantics (all tested equal):
 
-- ``asof_join``           — union + last-ignorenulls window. One shuffle on
+- ``asof_join``           — ``forward_fill`` of the data state over the
+                            union of data and probe rows. One shuffle on
                             the entity key; sorted within partitions ⇒
                             physically a sorted merge. Default.
-- ``asof_join_salted``    — the above partitioned by (key, time-bucket) plus
-                            a cross-bucket carry table: no task ever holds a
-                            whole mega-conversation. The north-rule skew path.
+- ``asof_join_salted``    — ``forward_fill_salted`` over the same union:
+                            filled per (key, time-bucket), with the shared
+                            cross-bucket carry table, so no task ever holds
+                            a whole mega-conversation. The north-rule skew
+                            path.
 - ``asof_join_broadcast`` — small data side: broadcast + theta join +
                             ``max_by``. No shuffle of the probe side at all.
 
@@ -30,8 +33,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from featureextraction_spark.operators.backfill import forward_fill, forward_fill_salted
 
 _MATCHED_TS = "__m_ts"
 _MATCHED_TIE = "__m_tie"
@@ -55,6 +60,26 @@ def _unpack(result: DataFrame, probe_cols: Sequence[str], value_cols: Sequence[s
     return result.select(*sel)
 
 
+def _tagged_union(probes: DataFrame, data: DataFrame, on: str, by: str, tie: str,
+                  value_cols: Sequence[str], allow_exact_matches: bool):
+    """Data rows carrying ``__state`` unioned with state-less probe rows.
+
+    ``__tag`` orders data rows BEFORE probes at equal ts when exact matches
+    are allowed (the probe sees them), AFTER when not. Returns the union
+    and the probes' tag.
+    """
+    data_tag, probe_tag = (0, 1) if allow_exact_matches else (1, 0)
+    d = data.select(
+        F.col(by),
+        F.col(on),
+        F.col(tie).cast("long").alias("__tie"),
+        _state_struct(on, tie, value_cols).alias("__state"),
+        F.lit(data_tag).alias("__tag"),
+    )
+    p = probes.withColumn("__tag", F.lit(probe_tag))
+    return d.unionByName(p, allowMissingColumns=True), probe_tag
+
+
 def asof_join(
     probes: DataFrame,
     data: DataFrame,
@@ -75,25 +100,9 @@ def asof_join(
     value_cols = list(value_cols) if value_cols is not None else [
         c for c in data.columns if c not in (by, on, tie)
     ]
-    # tag: data rows order BEFORE probes at equal ts when exact matches are
-    # allowed (probe sees them), AFTER when not.
-    data_tag, probe_tag = (0, 1) if allow_exact_matches else (1, 0)
-    d = data.select(
-        F.col(by),
-        F.col(on),
-        F.col(tie).cast("long").alias("__tie"),
-        _state_struct(on, tie, value_cols).alias("__state"),
-        F.lit(data_tag).alias("__tag"),
-    )
-    p = probes.withColumn("__tag", F.lit(probe_tag))
-    u = d.unionByName(p, allowMissingColumns=True)
-
-    w = (
-        Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), F.col("__tag").asc(), F.col("__tie").asc_nulls_first())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = u.withColumn("__state", F.last("__state", ignorenulls=True).over(w))
+    u, probe_tag = _tagged_union(probes, data, on, by, tie, value_cols, allow_exact_matches)
+    # ascending order puts a NULL tie (every probe row) first
+    filled = forward_fill(u, ["__state"], key=by, order=(on, "__tag", "__tie"), prefix="")
     out_rows = filled.filter(F.col("__tag") == probe_tag)
     return _unpack(out_rows, probes.columns, value_cols, prefix, matched_cols)
 
@@ -109,73 +118,25 @@ def asof_join_salted(
     allow_exact_matches: bool = True,
     matched_cols: bool = True,
     bucket_seconds: int = 86400,
-    broadcast_carry: bool = True,
 ) -> DataFrame:
-    """Skew-safe as-of join: salt both sides by contiguous time bucket.
+    """Skew-safe as-of join: ``forward_fill_salted`` of ``__state`` over
+    the same tagged union as ``asof_join``, ordered by (ts, tag, tie).
 
-    Phase 1 — in-bucket sorted-merge: the ``asof_join`` union/window pattern
-    partitioned by (key, bucket); a mega-conversation spanning B buckets
-    parallelizes B-ways.
-    Phase 2 — cross-bucket carry: per-(key, bucket) final data state
-    (``max_by`` over (ts, tie)), forward-filled across the bucket domain
-    (union of data and probe buckets — tiny table), joined back to probes
-    whose in-bucket match was NULL.
+    A mega-conversation spanning B time buckets fills B-ways; the fill's
+    cross-bucket carry brings each bucket the last data state of the
+    buckets before it.
     """
     value_cols = list(value_cols) if value_cols is not None else [
         c for c in data.columns if c not in (by, on, tie)
     ]
-
-    def bucket(df_):
-        from featureextraction_spark.functions.time import epoch_seconds
-
-        return F.floor(epoch_seconds(df_, on) / F.lit(float(bucket_seconds))).cast("long")
-
-    data_tag, probe_tag = (0, 1) if allow_exact_matches else (1, 0)
-    d = data.select(
-        F.col(by),
-        F.col(on),
-        F.col(tie).cast("long").alias("__tie"),
-        _state_struct(on, tie, value_cols).alias("__state"),
-        F.lit(data_tag).alias("__tag"),
-        bucket(data).alias("__bucket"),
+    u, probe_tag = _tagged_union(probes, data, on, by, tie, value_cols, allow_exact_matches)
+    # a struct sorts field by field, a NULL field first: as (__tag, __tie) do
+    u = u.withColumn("__ord", F.struct("__tag", "__tie"))
+    filled = forward_fill_salted(
+        u, ["__state"], key=by, ts=on, tie="__ord", prefix="", bucket_seconds=bucket_seconds
     )
-    p = probes.withColumn("__tag", F.lit(probe_tag)).withColumn("__bucket", bucket(probes))
-    u = d.unionByName(p, allowMissingColumns=True)
-
-    w = (
-        Window.partitionBy(by, "__bucket")
-        .orderBy(F.col(on).asc(), F.col("__tag").asc(), F.col("__tie").asc_nulls_first())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    in_bucket = u.withColumn("__state", F.last("__state", ignorenulls=True).over(w)).filter(
-        F.col("__tag") == probe_tag
-    )
-
-    # Phase 2: carry table over the union of bucket domains.
-    data_states = d.groupBy(by, "__bucket").agg(
-        F.max_by("__state", F.struct(F.col(on), F.col("__tie"))).alias("__bstate")
-    )
-    domain = (
-        data_states.select(by, "__bucket")
-        .unionByName(p.select(by, "__bucket"))
-        .distinct()
-        .join(data_states, [by, "__bucket"], "left")
-    )
-    wcarry = (
-        Window.partitionBy(by)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = domain.withColumn(
-        "__carry", F.last("__bstate", ignorenulls=True).over(wcarry)
-    ).select(by, "__bucket", "__carry")
-    if broadcast_carry:
-        carry = F.broadcast(carry)
-
-    merged = in_bucket.join(carry, [by, "__bucket"], "left").withColumn(
-        "__state", F.coalesce(F.col("__state"), F.col("__carry"))
-    )
-    return _unpack(merged, probes.columns, value_cols, prefix, matched_cols)
+    out_rows = filled.filter(F.col("__tag") == probe_tag)
+    return _unpack(out_rows, probes.columns, value_cols, prefix, matched_cols)
 
 
 def asof_join_broadcast(

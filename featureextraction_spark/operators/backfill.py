@@ -1,24 +1,26 @@
-"""Rolling backfill / forward-fill (SURVEY.md W12).
+"""Rolling forward-fill (SURVEY.md W12).
 
 Reference analog: the carry-forward state in the clamped-cumsum contour
 walk (``src/preparation/features/contour.py:74-92``) — the engine makes it
 a named operator: ``last(col, ignorenulls=True)`` over an unbounded
-preceding ROWS frame (forward-fill) and the ``first``-over-following dual
-(backward-fill, training-only — reads the future).
+preceding ROWS frame.
 
-A salted variant mirrors ``sessionize_salted``: per-(key, time-bucket)
-fills plus a per-bucket "last known value" carry table, so mega-entities
-never serialize into one task.
+The salted variant fills per (key, time-bucket) and carries each bucket's
+last value into later buckets through a tiny per-(key, bucket) table, so
+mega-entities never serialize into one task. That carry is the skew path
+of all three salted operators: ``asof_join_salted`` is this fill over the
+as-of join's tagged union, and ``sessionize_salted`` shares its
+``prior_buckets`` frame.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from featureextraction_spark.functions.time import with_epoch_seconds
+from featureextraction_spark.functions.time import time_bucket
 
 
 def forward_fill(
@@ -40,26 +42,13 @@ def forward_fill(
     return out
 
 
-def backward_fill(
-    df: DataFrame,
-    cols: Sequence[str],
-    key: str = "conv_id",
-    order: Sequence[str] = ("ts", "turn_idx"),
-    prefix: str = "next_nonnull_",
-) -> DataFrame:
-    """TRAINING-ONLY: earliest non-null value at or after each row.
-
-    Reads ts' > ts — excluded from point-in-time vectors (FIXTURES.md §3).
-    """
-    w = (
+def prior_buckets(key: str) -> WindowSpec:
+    """Frame over a (key, ``__bucket``) table: every bucket before this one."""
+    return (
         Window.partitionBy(key)
-        .orderBy(*order)
-        .rowsBetween(0, Window.unboundedFollowing)
+        .orderBy("__bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    out = df
-    for c in cols:
-        out = out.withColumn(f"{prefix}{c}", F.first(c, ignorenulls=True).over(w))
-    return out
 
 
 def forward_fill_salted(
@@ -70,51 +59,37 @@ def forward_fill_salted(
     tie: str = "turn_idx",
     prefix: str = "last_",
     bucket_seconds: int = 86400,
-    broadcast_bounds: bool = True,
 ) -> DataFrame:
     """Skew-safe forward-fill: in-bucket fill + cross-bucket carry join.
 
     Phase 1: fill within (key, bucket) windows.
-    Phase 2: per-(key, bucket) last non-null value → forward-fill THAT tiny
-    table over buckets → join carried value back; coalesce(in-bucket,
-    carried).
+    Phase 2: per-(key, bucket) filled value of the bucket's last row →
+    last non-null of those over the prior buckets (one tiny table) →
+    broadcast-joined back; coalesce(in-bucket, carried).
     """
-    b = with_epoch_seconds(df, ts, "__ts_sec").withColumn(
-        "__bucket", F.floor(F.col("__ts_sec") / F.lit(float(bucket_seconds))).cast("long")
-    ).drop("__ts_sec")
-
+    filled = df.withColumn("__bucket", time_bucket(df, ts, bucket_seconds))
     wb = (
         Window.partitionBy(key, "__bucket")
         .orderBy(ts, tie)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    filled = b
     for c in cols:
         filled = filled.withColumn(f"__inb_{c}", F.last(c, ignorenulls=True).over(wb))
 
-    # per-bucket final state = value of the last row in the bucket
-    # (max_by over (ts, tie) of the already-in-bucket-filled column)
-    aggs = [
-        F.max_by(f"__inb_{c}", F.struct(F.col(ts), F.col(tie))).alias(f"__state_{c}")
-        for c in cols
-    ]
-    states = filled.groupBy(key, "__bucket").agg(*aggs)
-    # carry state across buckets: value visible to bucket B = last non-null
-    # state among buckets < B
-    wcarry = (
-        Window.partitionBy(key)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    last_row = F.struct(F.col(ts), F.col(tie))
+    states = filled.groupBy(key, "__bucket").agg(
+        *[F.max_by(f"__inb_{c}", last_row).alias(f"__state_{c}") for c in cols]
     )
-    for c in cols:
-        states = states.withColumn(
-            f"__carry_{c}", F.last(f"__state_{c}", ignorenulls=True).over(wcarry)
-        )
-    carry = states.select(key, "__bucket", *[f"__carry_{c}" for c in cols])
-    if broadcast_bounds:
-        carry = F.broadcast(carry)
+    carry = states.select(
+        key,
+        "__bucket",
+        *[
+            F.last(f"__state_{c}", ignorenulls=True).over(prior_buckets(key)).alias(f"__carry_{c}")
+            for c in cols
+        ],
+    )
 
-    out = filled.join(carry, on=[key, "__bucket"], how="left")
+    out = filled.join(F.broadcast(carry), on=[key, "__bucket"], how="left")
     for c in cols:
         out = out.withColumn(
             f"{prefix}{c}", F.coalesce(F.col(f"__inb_{c}"), F.col(f"__carry_{c}"))

@@ -35,14 +35,6 @@ from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.cache import persist_tracked
 
-_POP = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
-
-
-def _popcount(a: np.ndarray) -> np.ndarray:
-    """Vectorized popcount over the last axis of a uint64 array."""
-    return _POP[a.view(np.uint8).reshape(*a.shape[:-1], -1)].sum(axis=-1)
-
-
 def with_global_rank(
     df: DataFrame,
     order_col: str,

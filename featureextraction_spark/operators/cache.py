@@ -32,12 +32,6 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return out
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-persisted frame for a later bulk release."""
-    _PERSISTED.append(df)
-    return df
-
-
 def release_persisted_intermediates() -> int:
     """Unpersist every registered intermediate; returns how many."""
     n = 0

@@ -42,26 +42,6 @@ def merge_feature_columns(
     return base.join(new.select(*keys, *fresh), keys, "left")
 
 
-def all_pairs(
-    df: DataFrame, id_col: str = "id", payload: Sequence[str] = ()
-) -> DataFrame:
-    """Unordered distinct pairs ``(a, b)`` with ``a.id < b.id``.
-
-    Physically a broadcast-nested-loop / cartesian with the ordering
-    predicate — O(n²) by definition. Use only on bounded inputs (the
-    reference runs it over model *outputs*, not raw data); for web-scale
-    near-dup detection use ``operators.dedup`` (LSH) instead, which is the
-    scalable replacement for this pattern.
-    """
-    a = df.select(
-        F.col(id_col).alias("a_id"), *[F.col(c).alias(f"a_{c}") for c in payload]
-    )
-    b = df.select(
-        F.col(id_col).alias("b_id"), *[F.col(c).alias(f"b_{c}") for c in payload]
-    )
-    return a.join(b, F.col("a_id") < F.col("b_id"))
-
-
 def incremental_join_delta(
     left_old: DataFrame,
     left_delta: DataFrame,

@@ -73,16 +73,6 @@ def stable_order(
     return ranged.sortWithinPartitions(*cols)
 
 
-def with_row_number(
-    df: DataFrame,
-    by: str = "conv_id",
-    order: str | Sequence[str] = ("ts", "turn_idx"),
-    name: str = "rn",
-) -> DataFrame:
-    """Deterministic per-entity row number (tie-break via full order key)."""
-    return df.withColumn(name, F.row_number().over(turn_window(by, order)))
-
-
 def running(col: Column, by: str = "conv_id", order: str | Sequence[str] = "turn_idx") -> Column:
     """Running (cumulative) aggregate over the ordered sequence."""
     w = turn_window(by, order).rowsBetween(Window.unboundedPreceding, 0)

@@ -11,9 +11,10 @@ Two implementations:
 - ``sessionize``: one window over ``partitionBy(key)`` — one shuffle, fine
   whenever a single conversation fits a task.
 - ``sessionize_salted``: two-phase for mega-entity skew — per-(key, bucket)
-  partial cumsums plus a tiny per-key bucket-offset window, so no single
-  task ever holds a whole mega-conversation. Identical results by
-  construction (tested).
+  partial cumsums plus one tiny per-(key, bucket) carry table (first ts,
+  last ts, start count) over ``backfill.prior_buckets``, so no single task
+  ever holds a whole mega-conversation. Identical results by construction
+  (tested).
 """
 
 from __future__ import annotations
@@ -21,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from featureextraction_spark.functions.time import epoch_seconds, with_epoch_seconds
+from featureextraction_spark.functions.time import time_bucket, with_epoch_seconds
+from featureextraction_spark.operators.backfill import prior_buckets
 
 DEFAULT_GAP_SECONDS = 1800
 
@@ -57,89 +59,49 @@ def sessionize_salted(
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     out: str = "session_id",
     bucket_seconds: int = 86400,
-    broadcast_bounds: bool = True,
 ) -> DataFrame:
-    """Skew-safe sessionize: salt by contiguous time bucket, merge offsets.
+    """Skew-safe sessionize: salt by contiguous time bucket, carry offsets.
 
-    Phase 1: bucket = floor(epoch/bucket_seconds); cumsum of start flags
-    within (key, bucket). The flag at each bucket's first row needs the
-    previous bucket's last ts — fetched via a per-(key,bucket) boundary
-    aggregate (tiny: one row per bucket) joined back, NOT a full-entity
-    window.
-    Phase 2: per-key running offset over bucket totals (window over the
-    tiny boundary table), added to the in-bucket partial cumsum.
+    Phase 1: within each (key, bucket), flag gap starts on every row but
+    the bucket's first and cumsum them.
+    Phase 2: one tiny (key, bucket) table of first ts, last ts and start
+    count. Over the prior buckets it decides the bucket's first-row flag
+    (against the previous bucket's last ts) and the starts before it; that
+    offset is broadcast-joined back onto the partial cumsum.
 
     Catalyst's skew mitigation covers joins, not windows (SURVEY.md §4) —
     this is the explicit salted-window pattern the north rule requires.
-
-    ``broadcast_bounds``: the boundary/offset tables have one row per
-    (key, bucket). Broadcast when keys×buckets is small relative to driver
-    memory (the common case — only skewed keys need this path); set False
-    to let AQE pick a shuffle join when key cardinality is huge.
     """
+    gap = F.lit(float(gap_seconds))
     b = with_epoch_seconds(df, ts, "__ts_sec").withColumn(
-        "__bucket", F.floor(F.col("__ts_sec") / F.lit(float(bucket_seconds))).cast("long")
+        "__bucket", time_bucket(df, ts, bucket_seconds)
     )
-
-    # Boundary table: one row per (key, bucket) — last ts in bucket.
-    bounds = b.groupBy(key, "__bucket").agg(
-        F.max("__ts_sec").alias("__bucket_max_ts"),
-        F.count(F.lit(1)).alias("__bucket_rows"),
-    )
-    wprev = Window.partitionBy(key).orderBy("__bucket")
-    bounds = bounds.withColumn("__prev_bucket_max_ts", F.lag("__bucket_max_ts").over(wprev))
-
     wb = Window.partitionBy(key, "__bucket").orderBy(ts, tie)
-    prev_ts = F.lag("__ts_sec").over(wb)
-    # first row of a bucket compares against the previous bucket's last ts
-    eff_prev = F.coalesce(prev_ts, F.col("__prev_bucket_max_ts"))
-    flag = F.when(
-        eff_prev.isNull() | ((F.col("__ts_sec") - eff_prev) > F.lit(float(gap_seconds))),
-        F.lit(1),
-    ).otherwise(F.lit(0))
+    partial = b.withColumn(
+        "__start", F.when(F.col("__ts_sec") - F.lag("__ts_sec").over(wb) > gap, 1).otherwise(0)
+    ).withColumn("__partial", F.sum("__start").over(wb.rowsBetween(Window.unboundedPreceding, 0)))
 
-    bsel = bounds.select(key, "__bucket", "__prev_bucket_max_ts")
-    if broadcast_bounds:
-        bsel = F.broadcast(bsel)
-    withflag = b.join(bsel, on=[key, "__bucket"], how="left").withColumn("__new_sess", flag)
-
-    cumb = Window.partitionBy(key, "__bucket").orderBy(ts, tie).rowsBetween(
-        Window.unboundedPreceding, 0
+    bounds = partial.groupBy(key, "__bucket").agg(
+        F.min("__ts_sec").alias("__first"),
+        F.max("__ts_sec").alias("__last"),
+        F.sum("__start").alias("__starts"),
     )
-    partial = withflag.withColumn("__partial", F.sum("__new_sess").over(cumb))
-
-    # Per-(key,bucket) totals → running offset of all PRIOR buckets.
-    totals = partial.groupBy(key, "__bucket").agg(F.sum("__new_sess").alias("__tot"))
-    woff = (
-        Window.partitionBy(key)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    prev_last = F.max("__last").over(prior_buckets(key))
+    carry = bounds.withColumn(
+        "__opens", F.when(prev_last.isNull() | (F.col("__first") - prev_last > gap), 1).otherwise(0)
+    ).select(
+        key,
+        "__bucket",
+        (
+            F.coalesce(F.sum(F.col("__starts") + F.col("__opens")).over(prior_buckets(key)), F.lit(0))
+            + F.col("__opens")
+        ).alias("__offset"),
     )
-    offsets = totals.withColumn("__offset", F.coalesce(F.sum("__tot").over(woff), F.lit(0)))
 
-    osel = offsets.select(key, "__bucket", "__offset")
-    if broadcast_bounds:
-        osel = F.broadcast(osel)
-    merged = partial.join(osel, on=[key, "__bucket"], how="left")
     return (
-        merged.withColumn(out, (F.col("__partial") + F.col("__offset")).cast("long"))
-        .drop("__bucket", "__prev_bucket_max_ts", "__new_sess", "__partial", "__offset", "__ts_sec")
-    )
-
-
-def session_stats(
-    df_with_sessions: DataFrame,
-    key: str = "conv_id",
-    ts: str = "ts",
-    session_col: str = "session_id",
-) -> DataFrame:
-    """Per-session aggregates: turn count, start/end, duration seconds."""
-    sec = epoch_seconds(df_with_sessions, ts)
-    return df_with_sessions.groupBy(key, session_col).agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.min(ts).alias("session_start"),
-        F.max(ts).alias("session_end"),
-        (F.max(sec) - F.min(sec)).alias("duration_sec"),
+        partial.join(F.broadcast(carry), on=[key, "__bucket"], how="left")
+        .withColumn(out, (F.col("__partial") + F.col("__offset")).cast("long"))
+        .drop("__bucket", "__ts_sec", "__start", "__partial", "__offset")
     )
 
 

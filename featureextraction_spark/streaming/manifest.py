@@ -18,7 +18,8 @@ formalized here as stage-granular checkpointing:
   committed AFTER the data: the commit-ordering invariant that makes
   restart safe (a manifest entry implies readable data);
 - on restart, stages whose manifest entry is ``done``, whose
-  input_fingerprint matches and which carry a schema are loaded from their
+  input_fingerprint matches, which carry a schema and whose data files'
+  footers still add up to the recorded partitions are loaded from their
   checkpoint with that schema, not recomputed. Neither the commit nor the
   read-back runs a Spark job beyond the write itself.
 
@@ -140,7 +141,8 @@ class CheckpointedRunner:
         """Run (or resume) one stage; returns the stage's output DataFrame
         backed by its checkpoint parquet (stable lineage for downstream
         stages even across restarts). A manifest without a schema (an older
-        format) counts as not done."""
+        format), or whose partitions the data files' footers no longer add
+        up to (a part file deleted or replaced), counts as not done."""
         manifest = self.read_manifest(name)
         data_path = self._data_path(name)
         if (
@@ -149,6 +151,7 @@ class CheckpointedRunner:
             and manifest.get("input_fingerprint") == fingerprint
             and "schema" in manifest
             and os.path.exists(os.path.join(data_path, "_SUCCESS"))
+            and _footer_lineage(data_path) == manifest["partitions"]
         ):
             self.resumed.append(name)
             schema = StructType.fromJson(manifest["schema"])

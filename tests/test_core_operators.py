@@ -174,14 +174,14 @@ def test_asof_join_strict_before(spark, transcripts, transcripts_pdf, probes, pr
 
 
 def test_asof_join_salted_equals_plain(spark, transcripts, probes):
-    plain = _collect(asof_ops.asof_join(probes, transcripts, value_cols=["role", "text"]))
-    for bucket in (3600, 86400 * 7):
-        salted = _collect(
-            asof_ops.asof_join_salted(
-                probes, transcripts, value_cols=["role", "text"], bucket_seconds=bucket
+    for exact in (True, False):  # strict swaps the data/probe tags
+        kw = dict(value_cols=["role", "text"], allow_exact_matches=exact)
+        plain = _collect(asof_ops.asof_join(probes, transcripts, **kw))
+        for bucket in (3600, 86400 * 7):
+            salted = _collect(
+                asof_ops.asof_join_salted(probes, transcripts, bucket_seconds=bucket, **kw)
             )
-        )
-        _check_asof(salted, plain)
+            _check_asof(salted, plain)
 
 
 def test_asof_join_broadcast_equals_plain(spark, transcripts, probes):

@@ -1,11 +1,14 @@
 """Every ``featureextraction_spark`` import in the package, the scripts and
 the driver entry resolves — including imports inside functions, which
-otherwise fail only when someone calls them. Pure AST walk, no Spark."""
+otherwise fail only when someone calls them. Pure AST walk, no Spark.
+Each file is parsed with warnings as errors, so an invalid escape sequence
+(a warning today, an error in a later Python) fails here too."""
 
 from __future__ import annotations
 
 import ast
 import os
+import warnings
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "featureextraction_spark"
@@ -17,6 +20,14 @@ def _sources() -> list[str]:
         for d, _, names in os.walk(os.path.join(ROOT, top)):
             out += [os.path.join(d, n) for n in names if n.endswith(".py")]
     return sorted(out)
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        src = f.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        return ast.parse(src, path)
 
 
 def _module_file(mod: str) -> str | None:
@@ -34,7 +45,7 @@ def _module_of(path: str) -> str:
 
 def _top_level_names(path: str) -> set[str]:
     names: set[str] = set()
-    todo = list(ast.parse(open(path).read()).body)
+    todo = list(_parse(path).body)
     while todo:
         n = todo.pop()
         if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -54,7 +65,7 @@ def _package_imports(path: str):
     """(line, module, name-or-None) for every package import in ``path``."""
     is_init = path.endswith("__init__.py")
     here = _module_of(path).split(".")
-    for n in ast.walk(ast.parse(open(path).read())):
+    for n in ast.walk(_parse(path)):
         if isinstance(n, ast.Import):
             for a in n.names:
                 if a.name.split(".")[0] == PKG:

@@ -182,3 +182,16 @@ def test_stage_commit_and_resume_run_no_extra_spark_job(spark, base_dir):
     assert count_spark_jobs(spark, lambda: r2.stage("s", lambda: spark.range(100), "v1")) == 0
     assert r2.resumed == ["s"]
 
+
+def test_deleted_part_file_is_recomputed(spark, base_dir):
+    """A resume checks the manifest's partitions against the data files'
+    footers: with one part file gone the stage is recomputed, not resumed
+    with the rows that are left."""
+    make = lambda: spark.range(0, 1000, numPartitions=4)  # noqa: E731
+    CheckpointedRunner(spark, base_dir, run_id="lost").stage("s", make, "v1")
+    data = os.path.join(base_dir, "lost", "s", "data")
+    os.remove(os.path.join(data, min(f for f in os.listdir(data) if f.startswith("part-"))))
+    r = CheckpointedRunner(spark, base_dir, run_id="lost")
+    out = r.stage("s", make, "v1")
+    assert (r.resumed, r.recomputed) == ([], ["s"])
+    assert out.count() == 1000

@@ -8,6 +8,7 @@ are the ones you'd want on a 1000-executor cluster:
 - filters are pushed into the parquet scan;
 - dimension joins broadcast (no shuffle of the fact side);
 - the as-of join introduces no per-row Python (no BatchEvalPython);
+- each salted skew operator joins back ONE tiny cross-bucket carry table;
 - the feature UDF reads one shuffle of the derived bucket count, which AQE
   does not coalesce.
 """
@@ -19,11 +20,11 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from featureextraction_spark.operators.asof import asof_join
+from featureextraction_spark.operators.asof import asof_join, asof_join_salted
 from featureextraction_spark.operators.backfill import forward_fill
 from featureextraction_spark.operators.joins import membership_join
 from featureextraction_spark.operators.ordering import with_lag_lead
-from featureextraction_spark.operators.sessionize import sessionize
+from featureextraction_spark.operators.sessionize import sessionize, sessionize_salted
 
 
 def plan_of(df) -> str:
@@ -94,6 +95,20 @@ def test_asof_join_no_python_and_two_exchanges(spark, tr_parquet):
     # union of two sides → one shuffle for the window partitioning (plus
     # whatever the probe limit needs); the window itself sorts once
     assert plan.count("Window") == 1, plan
+
+
+def test_salted_operators_one_carry_broadcast(spark, tr_parquet):
+    """The salted path pays the (key, bucket) shuffle, the carry table's own
+    small ones and ONE broadcast join of that table — no second carry table
+    or boundary join."""
+    probes = tr_parquet.filter(F.col("role") == "user").select("conv_id", "ts")
+    for df in (
+        sessionize_salted(tr_parquet),
+        asof_join_salted(probes, tr_parquet, value_cols=["role"]),
+    ):
+        plan = plan_of(df)
+        assert count_exchanges(plan) <= 4, plan
+        assert plan.count("BroadcastHashJoin") == 1, plan
 
 
 def test_whole_stage_codegen_covers_window_arithmetic(spark, tr_parquet):
