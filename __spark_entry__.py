@@ -1151,18 +1151,6 @@ def q_cut_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed curation flow: quality score → exact-dedup canonical →
-    hash split → final keep disposition, one row per document. Each leg
-    is independently oracled elsewhere (text_quality / exact_dedup /
-    hash_split); this query gates their COMPOSITION — the disposition
-    table a corpus release writes. 2 shuffles end-to-end at any scale."""
-    from featureextraction_spark.plans.curation_pipeline import curation_pipeline
-
-    docs = _load(spark, sf_dir, "documents")
-    return curation_pipeline(docs, quality_min=0.5, seed=42)
-
-
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (window=16, stride=12) — the
     pretraining/RAG shard-prep explode. Map-only: zero exchanges in the
@@ -2007,16 +1995,6 @@ def q_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "split", "cutoff_us")
 
 
-def q_cusum_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact CUSUM changepoint score per user: max interior
-    |n·prefix − i·total| over the quantized value series (monotone with
-    the float CUSUM, zero libm), earliest argmax; one key exchange."""
-    from featureextraction_spark.operators.changepoint import cusum_scores
-
-    ev = _load(spark, sf_dir, "events")
-    return cusum_scores(ev)
-
-
 def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-class embedding centroids, relational (label, dim) rows:
     exact quantized component sums (float32 → double widened identically
@@ -2110,27 +2088,6 @@ def q_edit_dist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _load(spark, sf_dir, "documents")
     return edit_distance_pairs(_near_dup_corpus(docs), max_dist=2, q=3)
-
-
-def q_cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adjacent-token co-occurrence graph (both directions, corpus-wide
-    integer weights ≥2): one zip_with explode + one map-combinable
-    groupBy onto the distinct-pair vocabulary."""
-    from featureextraction_spark.operators.textrank import cooccurrence_edges
-
-    docs = _load(spark, sf_dir, "documents")
-    return cooccurrence_edges(docs, min_weight=2)
-
-
-def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextRank keyword scores — 3 integer PageRank rounds over the
-    co-occurrence graph, unrolled as join+agg (the DataFrame Pregel
-    shape); 10^6 fixed-point ranks make every intermediate BIGINT, so
-    DuckDB's unrolled CTEs replay identical bits."""
-    from featureextraction_spark.operators.textrank import textrank_terms
-
-    docs = _load(spark, sf_dir, "documents")
-    return textrank_terms(docs, iterations=3)
 
 
 HQ_BIN_WIDTH = 16
@@ -4873,7 +4830,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": q_pack_sequences,
         "pack_segments": q_pack_segments,
         "c4_line_filter": q_c4_line_filter,
-        "curation_pipeline": q_curation_pipeline,
         "duplicated_spans": q_duplicated_spans,
         "cut_dup_spans": q_cut_dup_spans,
         "line_dedup": q_line_dedup,
@@ -4926,15 +4882,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pivot_counts": q_pivot_counts,
         "token_ids": q_token_ids,
         "temporal_split": q_temporal_split,
-        "cusum_scores": q_cusum_scores,
         "label_centroids": q_label_centroids,
         "bloom_words": q_bloom_words,
         "bloom_probe": q_bloom_probe,
         "skew_topk": q_skew_topk,
         "skew_histogram": q_skew_histogram,
         "edit_dist_pairs": q_edit_dist_pairs,
-        "cooc_edges": q_cooc_edges,
-        "textrank": q_textrank,
         "hist_quantiles": q_hist_quantiles,
         "chi2_terms": q_chi2_terms,
         "rolling_active": q_rolling_active,
@@ -9621,39 +9574,6 @@ def _curation_oracle_sql() -> dict[str, str]:
                    coalesce(a.clean_text, '') AS clean_text
             FROM toksc t LEFT JOIN agg a USING (doc_id)
         """,
-        # composition of the text_quality score, exact_dedup fingerprint
-        # groups, and the hash_split assignment — same fragments, one
-        # disposition row per document
-        "curation_pipeline": f"""
-            WITH q AS (
-                SELECT doc_id, {_QSCORE_SQL} AS quality_score FROM documents
-            ),
-            fp AS (SELECT doc_id, {_NORM_FP} AS fp FROM documents),
-            g AS (
-                SELECT fp, min(doc_id) AS canonical_id,
-                       CAST(count(*) AS BIGINT) AS group_size
-                FROM fp GROUP BY fp
-            ),
-            d AS (SELECT doc_id, canonical_id, group_size FROM fp JOIN g USING (fp)),
-            s AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':42'),
-                                            1, 15))::BIGINT AS DOUBLE)
-                       / 1152921504606846976.0 AS u,
-                       CASE WHEN u < 0.8 THEN 'train'
-                            WHEN u < 0.9 THEN 'valid'
-                            ELSE 'test' END AS split
-                FROM documents
-            )
-            SELECT q.doc_id, quality_score,
-                   CAST(quality_score >= 0.5 AS BIGINT) AS quality_keep,
-                   canonical_id, group_size,
-                   CAST(q.doc_id = canonical_id AS BIGINT) AS is_canonical,
-                   split,
-                   CAST(quality_score >= 0.5 AND q.doc_id = canonical_id
-                        AS BIGINT) AS final_keep
-            FROM q JOIN d USING (doc_id) JOIN s USING (doc_id)
-        """,
         "semdedup": """
             WITH v AS (
                 SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
@@ -10898,8 +10818,8 @@ def _warehouse_oracle_sql() -> dict[str, str]:
 
 
 def _sequential_oracle_sql() -> dict[str, str]:
-    """Temporal purged split / CUSUM / label-centroid oracles. Window
-    sums promote to HUGEINT in DuckDB — exact, compared after the final
+    """Temporal purged split / label-centroid oracles. Integer sums
+    promote to HUGEINT in DuckDB — exact, compared after the final
     BIGINT cast; the split cutoff replays the group_quantiles round-6
     interpolation before the floor."""
     return {
@@ -10935,51 +10855,6 @@ def _sequential_oracle_sql() -> dict[str, str]:
                    CAST(cutoff AS BIGINT) AS cutoff_us
             FROM t, cut
         """,
-        "cusum_scores": """
-            WITH t AS (
-                SELECT user_id, event_id, epoch_us(ts) AS us,
-                       CAST(floor(value * 1000.0 + 0.5) AS BIGINT) AS q
-                FROM events
-            ),
-            r AS (
-                SELECT user_id, q,
-                       CAST(row_number() OVER wo AS BIGINT) AS i,
-                       sum(q) OVER wrun AS p,
-                       count(*) OVER wall AS n,
-                       sum(q) OVER wall AS s
-                FROM t
-                WINDOW wo AS (PARTITION BY user_id ORDER BY us, event_id),
-                       wrun AS (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                         AND CURRENT ROW),
-                       wall AS (PARTITION BY user_id)
-            ),
-            interior AS (
-                SELECT user_id, i, abs(n * p - i * s) AS t_abs
-                FROM r WHERE i < n
-            ),
-            m AS (
-                SELECT user_id, max(t_abs) AS cusum_max
-                FROM interior GROUP BY user_id
-            ),
-            arg AS (
-                SELECT i2.user_id, min(i2.i) AS cusum_argmax
-                FROM interior i2 JOIN m USING (user_id)
-                WHERE i2.t_abs = m.cusum_max
-                GROUP BY i2.user_id
-            ),
-            base AS (
-                SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(q) AS BIGINT) AS sum_q
-                FROM t GROUP BY user_id
-            )
-            SELECT b.user_id, n, sum_q,
-                   CAST(coalesce(cusum_max, 0) AS BIGINT) AS cusum_max,
-                   CAST(cusum_argmax AS BIGINT) AS cusum_argmax
-            FROM base b
-            LEFT JOIN m USING (user_id)
-            LEFT JOIN arg USING (user_id)
-        """,
         "label_centroids": """
             WITH x AS (
                 SELECT label,
@@ -11006,13 +10881,11 @@ def _sequential_oracle_sql() -> dict[str, str]:
 
 
 def _round4m_oracle_sql() -> dict[str, str]:
-    """Bloom / skew-profile / edit-distance-join / TextRank oracles.
-    Every output column is an exact integer or a string — no float
-    rounding boundary anywhere — except skew_topk.share_ppm, which is
-    ONE shared-shape IEEE division (exact small-integer doubles) under
-    floor. Bloom words replay the md5-60-bit double-hash positions;
-    TextRank unrolls the 3 fixed-point PageRank rounds as CTEs with
-    `//` (positive operands ≡ Spark `div`)."""
+    """Bloom / skew-profile / edit-distance-join oracles. Every output
+    column is an exact integer or a string — no float rounding boundary
+    anywhere — except skew_topk.share_ppm, which is ONE shared-shape
+    IEEE division (exact small-integer doubles) under floor. Bloom words
+    replay the md5-60-bit double-hash positions."""
     bloom_words = f"""
         keyed AS (
             SELECT CAST(o_custkey AS VARCHAR) AS s
@@ -11036,50 +10909,6 @@ def _round4m_oracle_sql() -> dict[str, str]:
             FROM pos GROUP BY word
         )
     """
-    graph = f"""
-        toks AS (
-            SELECT regexp_extract_all(lower(text), {_TOKENS_RE}) AS t
-            FROM documents
-        ),
-        adj AS (
-            SELECT t[gs.g] AS a, t[gs.g + 1] AS b
-            FROM toks,
-                 LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS g) gs
-            WHERE len(t) >= 2
-        ),
-        und AS (SELECT a, b FROM adj WHERE a <> b),
-        bo AS (
-            SELECT a AS src, b AS dst FROM und
-            UNION ALL
-            SELECT b AS src, a AS dst FROM und
-        ),
-        e AS (
-            SELECT src, dst, CAST(count(*) AS BIGINT) AS weight
-            FROM bo GROUP BY src, dst
-        ),
-        ow AS (
-            SELECT src, CAST(sum(weight) AS BIGINT) AS W FROM e GROUP BY src
-        )
-    """
-    pr = ["r0 AS (SELECT src AS term, CAST(1000000 AS BIGINT) AS q FROM ow)"]
-    for it in range(1, 4):
-        pr.append(f"""
-            i{it} AS (
-                SELECT e.dst AS term,
-                       CAST(sum((r.q * e.weight) // o.W) AS BIGINT) AS f
-                FROM e
-                JOIN r{it - 1} r ON r.term = e.src
-                JOIN ow o ON o.src = e.src
-                GROUP BY e.dst
-            ),
-            r{it} AS (
-                SELECT o.src AS term,
-                       CAST(150000 + (85 * coalesce(i.f, 0)) // 100
-                            AS BIGINT) AS q
-                FROM ow o LEFT JOIN i{it} i ON i.term = o.src
-            )
-        """)
-    pr_sql = ",\n".join(pr)
     return {
         "bloom_words": f"""
             WITH {bloom_words}
@@ -11166,16 +10995,6 @@ def _round4m_oracle_sql() -> dict[str, str]:
             FROM d a JOIN d b
               ON a.doc_id < b.doc_id AND abs(a.len - b.len) <= 2
             WHERE levenshtein(a.text, b.text) <= 2
-        """,
-        "cooc_edges": f"""
-            WITH {graph}
-            SELECT src, dst, weight FROM e WHERE weight >= 2
-        """,
-        "textrank": f"""
-            WITH {graph},
-            {pr_sql}
-            SELECT r3.term, r3.q AS rank_q, o.W AS out_weight
-            FROM r3 JOIN ow o ON o.src = r3.term
         """,
     }
 

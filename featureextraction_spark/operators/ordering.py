@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -72,8 +72,3 @@ def stable_order(
         ranged = df.repartitionByRange(*cols)
     return ranged.sortWithinPartitions(*cols)
 
-
-def running(col: Column, by: str = "conv_id", order: str | Sequence[str] = "turn_idx") -> Column:
-    """Running (cumulative) aggregate over the ordered sequence."""
-    w = turn_window(by, order).rowsBetween(Window.unboundedPreceding, 0)
-    return F.sum(col).over(w)

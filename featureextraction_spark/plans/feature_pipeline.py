@@ -120,8 +120,6 @@ def _feature_schema(probe_ts_type: T.DataType) -> T.StructType:
 def compute_probe_features(
     state_pdf: pd.DataFrame,
     probes_pdf: pd.DataFrame,
-    extremes_window: int = K.EXTREMES_WINDOW,
-    slope_distance: int = K.SLOPE_DISTANCE,
 ) -> pd.DataFrame:
     """Numeric+state features for one conversation's probes (pandas batch),
     every family evaluated from scratch on each probe's prefix.
@@ -161,8 +159,8 @@ def compute_probe_features(
 
         z1, z2, z3 = K.zones(s)
         mw = K.median_width(s)
-        lc = K.contour_features(lc_raw, extremes_window, slope_distance)
-        uc = K.contour_features(uc_raw, extremes_window, slope_distance)
+        lc = K.contour_features(lc_raw)
+        uc = K.contour_features(uc_raw)
         sl_max, sl_avg, sl_std = K.slantness(K.characteristic_contour(lc_raw))
 
         out_rows.append(
@@ -190,8 +188,6 @@ def compute_probe_features(
 def compute_probe_features_dense(
     state_pdf: pd.DataFrame,
     probes_pdf: pd.DataFrame,
-    extremes_window: int = K.EXTREMES_WINDOW,
-    slope_distance: int = K.SLOPE_DISTANCE,
 ) -> pd.DataFrame:
     """Row-equal fast path of :func:`compute_probe_features` for DENSE
     probing (many probes per conversation).
@@ -249,8 +245,8 @@ def compute_probe_features_dense(
     )
     order = np.argsort(kk, kind="mergesort")
 
-    lc = _DenseSeries(n_chars, extremes_window, slope_distance)
-    uc = _DenseSeries(n_tokens, extremes_window, slope_distance)
+    lc = _DenseSeries(n_chars)
+    uc = _DenseSeries(n_tokens)
     m_lc_all = lc.prefix_len(kk)
     m_uc_all = uc.prefix_len(kk)
     lc_tails = lc.tail_batch(m_lc_all)
@@ -350,7 +346,8 @@ class _DenseSeries:
     (see ``compute_probe_features_dense`` for the invariants that make
     full-series precomputation valid for every prefix)."""
 
-    def __init__(self, s: np.ndarray, window: int, distance: int):
+    def __init__(self, s: np.ndarray):
+        window, distance = K.EXTREMES_WINDOW, K.SLOPE_DISTANCE
         self.window, self.distance = window, distance
         self.tail_w = max(window, distance)
         self.mask_cum = np.concatenate([[0], np.cumsum(s > 0)])
@@ -585,8 +582,6 @@ def point_in_time_features(
     transcripts: DataFrame,
     probes: DataFrame,
     gap_seconds: int = 1800,
-    extremes_window: int = K.EXTREMES_WINDOW,
-    slope_distance: int = K.SLOPE_DISTANCE,
     state: DataFrame | None = None,
     dense_probes: bool = False,
 ) -> DataFrame:
@@ -629,11 +624,7 @@ def point_in_time_features(
             if not len(probes_pdf):
                 continue
             state_pdf = g.loc[g["__tag"] == 0, STATE_COLS]
-            outs.append(
-                compute_probe_features_dense(
-                    state_pdf, probes_pdf, extremes_window, slope_distance
-                )
-            )
+            outs.append(compute_probe_features_dense(state_pdf, probes_pdf))
         if outs:
             yield pd.concat(outs, ignore_index=True)
 

@@ -13,7 +13,8 @@ positional column merge) as a table-format sink:
   matched by key (e.g. ``(conv_id, ts)``); unmatched left rows keep nulls in
   the new columns. Implemented as a copy-on-write rewrite snapshot — the
   parquet stand-in for Iceberg ``MERGE INTO`` (see ``IcebergFeatureStore``).
-* ``read(version=...)`` — time travel over the snapshot log.
+* ``read(version=...)`` — time travel over the snapshot log;
+  ``count(version=...)`` — its row count from the data files' footers.
 
 Scale notes (100 TB): the snapshot log holds file PATHS, not data — append
 is O(new data) regardless of table size, like Iceberg manifests.
@@ -36,6 +37,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from featureextraction_spark.streaming.manifest import _footer_lineage
 
 _LOG = "_feature_store_log.json"
 
@@ -202,26 +205,41 @@ class FeatureStore:
             "merge_columns", [group], schema + list(new_cols), merged.schema.jsonValue(), tag=tag
         )
 
-    def read(self, version: int | None = None) -> DataFrame:
-        """Read the table at ``version`` (default: latest) — time travel."""
+    def _snapshot(self, version: int | None) -> dict:
+        """The snapshot at ``version`` (default: latest)."""
         snaps = self.snapshots()
         if not snaps:
             raise FileNotFoundError(f"empty feature store at {self.path}")
         if version is None:
-            snap = snaps[-1]
-        else:
-            snap = next((s for s in snaps if s["version"] == version), None)
-            if snap is None:
-                live = [s["version"] for s in snaps]
-                raise ValueError(
-                    f"feature store at {self.path} has no version {version}; "
-                    f"live versions: {live}"
-                )
+            return snaps[-1]
+        snap = next((s for s in snaps if s["version"] == version), None)
+        if snap is None:
+            live = [s["version"] for s in snaps]
+            raise ValueError(
+                f"feature store at {self.path} has no version {version}; "
+                f"live versions: {live}"
+            )
+        return snap
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """Read the table at ``version`` (default: latest) — time travel."""
+        snap = self._snapshot(version)
         paths = [os.path.join(self.path, "data", g) for g in snap["files"]]
         reader = self.spark.read
         if "struct" in snap:
             reader = reader.schema(StructType.fromJson(snap["struct"]))
         return reader.parquet(*paths).select(*snap["schema"])
+
+    def count(self, version: int | None = None) -> int:
+        """Rows of the table at ``version`` (default: latest), summed from
+        the parquet footers of the snapshot's file groups on the driver —
+        no Spark job (Iceberg answers it from manifest record counts)."""
+        snap = self._snapshot(version)
+        return sum(
+            p["row_count"]
+            for g in snap["files"]
+            for p in _footer_lineage(os.path.join(self.path, "data", g))
+        )
 
     def expire_snapshots(self, keep_last: int = 1) -> int:
         """Drop unreferenced file groups (Iceberg ``expire_snapshots``)."""

@@ -31,6 +31,10 @@ the same --work skips a completed stage only when its key is unchanged
 recomputes turn_state, features and store, a new --probes-per-conv
 recomputes probes, features and store. The final JSON line reports which
 stages resumed vs recomputed plus per-stage wall/rows from the manifest.
+Its ``feature_rows`` is the store's row count at this run's
+``store_version``, not at the latest version: the two differ only when
+another run appended to the same store afterwards. Row counts come from
+parquet footers, so a fully resumed run starts no Spark job.
 """
 
 from __future__ import annotations
@@ -150,9 +154,9 @@ def main(argv: list[str] | None = None) -> dict:
         adopted = version is not None
         if not adopted:
             version = store.append(features, tag=store_tag)
-        n = store.read(version=version).count()
         ckpt.record(
-            "store", keys["store"], n, int((_t.perf_counter() - t0) * 1000),
+            "store", keys["store"], store.count(version),
+            int((_t.perf_counter() - t0) * 1000),
             extra={"store_version": version},
             resumed=adopted,
         )
@@ -164,7 +168,7 @@ def main(argv: list[str] | None = None) -> dict:
         "resumed": sorted(set(ckpt.resumed)),
         "recomputed": sorted(set(ckpt.recomputed)),
         "store_version": version,
-        "feature_rows": store.read().count(),
+        "feature_rows": store.count(version),
         "stages": [
             {k: m[k] for k in ("stage", "status", "wall_ms", "total_rows", "n_partitions")}
             for m in ckpt.manifest_rows()

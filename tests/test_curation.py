@@ -243,49 +243,6 @@ def test_semdedup_lowest_id_always_kept(emb):
     assert sorted(kept.vec_id) == sorted(mins.tolist())
 
 
-def test_curation_pipeline_composes_its_parts(spark, docs):
-    from featureextraction_spark.operators.dedup import exact_dedup
-    from featureextraction_spark.operators.sampling import hash_split
-    from featureextraction_spark.functions.textstats import with_quality_features
-    from featureextraction_spark.plans.curation_pipeline import curation_pipeline
-
-    # inject one exact duplicate (non-canonical survivor test) and one
-    # garbage doc (quality-gate test) so every gate fires both ways
-    first_text = docs.orderBy("doc_id").first()["text"]
-    extra = spark.createDataFrame(
-        [(100001, first_text), (100002, ";;; !!! ,,,")],
-        "doc_id long, text string",
-    )
-    docs = docs.select("doc_id", "text").unionByName(extra)
-
-    out = curation_pipeline(docs, quality_min=0.5, seed=42).toPandas()
-    assert len(out) == docs.count()
-
-    q = {
-        r["doc_id"]: round(r["quality_score"], 6)
-        for r in with_quality_features(docs).collect()
-    }
-    dd = {r["doc_id"]: r["canonical_id"] for r in exact_dedup(docs).collect()}
-    sp = {
-        r["doc_id"]: r["split"]
-        for r in hash_split(docs.select("doc_id"), id_col="doc_id", seed=42).collect()
-    }
-    for r in out.itertuples():
-        assert r.quality_score == q[r.doc_id]
-        assert r.quality_keep == int(r.quality_score >= 0.5)
-        assert r.canonical_id == dd[r.doc_id]
-        assert r.is_canonical == int(r.doc_id == r.canonical_id)
-        assert r.split == sp[r.doc_id]
-        assert r.final_keep == int(bool(r.quality_keep) and bool(r.is_canonical))
-    # every gate fired both ways on this input
-    assert 0 < out.final_keep.sum() < len(out)
-    by_doc = out.set_index("doc_id")
-    assert by_doc.loc[100001, "is_canonical"] == 0  # dup of doc 0
-    assert by_doc.loc[100001, "group_size"] == 2
-    assert by_doc.loc[100002, "quality_keep"] == 0  # garbage text
-    assert by_doc.loc[100002, "final_keep"] == 0
-
-
 def test_semdedup_strategies_identical(emb):
     """The GEMM block-pair path must reproduce the expression path: same
     keep decisions, same rounded max_cos_lower (tolerance one ULP at the

@@ -186,6 +186,28 @@ def test_read_runs_no_spark_job(spark, store):
     assert count_spark_jobs(spark, lambda: store.read(version=0)) == 0
 
 
+def test_count_matches_read_per_version_without_a_job(spark, store):
+    """``count`` sums the snapshot's footers: the row count a read gives at
+    every version (after ``merge_columns`` too), with no Spark job, and an
+    unknown version is refused as ``read`` refuses it."""
+    store.append(_batch(spark, [("a", T0, 1.0), ("b", T1, 2.0)]))
+    store.append(_batch(spark, [("c", T2, 3.0)]))
+    store.merge_columns(
+        spark.createDataFrame(
+            pd.DataFrame([("a", T0, 7.0)], columns=["conv_id", "ts", "f2"]),
+            schema="conv_id string, ts timestamp, f2 double",
+        )
+    )
+    got = {}
+    assert count_spark_jobs(
+        spark, lambda: got.update({v: store.count(v) for v in (0, 1, 2, None)})
+    ) == 0
+    assert got == {0: 2, 1: 3, 2: 3, None: 3}
+    assert [store.read(version=v).count() for v in (0, 1, 2)] == [2, 3, 3]
+    with pytest.raises(ValueError, match=r"no version 7; live versions: \[0, 1, 2\]"):
+        store.count(version=7)
+
+
 def test_iceberg_gated_off_in_this_container(spark):
     assert not iceberg_available(spark)
     with pytest.raises(RuntimeError, match="Iceberg"):

@@ -1,6 +1,7 @@
-"""Every ``featureextraction_spark`` import in the package, the scripts and
-the driver entry resolves — including imports inside functions, which
-otherwise fail only when someone calls them. Pure AST walk, no Spark.
+"""Every ``featureextraction_spark`` import in the package, the scripts,
+the benchmark (``perfbench/``) and the driver entry resolves — including
+imports inside functions, which otherwise fail only when someone calls
+them. Pure AST walk, no Spark.
 Each file is parsed with warnings as errors, so an invalid escape sequence
 (a warning today, an error in a later Python) fails here too."""
 
@@ -16,7 +17,7 @@ PKG = "featureextraction_spark"
 
 def _sources() -> list[str]:
     out = [os.path.join(ROOT, "__spark_entry__.py")]
-    for top in (PKG, "scripts"):
+    for top in (PKG, "scripts", "perfbench"):
         for d, _, names in os.walk(os.path.join(ROOT, top)):
             out += [os.path.join(d, n) for n in names if n.endswith(".py")]
     return sorted(out)

@@ -1,6 +1,5 @@
-"""Round-4 additions (eleventh batch) — purged temporal split,
-integer-exact CUSUM changepoint scores, per-class embedding centroids —
-vs naive python oracles, incl. a planted-shift CUSUM fixture."""
+"""Round-4 additions (eleventh batch) — purged temporal split and
+per-class embedding centroids — vs naive python oracles."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from featureextraction_spark.operators.changepoint import cusum_scores
 from featureextraction_spark.operators.decomposition import label_centroids
 from featureextraction_spark.operators.sampling import temporal_split
 
@@ -77,41 +75,6 @@ def test_temporal_split_vs_naive(spark, value_events):
     tr_max = max(_us(r.ts) for r in rows if got[r.event_id][0] == "train")
     te_min = min(_us(r.ts) for r in rows if got[r.event_id][0] == "test")
     assert tr_max < cutoff <= te_min - 600 * US + 1
-
-
-def _naive_cusum(rows):
-    by_u = defaultdict(list)
-    for r in rows:
-        by_u[r.user_id].append(r)
-    out = {}
-    for u, rs in by_u.items():
-        rs = sorted(rs, key=lambda r: (r.ts, r.event_id))
-        qs = [math.floor(r.value * 1e3 + 0.5) for r in rs]
-        n, s = len(qs), sum(qs)
-        best, arg = None, None
-        p = 0
-        for i, q in enumerate(qs[:-1], start=1):
-            p += q
-            t_abs = abs(n * p - i * s)
-            if best is None or t_abs > best:  # strict > keeps earliest argmax
-                best, arg = t_abs, i
-        out[u] = (n, s, best if best is not None else 0, arg)
-    return out
-
-
-def test_cusum_vs_naive_and_shift_detection(spark, value_events):
-    df, rows = value_events
-    got = {r.user_id: r for r in cusum_scores(df).collect()}
-    exp = _naive_cusum(rows)
-    assert set(got) == set(exp)
-    for u, (n, s, best, arg) in exp.items():
-        g = got[u]
-        assert (g.n, g.sum_q, g.cusum_max) == (n, s, best), u
-        assert g.cusum_argmax == arg, u
-    # planted shift: argmax lands near the midpoint for long shifted users
-    for u, (n, s, best, arg) in exp.items():
-        if u % 3 == 0 and n >= 35:
-            assert abs(arg - n // 2) <= 3, (u, arg, n)
 
 
 def test_label_centroids_vs_naive(spark):

@@ -1,6 +1,6 @@
 """Round-4 additions (twelfth batch): Bloom filter build/probe, join-key
-skew profiling, q-gram-filtered edit-distance self-join, integer
-TextRank — each vs a verbatim naive python oracle."""
+skew profiling and the q-gram-filtered edit-distance self-join — each
+vs a verbatim naive python oracle."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.profiling import skew_histogram, skew_topk
 from featureextraction_spark.operators.sketches import (
@@ -19,12 +18,6 @@ from featureextraction_spark.operators.sketches import (
     bloom_probe,
 )
 from featureextraction_spark.operators.stringjoin import edit_distance_pairs
-from featureextraction_spark.operators.textrank import (
-    TR_BASE,
-    TR_SCALE,
-    cooccurrence_edges,
-    textrank_terms,
-)
 
 
 def _h60(x: str, seed: int) -> int:
@@ -135,40 +128,3 @@ def test_edit_distance_pairs_complete_and_precise(spark, max_dist):
                 exp[(x, y)] = d
     assert got == exp  # complete (prefix filter) AND precise (verify)
     assert exp  # the fixture actually planted matches
-
-
-def _naive_textrank(docs: list[str], iterations: int) -> dict[str, int]:
-    w: Counter = Counter()
-    for d in docs:
-        toks = [t for t in d.lower().split() if t]
-        for a, b in zip(toks, toks[1:]):
-            if a != b:
-                w[(a, b)] += 1
-                w[(b, a)] += 1
-    W: Counter = Counter()
-    for (a, _b), c in w.items():
-        W[a] += c
-    q = {v: TR_SCALE for v in W}
-    for _ in range(iterations):
-        inflow: Counter = Counter()
-        for (a, b), c in w.items():
-            inflow[b] += q[a] * c // W[a]
-        q = {v: TR_BASE + 85 * inflow[v] // 100 for v in W}
-    return q
-
-
-def test_textrank_vs_naive(spark):
-    docs = [
-        "the quick brown fox jumps over the lazy dog",
-        "the quick red fox runs past the lazy cat",
-        "a slow green turtle walks under the happy dog",
-        "dog and cat and fox share the quick story",
-    ]
-    df = spark.createDataFrame([(d,) for d in docs], "text string")
-    exp = _naive_textrank(docs, iterations=3)
-    got = {r.term: r.rank_q for r in textrank_terms(df, iterations=3).collect()}
-    assert got == exp
-    # hub words must outrank leaves after damping from uniform start
-    assert got["the"] > got["turtle"]
-    edges = {(r.src, r.dst): r.weight for r in cooccurrence_edges(df).collect()}
-    assert edges[("the", "quick")] == 3 and edges[("quick", "the")] == 3

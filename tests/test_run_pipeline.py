@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 
 from featureextraction_spark.datagen import make_transcripts  # noqa: E402
 
-from conftest import assert_pdf_equal  # noqa: E402
+from conftest import assert_pdf_equal, count_spark_jobs  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -49,7 +49,10 @@ def test_run_then_resume(spark, input_path, tmp_path):
     assert stage_names == {"turn_state", "probes", "features", "store"}
     assert all(s["status"] == "done" for s in first["stages"])
 
-    second = run_pipeline.main(args)
+    runs = []
+    # a full resume reads every row count from manifests and footers
+    assert count_spark_jobs(spark, lambda: runs.append(run_pipeline.main(args))) == 0
+    second = runs[0]
     assert second["recomputed"] == []
     assert set(second["resumed"]) == stage_names
     # no double-append: same snapshot, same rows

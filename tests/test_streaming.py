@@ -325,33 +325,6 @@ def test_streaming_turn_state_retention_evicts_idle_state(spark, tmp_path):
     assert state_rows[-1] == 2, state_rows
 
 
-def test_streaming_dedup_matches_batch_distinct(spark, stream_dir, batch_df):
-    """First-arrival streaming dedup: the surviving fingerprint SET equals
-    the batch distinct-fingerprint set, with no duplicate fp emitted."""
-    from featureextraction_spark.functions.textstats import fingerprint
-    from featureextraction_spark.streaming.dedup import streaming_dedup
-
-    # horizon >= the fixture's full event-time span -> global dedup, so the
-    # batch distinct set is the exact expectation (shorter horizons re-emit
-    # beyond-horizon replays by design — the documented state/recall trade)
-    got = _run_stream(
-        spark,
-        stream_dir,
-        batch_df,
-        lambda src: streaming_dedup(src, text="text", ts="ts", watermark="365 days"),
-        "append",
-        "dedup_stream",
-    )
-    assert got["fp"].is_unique
-    batch_fps = (
-        batch_df.select(fingerprint("text").alias("fp")).distinct().toPandas()["fp"]
-    )
-    assert set(got["fp"]) == set(batch_fps)
-    # every emitted row is a real input row (first arrival, not a synth)
-    n_in = batch_df.count()
-    assert 0 < len(got) <= n_in
-
-
 def test_stateless_curation_ops_run_on_streams(spark, tmp_path):
     """pii_scrub / c4_line_filter / with_quality_features are stateless
     projections — they must run UNCHANGED on a structured stream and
@@ -726,127 +699,3 @@ def test_streaming_sketches_match_batch(spark, doc_stream_dir):
     assert {
         r.register: r.m_rho for r in got_hll.itertuples()
     } == {r.register: r.m_rho for r in want_hll.itertuples()}
-
-
-@pytest.fixture(scope="module")
-def event_stream_dir(spark, tmp_path_factory):
-    """Time-ordered event-log chunks (the activity-operator shape)."""
-    import datetime as dt
-    import random
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = tmp_path_factory.mktemp("event_stream")
-    rng = random.Random(31)
-    rows = []
-    eid = 0
-    for u in range(25):
-        t = rng.randrange(0, 10**12)
-        for _ in range(rng.randint(2, 25)):
-            t += rng.randrange(1, 3600 * 10**6)
-            rows.append(
-                {
-                    "user_id": u,
-                    "event_id": f"e{eid:06d}",
-                    "event_type": rng.choice(
-                        ["click", "view", "email", "purchase"]
-                    ),
-                    "ts": dt.datetime(1970, 1, 1)
-                    + dt.timedelta(microseconds=t),
-                    "value": round(rng.uniform(0, 80), 3),
-                }
-            )
-            eid += 1
-    pdf = pd.DataFrame(rows).sort_values("ts", kind="mergesort")
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf = pdf.reset_index(drop=True)
-    third = len(pdf) // 3
-    for i, chunk in enumerate(
-        [pdf.iloc[:third], pdf.iloc[third : 2 * third], pdf.iloc[2 * third :]]
-    ):
-        pq.write_table(
-            pa.Table.from_pandas(chunk, preserve_index=False),
-            os.path.join(str(base), f"chunk_{i}.parquet"),
-        )
-    return str(base)
-
-
-def test_streaming_attribution_matches_batch(spark, event_stream_dir):
-    """Every emitted conversion's (channel, value_q) must equal the
-    batch carry-forward window's row — same credit, zero leakage."""
-    from featureextraction_spark.operators.activity import (
-        last_touch_attribution,
-    )
-    from featureextraction_spark.streaming.attribution import (
-        streaming_attribution,
-    )
-
-    batch_df = spark.read.parquet(event_stream_dir)
-    batch_df.persist().count()
-    got = _run_stream(
-        spark,
-        event_stream_dir,
-        batch_df,
-        lambda s: streaming_attribution(s),
-        "append",
-        "attr_out",
-    )
-    bdf = batch_df.withColumn("ts", F.col("ts").cast("timestamp"))
-    exp = last_touch_attribution(bdf).toPandas()
-    assert len(got) == len(exp) and len(exp) > 0
-    key = ["user_id", "event_id"]
-    g = got.sort_values(key).reset_index(drop=True)
-    e = exp.sort_values(key).reset_index(drop=True)
-    for c in ["user_id", "event_id", "channel", "value_q"]:
-        assert list(g[c]) == list(e[c]), c
-
-
-def test_streaming_cdc_apply_matches_batch(spark, event_stream_dir):
-    """The final emission per key must equal cdc_apply's compacted row:
-    live keys match payload exactly; tombstoned keys are flagged
-    is_delete and absent from the batch result."""
-    from featureextraction_spark.operators.scd import cdc_apply
-    from featureextraction_spark.streaming.cdc import streaming_cdc_apply
-
-    batch_df = spark.read.parquet(event_stream_dir)
-    batch_df.persist().count()
-    got = _run_stream(
-        spark,
-        event_stream_dir,
-        batch_df,
-        lambda s: streaming_cdc_apply(s, delete_op="email"),
-        "append",
-        "cdc_out",
-    )
-    # last emission per key = max (ts_us, event_id); event_id strings in
-    # this fixture are zero-padded so string order == arrival order
-    last = (
-        got.sort_values(["user_id", "ts_us", "event_id"], kind="mergesort")
-        .groupby("user_id")
-        .tail(1)
-        .reset_index(drop=True)
-    )
-    bdf = batch_df.withColumn("ts", F.col("ts").cast("timestamp"))
-    exp = (
-        cdc_apply(
-            bdf, key="user_id", seq=("ts", "event_id"),
-            op="event_type", delete_op="email",
-        )
-        .withColumn("ts_us", F.unix_micros(F.col("ts")))
-        .select("user_id", "event_id", "ts_us", "event_type", "value")
-        .toPandas()
-    )
-    live = last[last["is_delete"] == 0].reset_index(drop=True)
-    dead = set(last[last["is_delete"] == 1]["user_id"])
-    assert set(exp["user_id"]) == set(live["user_id"])
-    assert dead.isdisjoint(set(exp["user_id"])) and len(dead) > 0
-    e = exp.sort_values("user_id").reset_index(drop=True)
-    g = live.sort_values("user_id").reset_index(drop=True)
-    assert list(g["event_id"]) == list(e["event_id"])
-    assert list(g["ts_us"]) == list(e["ts_us"])
-    assert list(g["op"]) == list(e["event_type"])
-    assert [round(v, 6) for v in g["value"]] == [
-        round(v, 6) for v in e["value"]
-    ]
