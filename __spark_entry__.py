@@ -1818,19 +1818,6 @@ def q_hll_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FUNNEL_STEPS = ("view", "click", "purchase")
-
-
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view→click→purchase funnel per user in one pass (running
-    conditional-min windows + one same-key groupBy; strict-µs chaining,
-    no self-joins) — all-integer outputs."""
-    from featureextraction_spark.operators.funnel import funnel_steps
-
-    ev = _load(spark, sf_dir, "events")
-    return funnel_steps(ev, steps=FUNNEL_STEPS)
-
-
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort-retention triangle: users cohorted by integer week
     (µs div — no calendar functions) of first event; distinct-actives
@@ -2911,30 +2898,6 @@ def q_sorted_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear-interpolation resample of per-user value series onto the
-    epoch-aligned 6-hour grid — exact BIGINT interp_num/interp_den
-    vehicles, one user-keyed exchange for collapse + both RANGE-framed
-    neighbor windows."""
-    from featureextraction_spark.operators.interpolate import interp_resample
-
-    ev = _load(spark, sf_dir, "events")
-    ev = ev.withColumn("us", epoch_us(ev, "ts"))
-    out = interp_resample(
-        ev,
-        value="value",
-        key="user_id",
-        t_ms=F.expr("us div 1000"),
-        order_id="event_id",
-        grid_ms=21_600_000,
-    )
-    return out.select(
-        "user_id", "t_ms", "prev_q", "prev_t", "next_q", "next_t",
-        "interp_num", "interp_den",
-        _hround6(F.col("interp")).alias("interp"),
-    )
-
-
 def q_kanon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity release audit of (lang, source) QI
     groups with the length-centile bucket as the sensitive attribute —
@@ -2986,28 +2949,6 @@ def q_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_a = sim_ops.cosine_topk(queries_df, emb, k=10)
     run_b = sim_ops.dot_topk(queries_df, emb, k=10)
     return rrf_fusion([run_a, run_b], k=60, topn=10, rank_cap=10)
-
-
-def q_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user robust trend: Mann-Kendall S + Theil-Sen median slope
-    off ONE pairwise self-join sharing the user exchange; quantized
-    slopes use truncating integer div (identical in Spark and DuckDB,
-    negatives included) so no float slope reaches the hash gate."""
-    from featureextraction_spark.operators.trend import trend_stats
-
-    ev = _load(spark, sf_dir, "events")
-    ev = ev.withColumn("us", epoch_us(ev, "ts"))
-    out = trend_stats(
-        ev,
-        value="value",
-        key="user_id",
-        t_s=F.expr("us div 1000000"),
-        order_id="event_id",
-    )
-    return out.select(
-        "user_id", "n", "n_pairs", "n_slopes", "mk_s", "med2",
-        _hround6(F.col("theil_sen")).alias("theil_sen"),
-    )
 
 
 def q_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3307,37 +3248,6 @@ def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(us).cast("long").alias("end_us"),
     )
     return max_concurrency(iv, by="event_type", id_col="user_id")
-
-
-def q_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-naive (season=7 days) forecast skill per event type over
-    the daily event-count series: exact BIGINT absolute-error sums,
-    MAE/MASE as closing divisions through the nudged rounding."""
-    from featureextraction_spark.operators.cohorts import DAY_US
-    from featureextraction_spark.operators.forecast import forecast_eval
-
-    ev = _load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.col("event_type").alias("grp"),
-            epoch_us(ev, "ts").alias("__us"),
-        )
-        .withColumn("day", F.expr(f"CAST(__us div {86400000000} AS BIGINT)"))
-        .groupBy("grp", "day")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
-    assert DAY_US == 86400000000
-    out = forecast_eval(daily, by="grp", day="day", y="y", season=7)
-    return out.select(
-        "grp",
-        "n_days",
-        "n_eval",
-        "sae",
-        "n_naive",
-        "sae_naive",
-        _hround6(F.col("mae")).alias("mae"),
-        _hround6(F.col("mase")).alias("mase"),
-    )
 
 
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4872,7 +4782,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cms_estimate": q_cms_estimate,
         "hll_registers": q_hll_registers,
         "hll_card": q_hll_card,
-        "funnel": q_funnel,
         "cohort_retention": q_cohort_retention,
         "range_join": q_range_join,
         "seasonal_z": q_seasonal_z,
@@ -4933,11 +4842,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "contingency": q_contingency,
         "markov": q_markov,
         "sorted_blocking": q_sorted_blocking,
-        "interp": q_interp,
         "kanon": q_kanon,
         "bfs": q_bfs,
         "rrf": q_rrf,
-        "trend": q_trend,
         "ks": q_ks,
         "neighbor_agg": q_neighbor_agg,
         "dispersion": q_dispersion,
@@ -4952,7 +4859,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "canonical_docs": q_canonical_docs,
         "pagerank": q_pagerank,
         "concurrency": q_concurrency,
-        "forecast_eval": q_forecast_eval,
         "readability": q_readability,
         "spearman": q_spearman,
         "link_pred": q_link_pred,
@@ -10612,50 +10518,10 @@ def _sketch_oracle_sql() -> dict[str, str]:
 
 
 def _analytics_oracle_sql() -> dict[str, str]:
-    """Funnel / cohort / range-join / seasonal-baseline oracles. The
-    funnel replays the exact running-conditional-min construction; the
-    range join replays the PLAIN THETA JOIN the bucketized rewrite must
-    row-equal; weeks/hours are integer `//` of epoch µs."""
-    wrun = ("PARTITION BY user_id ORDER BY us, event_id "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+    """Cohort / range-join / seasonal-baseline oracles. The range join
+    replays the PLAIN THETA JOIN the bucketized rewrite must row-equal;
+    weeks/hours are integer `//` of epoch µs."""
     return {
-        "funnel": f"""
-            WITH t AS (
-                SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-                FROM events
-            ),
-            c0 AS (
-                SELECT *, CASE WHEN event_type = '{FUNNEL_STEPS[0]}'
-                               THEN us END AS cand0
-                FROM t
-            ),
-            r0 AS (SELECT *, min(cand0) OVER ({wrun}) AS run0 FROM c0),
-            c1 AS (
-                SELECT *, CASE WHEN event_type = '{FUNNEL_STEPS[1]}'
-                                    AND run0 IS NOT NULL AND run0 < us
-                               THEN us END AS cand1
-                FROM r0
-            ),
-            r1 AS (SELECT *, min(cand1) OVER ({wrun}) AS run1 FROM c1),
-            c2 AS (
-                SELECT *, CASE WHEN event_type = '{FUNNEL_STEPS[2]}'
-                                    AND run1 IS NOT NULL AND run1 < us
-                               THEN us END AS cand2
-                FROM r1
-            )
-            SELECT user_id,
-                   CAST(min(cand0) AS BIGINT) AS step0_us,
-                   CAST(min(cand1) AS BIGINT) AS step1_us,
-                   CAST(min(cand2) AS BIGINT) AS step2_us,
-                   CAST(CASE WHEN min(cand0) IS NULL THEN 0 ELSE 1 END
-                        + CASE WHEN min(cand1) IS NULL THEN 0 ELSE 1 END
-                        + CASE WHEN min(cand2) IS NULL THEN 0 ELSE 1 END
-                        AS BIGINT) AS steps_completed,
-                   CAST(min(cand1) - min(cand0) AS BIGINT) AS gap1_us,
-                   CAST(min(cand2) - min(cand1) AS BIGINT) AS gap2_us
-            FROM c2
-            GROUP BY user_id
-        """,
         "cohort_retention": """
             WITH t AS (
                 SELECT user_id, epoch_us(ts) // 604800000000 AS week
@@ -12382,9 +12248,8 @@ def _round4y_oracle_sql() -> dict[str, str]:
 
 
 def _round4z_oracle_sql() -> dict[str, str]:
-    """Oracles for sorted-neighborhood blocking, grid interpolation and
-    the k-anonymity audit."""
-    H = 21_600_000
+    """Oracles for sorted-neighborhood blocking and the k-anonymity
+    audit."""
     return {
         "sorted_blocking": """
             WITH r AS (
@@ -12398,66 +12263,6 @@ def _round4z_oracle_sql() -> dict[str, str]:
                    a.rnk AS rank_a, b.rnk AS rank_b,
                    a.k AS key_a, b.k AS key_b
             FROM r a JOIN r b ON b.rnk - a.rnk BETWEEN 1 AND 3
-        """,
-        "interp": f"""
-            WITH ev AS (
-                SELECT user_id, epoch_us(ts) // 1000 AS t_ms,
-                       max_by(CAST(floor(CAST(value AS DOUBLE) * 1000.0
-                                         + 0.5) AS BIGINT),
-                              event_id) AS q
-                FROM events GROUP BY 1, 2
-            ),
-            b AS (SELECT user_id, min(t_ms) AS lo, max(t_ms) AS hi
-                  FROM ev GROUP BY 1),
-            g AS (
-                SELECT user_id,
-                       unnest(generate_series(
-                           ((lo + {H - 1}) // {H}) * {H},
-                           (hi // {H}) * {H}, {H})) AS t_ms
-                FROM b
-                WHERE ((lo + {H - 1}) // {H}) * {H} <= (hi // {H}) * {H}
-            ),
-            u AS (
-                SELECT user_id, t_ms, q, 0 AS is_grid FROM ev
-                UNION ALL
-                SELECT user_id, t_ms, NULL, 1 FROM g
-            ),
-            w AS (
-                SELECT user_id, t_ms, is_grid,
-                       last_value(q IGNORE NULLS) OVER wp AS prev_q,
-                       last_value(CASE WHEN q IS NOT NULL THEN t_ms END
-                                  IGNORE NULLS) OVER wp AS prev_t,
-                       first_value(q IGNORE NULLS) OVER wn AS next_q,
-                       first_value(CASE WHEN q IS NOT NULL THEN t_ms END
-                                   IGNORE NULLS) OVER wn AS next_t
-                FROM u
-                WINDOW wp AS (PARTITION BY user_id ORDER BY t_ms
-                              RANGE BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW),
-                       wn AS (PARTITION BY user_id ORDER BY t_ms
-                              RANGE BETWEEN CURRENT ROW
-                                        AND UNBOUNDED FOLLOWING)
-            )
-            SELECT user_id, CAST(t_ms AS BIGINT) AS t_ms, prev_q,
-                   CAST(prev_t AS BIGINT) AS prev_t, next_q,
-                   CAST(next_t AS BIGINT) AS next_t,
-                   CAST(CASE WHEN next_t > prev_t
-                             THEN prev_q * (next_t - t_ms)
-                                  + next_q * (t_ms - prev_t)
-                             ELSE prev_q END AS BIGINT) AS interp_num,
-                   CAST(CASE WHEN next_t > prev_t THEN next_t - prev_t
-                             ELSE 1 END AS BIGINT) AS interp_den,
-                   round(CAST(CASE WHEN next_t > prev_t
-                                   THEN prev_q * (next_t - t_ms)
-                                        + next_q * (t_ms - prev_t)
-                                   ELSE prev_q END AS DOUBLE)
-                         / CAST(CASE WHEN next_t > prev_t
-                                     THEN next_t - prev_t
-                                     ELSE 1 END AS DOUBLE)
-                         + 1e-9, 6) AS interp
-            FROM w
-            WHERE is_grid = 1 AND prev_q IS NOT NULL
-              AND next_q IS NOT NULL
         """,
         "kanon": """
             SELECT lang, source,
@@ -12563,64 +12368,8 @@ def _round4aa_oracle_sql() -> dict[str, str]:
 
 
 def _round4ab_oracle_sql() -> dict[str, str]:
-    """Oracles for the robust-trend and KS drift reads."""
+    """Oracles for the KS drift read."""
     return {
-        "trend": """
-            WITH b0 AS (
-                SELECT user_id, epoch_us(ts) // 1000000 AS t,
-                       CAST(floor(CAST(value AS DOUBLE) * 1000.0 + 0.5)
-                            AS BIGINT) AS q,
-                       event_id
-                FROM events
-            ),
-            b AS (
-                SELECT user_id, t, q,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY t, event_id) AS rn
-                FROM b0
-            ),
-            p AS (
-                SELECT a.user_id,
-                       CASE WHEN b2.q > a.q THEN 1
-                            WHEN b2.q < a.q THEN -1 ELSE 0 END AS sgn,
-                       CASE WHEN b2.t > a.t
-                            THEN ((b2.q - a.q) * 1000000) // (b2.t - a.t)
-                       END AS slope_q
-                FROM b a JOIN b b2
-                  ON a.user_id = b2.user_id AND a.rn < b2.rn
-            ),
-            mk AS (
-                SELECT user_id, CAST(count(*) AS BIGINT) AS n_pairs,
-                       CAST(sum(sgn) AS BIGINT) AS mk_s,
-                       CAST(count(slope_q) AS BIGINT) AS n_slopes
-                FROM p GROUP BY user_id
-            ),
-            s AS (SELECT user_id, slope_q FROM p
-                  WHERE slope_q IS NOT NULL),
-            r AS (
-                SELECT user_id, slope_q,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY slope_q) AS sr,
-                       count(*) OVER (PARTITION BY user_id) AS m
-                FROM s
-            ),
-            med AS (
-                SELECT user_id,
-                       CAST(sum(CASE WHEN sr = (m+1)//2 THEN slope_q
-                                     ELSE 0 END)
-                            + sum(CASE WHEN sr = (m+2)//2 THEN slope_q
-                                       ELSE 0 END) AS BIGINT) AS med2
-                FROM r GROUP BY user_id
-            ),
-            n AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
-                  FROM events GROUP BY user_id)
-            SELECT mk.user_id, n.n, mk.n_pairs, mk.n_slopes, mk.mk_s,
-                   med.med2,
-                   round(CAST(med.med2 AS DOUBLE)
-                         / CAST('2000000000' AS DOUBLE) + 1e-9, 6)
-                       AS theil_sen
-            FROM mk JOIN n USING (user_id) LEFT JOIN med USING (user_id)
-        """,
         "ks": """
             WITH base AS (
                 SELECT CAST(floor(CAST(value AS DOUBLE) * 100.0 + 0.5)
@@ -13201,8 +12950,8 @@ def _pagerank_oracle_sql(rounds: int) -> str:
 
 
 def _round4af_oracle_sql() -> dict[str, str]:
-    """Oracles for fixed-round PageRank, the concurrency sweep-line,
-    seasonal-naive forecast skill and the readability scores."""
+    """Oracles for fixed-round PageRank, the concurrency sweep-line and
+    the readability scores."""
     return {
         "pagerank": _pagerank_oracle_sql(PAGERANK_ROUNDS),
         "concurrency": """
@@ -13245,43 +12994,6 @@ def _round4af_oracle_sql() -> dict[str, str]:
             )
             SELECT n.event_type, n.n_intervals, p.max_concurrent, p.peak_us
             FROM n JOIN p ON p.event_type = n.event_type
-        """,
-        "forecast_eval": """
-            WITH daily AS (
-                SELECT event_type AS grp,
-                       epoch_us(ts) // 86400000000 AS day,
-                       CAST(count(*) AS BIGINT) AS y
-                FROM events GROUP BY 1, 2
-            ),
-            s AS (
-                SELECT b.grp, b.day, b.y, f.y AS f, p.y AS p
-                FROM daily b
-                LEFT JOIN daily f ON f.grp = b.grp AND f.day = b.day - 7
-                LEFT JOIN daily p ON p.grp = b.grp AND p.day = b.day - 1
-            ),
-            a AS (
-                SELECT grp,
-                       CAST(count(*) AS BIGINT) AS n_days,
-                       CAST(count(f) AS BIGINT) AS n_eval,
-                       CAST(coalesce(sum(abs(y - f)), 0) AS BIGINT) AS sae,
-                       CAST(count(p) AS BIGINT) AS n_naive,
-                       CAST(coalesce(sum(abs(y - p)), 0) AS BIGINT)
-                           AS sae_naive
-                FROM s GROUP BY grp
-            )
-            SELECT grp, n_days, n_eval, sae, n_naive, sae_naive,
-                   CASE WHEN n_eval > 0
-                        THEN round(CAST(sae AS DOUBLE)
-                                   / CAST(n_eval AS DOUBLE) + 1e-9, 6)
-                   END AS mae,
-                   CASE WHEN n_eval > 0 AND sae_naive > 0
-                        THEN round(CAST(sae AS DOUBLE)
-                                       * CAST(n_naive AS DOUBLE)
-                                   / (CAST(n_eval AS DOUBLE)
-                                      * CAST(sae_naive AS DOUBLE))
-                                   + 1e-9, 6)
-                   END AS mase
-            FROM a
         """,
         "readability": f"""
             WITH base AS (

@@ -70,6 +70,16 @@ STATE_COLS = [
     "session_id", "prev_role", "last_tool", "role_transitions",
 ]
 
+# the feature stage's output columns, in order; the kernels emit the
+# integer ones as nullable Int64
+FEATURE_COLS = [
+    "conv_id", "ts", "session_id", "turn_count",
+    *NUMERIC_FEATURES,
+    "prev_role", "last_tool", "role_transitions",
+]
+_INT_COLS = ("session_id", "turn_count", "role_transitions")
+_NAN_FEATURES = [math.nan] * len(NUMERIC_FEATURES)
+
 
 def token_count_col(text_col: str):
     """Whitespace token count = number of maximal non-whitespace runs;
@@ -102,19 +112,49 @@ def turn_state(
 
 
 def _feature_schema(probe_ts_type: T.DataType) -> T.StructType:
-    fields = [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("ts", probe_ts_type),
-        T.StructField("session_id", T.LongType()),
-        T.StructField("turn_count", T.LongType()),
+    types = {
+        "ts": probe_ts_type,
+        **dict.fromkeys(_INT_COLS, T.LongType()),
+        **dict.fromkeys(NUMERIC_FEATURES, T.DoubleType()),
+    }
+    return T.StructType(
+        [T.StructField(c, types.get(c, T.StringType())) for c in FEATURE_COLS]
+    )
+
+
+def _turn_arrays(state_pdf: pd.DataFrame) -> tuple:
+    """One conversation's turns in (ts, turn_idx) order: the ts, n_chars
+    and n_tokens arrays the kernels scan, and the state arrays ``_row``
+    reads."""
+    st = state_pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
+    return (
+        st["ts"].to_numpy(dtype="datetime64[ns]"),
+        st["n_chars"].to_numpy(dtype=np.float64),
+        st["n_tokens"].to_numpy(dtype=np.float64),
+        (st["session_id"].to_numpy(), st["prev_role"].to_numpy(dtype=object),
+         st["last_tool"].to_numpy(dtype=object), st["role_transitions"].to_numpy()),
+    )
+
+
+def _row(conv_id, probe_ts, k: int, state: tuple, numeric: list | None = None) -> list:
+    """Output row (``FEATURE_COLS`` order) of a probe whose prefix is the
+    first ``k`` turns. ``k == 0`` (no turn at or before the probe) has no
+    state and NaN features."""
+    if k == 0:
+        return [conv_id, probe_ts, None, 0, *_NAN_FEATURES, None, None, None]
+    sess, prev_role, last_tool, transitions = state
+    return [
+        conv_id, probe_ts, int(sess[k - 1]), k,
+        *numeric,
+        prev_role[k - 1], last_tool[k - 1], int(transitions[k - 1]),
     ]
-    fields += [T.StructField(c, T.DoubleType()) for c in NUMERIC_FEATURES]
-    fields += [
-        T.StructField("prev_role", T.StringType()),
-        T.StructField("last_tool", T.StringType()),
-        T.StructField("role_transitions", T.LongType()),
-    ]
-    return T.StructType(fields)
+
+
+def _frame(rows: list) -> pd.DataFrame:
+    out = pd.DataFrame(rows, columns=FEATURE_COLS)
+    for c in _INT_COLS:
+        out[c] = out[c].astype("Int64")
+    return out
 
 
 def compute_probe_features(
@@ -128,29 +168,15 @@ def compute_probe_features(
     :func:`compute_probe_features_dense`, which the tests and ``perfbench``
     check against this function bit for bit.
     """
-    cols = (
-        ["conv_id", "ts", "session_id", "turn_count"]
-        + NUMERIC_FEATURES
-        + ["prev_role", "last_tool", "role_transitions"]
-    )
     if len(probes_pdf) == 0:
-        return pd.DataFrame(columns=cols)
+        return pd.DataFrame(columns=FEATURE_COLS)
     out_rows = []
-    st = state_pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-    ts_arr = st["ts"].to_numpy(dtype="datetime64[ns]")
-    n_chars = st["n_chars"].to_numpy(dtype=np.float64)
-    n_tokens = st["n_tokens"].to_numpy(dtype=np.float64)
-    sess = st["session_id"].to_numpy()
-    prev_role = st["prev_role"].to_numpy(dtype=object)
-    last_tool = st["last_tool"].to_numpy(dtype=object)
-    transitions = st["role_transitions"].to_numpy()
-
-    nan_feats = [math.nan] * len(NUMERIC_FEATURES)
+    ts_arr, n_chars, n_tokens, state = _turn_arrays(state_pdf)
     for probe in probes_pdf.itertuples(index=False):
         conv_id, probe_ts = probe.conv_id, probe.ts
         k = int(np.searchsorted(ts_arr, np.datetime64(probe_ts, "ns"), side="right"))
         if k == 0:
-            out_rows.append([conv_id, probe_ts, None, 0, *nan_feats, None, None, None])
+            out_rows.append(_row(conv_id, probe_ts, 0, state))
             continue
         s = n_chars[:k]
         lc_raw = s[s > 0]
@@ -164,9 +190,7 @@ def compute_probe_features(
         sl_max, sl_avg, sl_std = K.slantness(K.characteristic_contour(lc_raw))
 
         out_rows.append(
-            [
-                conv_id, probe_ts,
-                int(sess[k - 1]), k,
+            _row(conv_id, probe_ts, k, state, [
                 z1, z2, z3, mw,
                 lc["slant"], lc["slant_mse"], lc["local_max_freq"], lc["local_min_freq"],
                 lc["max_slopes_left_avg"], lc["max_slopes_right_avg"],
@@ -175,14 +199,9 @@ def compute_probe_features(
                 uc["max_slopes_left_avg"], uc["max_slopes_right_avg"],
                 uc["min_slopes_left_avg"], uc["min_slopes_right_avg"],
                 sl_max, sl_avg, sl_std,
-                prev_role[k - 1], last_tool[k - 1], int(transitions[k - 1]),
-            ]
+            ])
         )
-    out = pd.DataFrame(out_rows, columns=cols)
-    out["session_id"] = out["session_id"].astype("Int64")
-    out["turn_count"] = out["turn_count"].astype("Int64")
-    out["role_transitions"] = out["role_transitions"].astype("Int64")
-    return out
+    return _frame(out_rows)
 
 
 def compute_probe_features_dense(
@@ -219,21 +238,9 @@ def compute_probe_features_dense(
     - median width is inherently per-probe (whiteness flips with the
       prefix mean) and reuses the exact kernel.
     """
-    cols = (
-        ["conv_id", "ts", "session_id", "turn_count"]
-        + NUMERIC_FEATURES
-        + ["prev_role", "last_tool", "role_transitions"]
-    )
     if len(probes_pdf) == 0:
-        return pd.DataFrame(columns=cols)
-    st = state_pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-    ts_arr = st["ts"].to_numpy(dtype="datetime64[ns]")
-    n_chars = st["n_chars"].to_numpy(dtype=np.float64)
-    n_tokens = st["n_tokens"].to_numpy(dtype=np.float64)
-    sess = st["session_id"].to_numpy()
-    prev_role = st["prev_role"].to_numpy(dtype=object)
-    last_tool = st["last_tool"].to_numpy(dtype=object)
-    transitions = st["role_transitions"].to_numpy()
+        return pd.DataFrame(columns=FEATURE_COLS)
+    ts_arr, n_chars, n_tokens, state = _turn_arrays(state_pdf)
 
     cs = np.concatenate([[0.0], np.cumsum(n_chars)])
 
@@ -288,14 +295,13 @@ def compute_probe_features_dense(
     voted = 0
     step = math.pi / K.SLANT_N_ANGLES
 
-    nan_feats = [math.nan] * len(NUMERIC_FEATURES)
     out_rows: list = [None] * len(probes)
 
     for oi in order:
         k = int(kk[oi])
         conv_id, probe_ts = conv_ids[oi], ts_vals[oi]
         if k == 0:
-            out_rows[oi] = [conv_id, probe_ts, None, 0, *nan_feats, None, None, None]
+            out_rows[oi] = _row(conv_id, probe_ts, 0, state)
             continue
 
         z1, z2, z3 = zmap[k]
@@ -325,20 +331,10 @@ def compute_probe_features_dense(
             sl_avg, sl_std, max_i = 0.0, 0.0, 1
         sl_max = float(np.round(180.0 - math.degrees(max_i * step), 1))
 
-        out_rows[oi] = [
-            conv_id, probe_ts,
-            int(sess[k - 1]), k,
-            z1, z2, z3, mw,
-            *lc_feats,
-            *uc_feats,
-            sl_max, sl_avg, sl_std,
-            prev_role[k - 1], last_tool[k - 1], int(transitions[k - 1]),
-        ]
-    out = pd.DataFrame(out_rows, columns=cols)
-    out["session_id"] = out["session_id"].astype("Int64")
-    out["turn_count"] = out["turn_count"].astype("Int64")
-    out["role_transitions"] = out["role_transitions"].astype("Int64")
-    return out
+        out_rows[oi] = _row(conv_id, probe_ts, k, state, [
+            z1, z2, z3, mw, *lc_feats, *uc_feats, sl_max, sl_avg, sl_std,
+        ])
+    return _frame(out_rows)
 
 
 class _DenseSeries:

@@ -29,8 +29,11 @@ parameters and its upstream stages' keys (``stage_key``). Re-running with
 the same --work skips a completed stage only when its key is unchanged
 (its output is re-read from the checkpoint parquet): a new --gap-seconds
 recomputes turn_state, features and store, a new --probes-per-conv
-recomputes probes, features and store. The final JSON line reports which
-stages resumed vs recomputed plus per-stage wall/rows from the manifest.
+recomputes probes, features and store. The store stage also needs its
+recorded ``store_version`` to be live in the snapshot log; one dropped by
+``FeatureStore.expire_snapshots`` is re-landed as on a clean rerun. The
+final JSON line reports which stages resumed vs recomputed plus per-stage
+wall/rows from the manifest.
 Its ``feature_rows`` is the store's row count at this run's
 ``store_version``, not at the latest version: the two differ only when
 another run appended to the same store afterwards. Row counts come from
@@ -137,12 +140,14 @@ def main(argv: list[str] | None = None) -> dict:
     )
     store_manifest = ckpt.read_manifest("store")
     store_tag = f"{args.run_id}:{keys['store']}:store"
+    live = {s["version"] for s in store.snapshots()}
     if (
         store_manifest is not None
         and store_manifest.get("input_fingerprint") == keys["store"]
+        and store_manifest.get("store_version") in live
     ):
         ckpt.resumed.append("store")
-        version = store_manifest.get("store_version", store.current_version())
+        version = store_manifest["store_version"]
     else:
         import time as _t
 

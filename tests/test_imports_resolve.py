@@ -3,12 +3,15 @@ the benchmark (``perfbench/``) and the driver entry resolves — including
 imports inside functions, which otherwise fail only when someone calls
 them. Pure AST walk, no Spark.
 Each file is parsed with warnings as errors, so an invalid escape sequence
-(a warning today, an error in a later Python) fails here too."""
+(a warning today, an error in a later Python) fails here too. Every package
+module path that ``README.md`` and ``COVERAGE.md`` name exists, so a
+retired module cannot leave its doc rows behind."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 import warnings
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -100,3 +103,31 @@ def test_oracles_only_for_registered_queries():
     import __spark_entry__ as entry
 
     assert set(entry.oracle_sql()) <= set(entry.queries())
+
+
+# a package module path in prose: ``operators/asof.py``, optionally under
+# ``featureextraction_spark/``, or a brace list ``operators/{rolling,cohorts}.py``
+_DOC_PATH = re.compile(
+    r"(?<![\w/.])(?:featureextraction_spark/)?"
+    r"((?:functions|operators|oracle|plans|sources|streaming)/[\w{},]+\.py)"
+)
+
+
+def _expand(path: str) -> list[str]:
+    m = re.fullmatch(r"(.*)\{([^}]*)\}(.*)", path)
+    return [m[1] + x + m[3] for x in m[2].split(",")] if m else [path]
+
+
+def test_doc_module_paths_exist():
+    missing = []
+    for doc in ("README.md", "COVERAGE.md"):
+        with open(os.path.join(ROOT, doc)) as f:
+            text = f.read()
+        for m in _DOC_PATH.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            missing += [
+                f"{doc}:{line}: {p}"
+                for p in _expand(m[1])
+                if not os.path.isfile(os.path.join(ROOT, PKG, p))
+            ]
+    assert not missing, "docs name missing modules:\n" + "\n".join(missing)

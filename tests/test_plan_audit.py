@@ -422,21 +422,6 @@ def test_recency_family_single_exchange_single_sort(tr_parquet):
     assert plan.count("Sort ") <= 1 or plan.count("[Sort") <= 1, plan
 
 
-def test_funnel_single_exchange(spark, tr_parquet):
-    """Running conditional-min windows + the closing same-key groupBy
-    reuse one HashPartitioning(key) — no second shuffle, no self-joins."""
-    from featureextraction_spark.operators.funnel import funnel_steps
-
-    out = funnel_steps(
-        tr_parquet, steps=("user", "assistant", "tool"),
-        by="conv_id", role="role", tie="turn_idx",
-    )
-    plan = plan_of(out)
-    assert count_exchanges(plan) == 1, plan
-    assert "BroadcastNestedLoop" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_range_join_is_equi_join(spark):
     """The bucketized rewrite must plan as a hash equi-join — never
     BroadcastNestedLoop/cartesian (what a raw BETWEEN theta join does)."""
@@ -841,25 +826,6 @@ def test_skyline_no_unpartitioned_window_over_data(spark):
         if "windowspecdefinition" in ln and "__b" not in ln:
             assert "__by" in ln or "__sufy" in ln, ln
     assert "CartesianProduct" not in plan
-
-
-def test_interp_resample_single_key_exchange_family(spark):
-    from featureextraction_spark.operators.interpolate import interp_resample
-
-    df = spark.createDataFrame(
-        [(i % 5, i, (i * 37) % 1000, float(i % 11)) for i in range(200)],
-        "user_id long, event_id long, t long, value double",
-    )
-    out = interp_resample(
-        df, value="value", key="user_id", t_ms=F.col("t"),
-        order_id="event_id", grid_ms=100,
-    )
-    plan = plan_of(out)
-    # all windows are key-partitioned; no Python in the plan
-    for ln in plan.splitlines():
-        if "windowspecdefinition" in ln:
-            assert "user_id" in ln, ln
-    assert "BatchEvalPython" not in plan
 
 
 def test_markov_alphabet_is_inplan_broadcast(spark):

@@ -1,102 +1,14 @@
-"""Round-4 additions (twenty-seventh batch): Mann–Kendall / Theil–Sen
-trend stats and the exact two-sample KS test — each vs a verbatim naive
-python oracle."""
+"""Round-4 additions (twenty-seventh batch): the exact two-sample KS
+test vs a verbatim naive python oracle."""
 
 from __future__ import annotations
 
-import math
 import random
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.drift import ks_test
-from featureextraction_spark.operators.trend import trend_stats
-
-
-def _trunc_div(a: int, b: int) -> int:
-    # Spark `div` and DuckDB `//` both truncate toward zero
-    return int(a / b) if a * b >= 0 else -(-a // b) if b > 0 else None
-
-
-def test_trend_stats_vs_naive(spark):
-    rng = random.Random(139)
-    rows = []
-    for u in range(20):
-        t = rng.randrange(0, 100)
-        n = rng.randint(2, 25)
-        for i in range(n):
-            rows.append((u, i, t, round(rng.uniform(0, 50), 3)))
-            t += rng.randrange(0, 40)  # zero gaps: same-second pairs
-    # a cleanly increasing user: mk_s == n_pairs, positive slope
-    rows += [(99, i, i * 10, float(i)) for i in range(12)]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, t long, value double"
-    )
-    got = {
-        r.user_id: (r.n, r.n_pairs, r.n_slopes, r.mk_s, r.med2, r.theil_sen)
-        for r in trend_stats(
-            df, value="value", key="user_id", t_s=F.col("t"),
-            order_id="event_id",
-        ).collect()
-    }
-    series = {}
-    for u, eid, t, v in rows:
-        series.setdefault(u, []).append((t, eid, int(v * 1000 + 0.5)))
-    for u, sv in series.items():
-        sv.sort()
-        qs = [(t, q) for t, _, q in sv]
-        n = len(qs)
-        mk = npairs = 0
-        slopes = []
-        for i in range(n):
-            for j in range(i + 1, n):
-                npairs += 1
-                dq = qs[j][1] - qs[i][1]
-                mk += (dq > 0) - (dq < 0)
-                dt = qs[j][0] - qs[i][0]
-                if dt > 0:
-                    slopes.append(_trunc_div(dq * 1_000_000, dt))
-        slopes.sort()
-        m = len(slopes)
-        med2 = (
-            slopes[(m + 1) // 2 - 1] + slopes[(m + 2) // 2 - 1]
-            if m
-            else None
-        )
-        exp_ts = med2 / 2e9 if med2 is not None else None
-        gn, gp, gs, gmk, gmed, gts = got[u]
-        assert (gn, gp, gs, gmk) == (n, npairs, m, mk), u
-        assert gmed == med2, u
-        if exp_ts is None:
-            assert gts is None
-        else:
-            assert gts == pytest.approx(exp_ts, abs=1e-9)
-    assert got[99][3] == got[99][1]  # strictly increasing: S == pairs
-    assert got[99][5] > 0
-
-
-def test_trend_stats_negative_slope_div_truncation(spark):
-    # decreasing series with awkward gaps: exercises negative integer
-    # division agreement (trunc-toward-zero on both engines)
-    rows = [(1, i, t, v) for i, (t, v) in enumerate(
-        [(0, 10.0), (3, 9.999), (7, 5.5), (20, 0.001)]
-    )]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, t long, value double"
-    )
-    r = trend_stats(
-        df, value="value", key="user_id", t_s=F.col("t"), order_id="event_id"
-    ).collect()[0]
-    assert r.mk_s == -6 and r.n_slopes == 6
-    slopes = sorted(
-        int((qb - qa) * 1_000_000 / (tb - ta))
-        for i, (ta, qa) in enumerate([(0, 10000), (3, 9999), (7, 5500), (20, 1)])
-        for (tb, qb) in [(0, 10000), (3, 9999), (7, 5500), (20, 1)][i + 1:]
-    )
-    m = len(slopes)
-    assert r.med2 == slopes[(m + 1) // 2 - 1] + slopes[(m + 2) // 2 - 1]
 
 
 def test_ks_test_vs_naive(spark):

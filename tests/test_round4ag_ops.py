@@ -1,16 +1,13 @@
 """Round-4 additions (twenty-eighth batch): fixed-round quantized
-PageRank, the sweep-line concurrency peak, seasonal-naive forecast
-skill, Flesch readability — each vs a verbatim naive python oracle."""
+PageRank, the sweep-line concurrency peak, Flesch readability — each vs
+a verbatim naive python oracle."""
 
 from __future__ import annotations
 
 import random
 import re
 
-from pyspark.sql import functions as F
-
 from featureextraction_spark.functions.textstats import readability_features
-from featureextraction_spark.operators.forecast import forecast_eval
 from featureextraction_spark.operators.graph import pagerank_fixed
 from featureextraction_spark.operators.intervals import max_concurrency
 
@@ -110,49 +107,6 @@ def test_max_concurrency_plan_has_no_single_partition_exchange(spark):
         .toString()
     )
     assert "Exchange SinglePartition" not in plan, plan
-
-
-def test_forecast_eval_vs_naive(spark):
-    rng = random.Random(139)
-    rows = set()
-    for g in ["x", "y"]:
-        for _ in range(80):
-            rows.add((g, rng.randrange(0, 60)))
-    daily = [(g, d, rng.randrange(1, 50)) for g, d in sorted(rows)]
-    df = spark.createDataFrame(daily, "grp string, day long, y long")
-    got = {
-        r.grp: (
-            r.n_days, r.n_eval, r.sae, r.n_naive, r.sae_naive, r.mae, r.mase
-        )
-        for r in forecast_eval(df, season=7).collect()
-    }
-    series = {}
-    for g, d, y in daily:
-        series.setdefault(g, {})[d] = y
-    for g, s in series.items():
-        n_eval = sae = n_naive = sae_naive = 0
-        for d, y in s.items():
-            if d - 7 in s:
-                n_eval += 1
-                sae += abs(y - s[d - 7])
-            if d - 1 in s:
-                n_naive += 1
-                sae_naive += abs(y - s[d - 1])
-        mae = sae / n_eval if n_eval else None
-        mase = (
-            (sae * n_naive) / (n_eval * sae_naive)
-            if n_eval and sae_naive
-            else None
-        )
-        assert got[g] == (len(s), n_eval, sae, n_naive, sae_naive, mae, mase)
-
-
-def test_forecast_eval_perfect_seasonality_beats_naive(spark):
-    # strict period-7 series: seasonal-naive error is 0, so MASE = 0
-    daily = [("p", d, 10 + (d % 7)) for d in range(28)]
-    df = spark.createDataFrame(daily, "grp string, day long, y long")
-    row = forecast_eval(df, season=7).collect()[0]
-    assert row.sae == 0 and row.mase == 0.0 and row.n_eval == 21
 
 
 def _naive_readability(text):

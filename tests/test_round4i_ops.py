@@ -1,7 +1,6 @@
-"""Round-4 additions (ninth batch) — one-pass funnel, cohort retention,
-bucketized range join, seasonal hour-of-day baseline — vs naive python
-oracles, incl. the range join vs a brute-force theta scan and the
-funnel's strict-ordering edge cases."""
+"""Round-4 additions (ninth batch) — cohort retention, bucketized range
+join, seasonal hour-of-day baseline — vs naive python oracles, incl. the
+range join vs a brute-force theta scan."""
 
 from __future__ import annotations
 
@@ -18,7 +17,6 @@ from featureextraction_spark.operators.cohorts import (
     cohort_retention,
     seasonal_baseline,
 )
-from featureextraction_spark.operators.funnel import funnel_steps
 from featureextraction_spark.operators.intervals import bucketed_range_join
 
 US = 1_000_000
@@ -65,42 +63,6 @@ def events(spark):
 
 def _us(ts) -> int:
     return int(ts.replace(tzinfo=dt.timezone.utc).timestamp() * US)
-
-
-def _naive_funnel(rows, steps=("view", "click", "purchase")):
-    by_u = defaultdict(list)
-    for r in rows:
-        by_u[r.user_id].append(r)
-    out = {}
-    for u, rs in by_u.items():
-        rs = sorted(rs, key=lambda r: (_us(r.ts), r.event_id))
-        runs = [None] * len(steps)  # earliest valid completion per step
-        for r in rs:
-            us = _us(r.ts)
-            for k, s in enumerate(steps):
-                if r.event_type != s:
-                    continue
-                if k == 0 or (runs[k - 1] is not None and runs[k - 1] < us):
-                    if runs[k] is None or us < runs[k]:
-                        runs[k] = us
-        out[u] = runs
-    return out
-
-
-def test_funnel_vs_naive_and_tie_no_chain(spark, events):
-    df, rows = events
-    got = {r.user_id: r for r in funnel_steps(df, ("view", "click", "purchase")).collect()}
-    exp = _naive_funnel(rows)
-    assert set(got) == set(exp)
-    for u, runs in exp.items():
-        g = got[u]
-        assert (g.step0_us, g.step1_us, g.step2_us) == tuple(runs), u
-        assert g.steps_completed == sum(1 for x in runs if x is not None)
-        if runs[0] is not None and runs[1] is not None:
-            assert g.gap1_us == runs[1] - runs[0]
-    # the same-µs tie user: view seen, click must not chain
-    g = got[777]
-    assert g.step0_us is not None and g.step1_us is None and g.steps_completed == 1
 
 
 def test_cohort_retention_vs_naive(spark, events):

@@ -1,18 +1,15 @@
 """Round-4 additions (twenty-fifth batch): sorted-neighborhood
-blocking, grid linear interpolation, k-anonymity audit — each vs a
-verbatim naive python oracle."""
+blocking and the k-anonymity audit — each vs a verbatim naive python
+oracle."""
 
 from __future__ import annotations
 
 import random
-from collections import defaultdict
 
-import pytest
 from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.curation import k_anonymity_audit
 from featureextraction_spark.operators.dedup import sorted_neighborhood_pairs
-from featureextraction_spark.operators.interpolate import interp_resample
 
 
 def test_sorted_neighborhood_pairs_vs_naive(spark):
@@ -36,61 +33,6 @@ def test_sorted_neighborhood_pairs_vs_naive(spark):
     assert got == sorted(exp)
     # candidate volume is n*w bounded
     assert len(got) <= len(rows) * w
-
-
-def test_interp_resample_vs_naive(spark):
-    rng = random.Random(113)
-    H = 100  # grid step in ms for the test
-    rows = []
-    for u in range(15):
-        t = rng.randrange(0, 50)
-        for i in range(rng.randint(1, 30)):
-            rows.append((u, i, t, round(rng.uniform(0, 20), 3)))
-            t += rng.randrange(1, 300)
-    # duplicate-timestamp tie: max event id wins
-    rows += [(77, 1, 100, 1.0), (77, 2, 100, 3.0), (77, 3, 400, 5.0)]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, t long, value double"
-    )
-    out = interp_resample(
-        df, value="value", key="user_id", t_ms=F.col("t"),
-        order_id="event_id", grid_ms=H,
-    )
-    got = {
-        (r.user_id, r.t_ms): (r.interp_num, r.interp_den, r.interp)
-        for r in out.collect()
-    }
-    # naive: collapse, then for each aligned grid point in [ceil(lo), floor(hi)]
-    series = defaultdict(dict)
-    for u, eid, t, v in rows:
-        q = int(v * 1000 + 0.5)
-        cur = series[u].get(t)
-        if cur is None or eid > cur[0]:
-            series[u][t] = (eid, q)
-    exp = {}
-    for u, d in series.items():
-        ts = sorted(d)
-        lo, hi = ts[0], ts[-1]
-        g = -(-lo // H) * H
-        while g <= (hi // H) * H:
-            prev_t = max(t for t in ts if t <= g)
-            next_t = min(t for t in ts if t >= g)
-            pq, nq = d[prev_t][1], d[next_t][1]
-            if next_t > prev_t:
-                num = pq * (next_t - g) + nq * (g - prev_t)
-                den = next_t - prev_t
-            else:
-                num, den = pq, 1
-            exp[(u, g)] = (num, den)
-            g += H
-    assert set(got) == set(exp)
-    for key, (num, den) in exp.items():
-        assert got[key][:2] == (num, den), key
-        assert got[key][2] == pytest.approx(num / den)
-    # the tie user: grid at 100 hits the max-event-id observation (q=3000)
-    assert got[(77, 100)] == (3000, 1, 3000.0)
-    # and interior points interpolate between 3000 and 5000
-    assert got[(77, 200)][2] == pytest.approx(3000 + 2000 * 100 / 300)
 
 
 def test_k_anonymity_audit_vs_naive(spark):

@@ -5,7 +5,8 @@ every stage (no recompute, no double-append); changing the input
 fingerprint forces recompute, also for a Hive-partitioned input directory;
 changing a stage parameter recomputes that stage and everything downstream
 of it; a crash between any stage's data commit and its manifest commit
-reruns to the store a clean run leaves."""
+reruns to the store a clean run leaves; a store version dropped by
+``expire_snapshots`` is re-landed, not resumed."""
 
 from __future__ import annotations
 
@@ -169,6 +170,29 @@ def _store(spark, work):
     from featureextraction_spark.sources.feature_store import FeatureStore
 
     return FeatureStore(spark, os.path.join(work, "feature_store"), key_cols=["conv_id", "ts"])
+
+
+def test_resume_after_store_version_expired(spark, input_path, tmp_path):
+    """A rerun whose store manifest names a snapshot that
+    ``expire_snapshots`` dropped resumes the three checkpoint stages and
+    lands the features again, as a clean rerun would, instead of failing
+    on the dead version."""
+    import run_pipeline
+
+    work = str(tmp_path / "work6")
+    base = ["--input", input_path, "--work", work, "--cpus", "4"]
+    first = run_pipeline.main(base + ["--run-id", "r1"])
+    second = run_pipeline.main(base + ["--run-id", "r2", "--probes-per-conv", "2"])
+    assert (first["store_version"], second["store_version"]) == (0, 1)
+    store = _store(spark, work)
+    store.expire_snapshots(keep_last=1)
+    assert [s["version"] for s in store.snapshots()] == [1]
+
+    rerun = run_pipeline.main(base + ["--run-id", "r1"])
+    assert rerun["resumed"] == ["features", "probes", "turn_state"]
+    assert rerun["recomputed"] == ["store"]
+    assert rerun["store_version"] == 2
+    assert rerun["feature_rows"] == store.count(rerun["store_version"])
 
 
 @pytest.fixture(scope="module")
