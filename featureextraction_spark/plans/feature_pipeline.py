@@ -78,7 +78,8 @@ FEATURE_COLS = [
     "prev_role", "last_tool", "role_transitions",
 ]
 _INT_COLS = ("session_id", "turn_count", "role_transitions")
-_NAN_FEATURES = [math.nan] * len(NUMERIC_FEATURES)
+# the columns after (conv_id, ts) of a probe with no turn at or before it
+_EMPTY_STATE = [None, 0, *[math.nan] * len(NUMERIC_FEATURES), None, None, None]
 
 
 def token_count_col(text_col: str):
@@ -136,12 +137,9 @@ def _turn_arrays(state_pdf: pd.DataFrame) -> tuple:
     )
 
 
-def _row(conv_id, probe_ts, k: int, state: tuple, numeric: list | None = None) -> list:
+def _row(conv_id, probe_ts, k: int, state: tuple, numeric: list) -> list:
     """Output row (``FEATURE_COLS`` order) of a probe whose prefix is the
-    first ``k`` turns. ``k == 0`` (no turn at or before the probe) has no
-    state and NaN features."""
-    if k == 0:
-        return [conv_id, probe_ts, None, 0, *_NAN_FEATURES, None, None, None]
+    first ``k >= 1`` turns."""
     sess, prev_role, last_tool, transitions = state
     return [
         conv_id, probe_ts, int(sess[k - 1]), k,
@@ -176,7 +174,7 @@ def compute_probe_features(
         conv_id, probe_ts = probe.conv_id, probe.ts
         k = int(np.searchsorted(ts_arr, np.datetime64(probe_ts, "ns"), side="right"))
         if k == 0:
-            out_rows.append(_row(conv_id, probe_ts, 0, state))
+            out_rows.append([conv_id, probe_ts, *_EMPTY_STATE])
             continue
         s = n_chars[:k]
         lc_raw = s[s > 0]
@@ -301,7 +299,7 @@ def compute_probe_features_dense(
         k = int(kk[oi])
         conv_id, probe_ts = conv_ids[oi], ts_vals[oi]
         if k == 0:
-            out_rows[oi] = _row(conv_id, probe_ts, 0, state)
+            out_rows[oi] = [conv_id, probe_ts, *_EMPTY_STATE]
             continue
 
         z1, z2, z3 = zmap[k]

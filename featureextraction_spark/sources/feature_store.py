@@ -77,7 +77,8 @@ class FeatureStore:
     struct as JSON (Iceberg keeps the table schema in metadata the same way).
     Reads union the referenced dirs with that struct, so they infer nothing
     from the files; a snapshot without one (an older log) is read by
-    inference. ``version`` is monotonically increasing.
+    inference. ``version`` is monotonically increasing. ``find_version_by_tag``
+    reads the optional ``tag`` and ``expired_tags``.
     """
 
     def __init__(self, spark: SparkSession, path: str, key_cols: list[str]):
@@ -136,10 +137,11 @@ class FeatureStore:
         Tags make appends idempotent across job restarts: a writer that
         crashed AFTER committing but BEFORE recording its own bookkeeping
         can look its commit up instead of appending the same rows again
-        (Iceberg analog: snapshot summary properties).
+        (Iceberg analog: snapshot summary properties), also after
+        ``expire_snapshots`` dropped the commit's snapshot.
         """
         for s in reversed(self.snapshots()):
-            if s.get("tag") == tag:
+            if s.get("tag") == tag or tag in s.get("expired_tags", ()):
                 return s["version"]
         return None
 
@@ -242,11 +244,16 @@ class FeatureStore:
         )
 
     def expire_snapshots(self, keep_last: int = 1) -> int:
-        """Drop unreferenced file groups (Iceberg ``expire_snapshots``)."""
+        """Drop unreferenced file groups (Iceberg ``expire_snapshots``).
+        Every operation keeps the rows of the snapshot before it, so the
+        oldest kept snapshot holds the dropped snapshots' rows and takes
+        over their tags as ``expired_tags``."""
         snaps = self.snapshots()
         if len(snaps) <= keep_last:
             return 0
         kept = snaps[-keep_last:]
+        tags = (t for s in snaps[:-keep_last] for t in (*s.get("expired_tags", ()), s.get("tag")))
+        kept[0]["expired_tags"] = [t for t in tags if t]
         live = {g for s in kept for g in s["files"]}
         removed = 0
         data_dir = os.path.join(self.path, "data")

@@ -30,8 +30,10 @@ the same --work skips a completed stage only when its key is unchanged
 (its output is re-read from the checkpoint parquet): a new --gap-seconds
 recomputes turn_state, features and store, a new --probes-per-conv
 recomputes probes, features and store. The store stage also needs its
-recorded ``store_version`` to be live in the snapshot log; one dropped by
-``FeatureStore.expire_snapshots`` is re-landed as on a clean rerun. The
+recorded ``store_version`` to be live in the snapshot log; when
+``FeatureStore.expire_snapshots`` has dropped it, the run's store tag
+resolves to the oldest kept snapshot, which still holds the run's rows, and
+the stage adopts that version instead of appending the rows again. The
 final JSON line reports which stages resumed vs recomputed plus per-stage
 wall/rows from the manifest.
 Its ``feature_rows`` is the store's row count at this run's
@@ -153,7 +155,8 @@ def main(argv: list[str] | None = None) -> dict:
 
         t0 = _t.perf_counter()
         # idempotent under restart: if a previous attempt committed the
-        # snapshot but crashed before recording the manifest, adopt that
+        # snapshot but crashed before recording the manifest, or its
+        # snapshot has since expired, adopt the live snapshot holding that
         # commit instead of appending the same feature rows again
         version = store.find_version_by_tag(store_tag)
         adopted = version is not None

@@ -131,6 +131,17 @@ def test_read_unknown_version_names_live_versions(spark, store):
     assert store.read(version=1).count() == 2
 
 
+def test_expired_snapshot_tags_resolve_to_oldest_kept(spark, store):
+    for i, key in enumerate("abc"):
+        store.append(_batch(spark, [(key, T0, float(i))]), tag=key)
+    store.expire_snapshots(keep_last=2)
+    assert [store.find_version_by_tag(t) for t in "abc"] == [1, 1, 2]
+    store.expire_snapshots(keep_last=1)
+    assert [store.find_version_by_tag(t) for t in "abc"] == [2, 2, 2]
+    assert store.find_version_by_tag("d") is None
+    assert store.count(2) == 3
+
+
 def test_read_schema_same_with_and_without_recorded_struct(spark, store):
     """Every snapshot records its Spark struct, and a read with it gives the
     schema a read by inference gives (a log without structs), for every

@@ -27,9 +27,9 @@ DAY_US = 24 * HOUR_US
 
 @pytest.fixture(scope="module")
 def events(spark):
-    """Adversarial: same-µs view/click ties (must NOT chain), funnels
-    completed out of order, users missing steps, week-boundary first
-    events, hour-boundary timestamps, negative values."""
+    """Adversarial: zero-gap ties (and a same-µs view/click pair for user
+    777), users spanning one to several weeks, week-boundary first events,
+    hour-boundary timestamps, negative values."""
     rng = random.Random(99)
     rows = []
     eid = 0
@@ -50,7 +50,7 @@ def events(spark):
                 )
             )
             eid += 1
-    # exact tie: view and click at the identical µs — click must NOT chain
+    # exact tie: view and click at the identical µs
     tie = base + dt.timedelta(seconds=999)
     rows.append(Row(event_id=eid, user_id=777, event_type="view", ts=tie, value=1.0))
     rows.append(

@@ -6,7 +6,8 @@ fingerprint forces recompute, also for a Hive-partitioned input directory;
 changing a stage parameter recomputes that stage and everything downstream
 of it; a crash between any stage's data commit and its manifest commit
 reruns to the store a clean run leaves; a store version dropped by
-``expire_snapshots`` is re-landed, not resumed."""
+``expire_snapshots`` is adopted from the kept snapshot that holds its rows,
+not appended again."""
 
 from __future__ import annotations
 
@@ -174,9 +175,9 @@ def _store(spark, work):
 
 def test_resume_after_store_version_expired(spark, input_path, tmp_path):
     """A rerun whose store manifest names a snapshot that
-    ``expire_snapshots`` dropped resumes the three checkpoint stages and
-    lands the features again, as a clean rerun would, instead of failing
-    on the dead version."""
+    ``expire_snapshots`` dropped resumes every stage: it adopts the kept
+    snapshot that holds the run's rows, instead of failing on the dead
+    version or appending those rows a second time."""
     import run_pipeline
 
     work = str(tmp_path / "work6")
@@ -188,11 +189,25 @@ def test_resume_after_store_version_expired(spark, input_path, tmp_path):
     store.expire_snapshots(keep_last=1)
     assert [s["version"] for s in store.snapshots()] == [1]
 
+    kept = store.snapshots()
+
     rerun = run_pipeline.main(base + ["--run-id", "r1"])
-    assert rerun["resumed"] == ["features", "probes", "turn_state"]
-    assert rerun["recomputed"] == ["store"]
-    assert rerun["store_version"] == 2
-    assert rerun["feature_rows"] == store.count(rerun["store_version"])
+    assert rerun["resumed"] == ["features", "probes", "store", "turn_state"]
+    assert rerun["recomputed"] == []
+    assert store.snapshots() == kept  # nothing appended
+    assert rerun["store_version"] == 1
+    assert rerun["feature_rows"] == store.count(1) == second["feature_rows"]
+
+    def keys(df):
+        return sorted(tuple(r) for r in df.select("conv_id", "ts").collect())
+
+    # each run's probe rows are in the store once
+    landed = [
+        keys(spark.read.parquet(os.path.join(work, "ckpt", run, "features", "data")))
+        for run in ("r1", "r2")
+    ]
+    assert keys(store.read()) == sorted(landed[0] + landed[1])
+    assert len(landed[0]) == first["feature_rows"]
 
 
 @pytest.fixture(scope="module")
