@@ -261,14 +261,6 @@ def calibration_bins(
             F.sum("__sq").cast("long").alias("sum_score_q"),
         )
     )
-    return calibration_from_bin_counts(per)
-
-
-def calibration_from_bin_counts(per: DataFrame) -> DataFrame:
-    """Close a (bin, n, n_pos, sum_score_q) count table into the
-    reliability readout — factored out because the per-bin sums are a
-    MERGEABLE state: the streaming twin accumulates per-batch partials
-    (summed per bin) and closes with this exact function."""
     return per.select(
         "bin", "n", "n_pos", "sum_score_q",
         (F.col("n_pos").cast("double") / F.col("n").cast("double")).alias(
@@ -355,15 +347,6 @@ def roc_auc_by(
             (F.count(F.lit(1)) - F.sum("__y")).cast("long").alias("n_neg"),
         )
     )
-    return auc_from_group_score_counts(per)
-
-
-def auc_from_group_score_counts(per: DataFrame) -> DataFrame:
-    """Close a (grp, sq, n_pos, n_neg) distinct-score count table into the
-    per-slice AUC readout — the tail of :func:`roc_auc_by`, factored out
-    because the count table is a MERGEABLE state (sums are commutative):
-    the streaming twin accumulates per-batch partials and closes with
-    this exact function, so batch and stream share one code path."""
     w = (
         Window.partitionBy("grp")
         .orderBy("sq")
@@ -1301,15 +1284,6 @@ def anova_f(df: DataFrame, group: str, value: str) -> DataFrame:
         F.sum(x).cast("long").alias("sg"),
         F.sum(x * x).cast("long").alias("qg"),
     )
-    return anova_from_group_moments(per)
-
-
-def anova_from_group_moments(per: DataFrame) -> DataFrame:
-    """Close the one-way ANOVA from a per-group moment table
-    ``(g, ng, sg, qg)`` — the shared tail between :func:`anova_f` and
-    the streaming twin (``streaming.evalagg.read_anova``): the moments
-    are ADDITIVE integers, so micro-batch partials merge commutatively
-    and batch/stream equality is structural."""
     agg = per.agg(
         F.sum("ng").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("k"),

@@ -569,14 +569,6 @@ def heavy_hitters(
         .groupBy("__s", "item")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    return heavy_hitters_from_shard_counts(shard_counts, k)
-
-
-def heavy_hitters_from_shard_counts(shard_counts: DataFrame, k: int) -> DataFrame:
-    """Close a (__s, item, cnt) exact shard-count table into the MG(k)
-    summary + certificate — the shared tail of :func:`heavy_hitters` and
-    ``streaming.sketchagg``'s live twin (one closing code path, so twin
-    equality is structural)."""
     per_shard = mg_compress(shard_counts, "item", "cnt", k, group="__s")
     # per-shard offsets taken from the RANKED counts, not the surviving
     # summary rows: a shard whose k+1 top counts all tie prunes to empty,

@@ -25,7 +25,9 @@ semantics so every test exercises the same API the cluster path ships.
 
 Commit protocol: data files are written first, then the log is replaced via
 atomic rename — a half-written snapshot is never visible (single-writer;
-Iceberg's optimistic-concurrency swap is the multi-writer analog).
+Iceberg's optimistic-concurrency swap is the multi-writer analog). Expiry
+runs the other way round: the shorter log first, then the file groups it
+no longer names.
 """
 
 from __future__ import annotations
@@ -118,11 +120,14 @@ class FeatureStore:
         if tag is not None:
             snap["tag"] = tag
         snaps.append(snap)
+        self._write_log(snaps)
+        return version
+
+    def _write_log(self, snaps: list[dict]) -> None:
         tmp = self._log_path() + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(snaps, f, indent=1)
         os.replace(tmp, self._log_path())  # atomic commit point
-        return version
 
     def _write_group(self, df: DataFrame) -> str:
         group = uuid.uuid4().hex
@@ -191,7 +196,7 @@ class FeatureStore:
         """
         snaps = self.snapshots()
         if not snaps:
-            return self.append(df)
+            return self.append(df, tag=tag)
         current = self.read()
         schema = snaps[-1]["schema"]
         if new_cols is None:
@@ -244,16 +249,24 @@ class FeatureStore:
         )
 
     def expire_snapshots(self, keep_last: int = 1) -> int:
-        """Drop unreferenced file groups (Iceberg ``expire_snapshots``).
-        Every operation keeps the rows of the snapshot before it, so the
-        oldest kept snapshot holds the dropped snapshots' rows and takes
-        over their tags as ``expired_tags``."""
+        """Keep the last ``keep_last`` snapshots and drop every file group
+        they do not reference (Iceberg ``expire_snapshots``); returns the
+        number of groups removed. Every operation keeps the rows of the
+        snapshot before it, so the oldest kept snapshot holds the dropped
+        snapshots' rows and takes over their tags as ``expired_tags``.
+
+        The shorter log is committed before any group is removed, so a
+        crash leaves every logged version readable; the groups it leaves
+        behind are unreferenced, and the next call removes them.
+        """
+        if keep_last < 1:
+            raise ValueError(f"expire_snapshots: keep_last must be >= 1, got {keep_last}")
         snaps = self.snapshots()
-        if len(snaps) <= keep_last:
-            return 0
         kept = snaps[-keep_last:]
-        tags = (t for s in snaps[:-keep_last] for t in (*s.get("expired_tags", ()), s.get("tag")))
-        kept[0]["expired_tags"] = [t for t in tags if t]
+        if len(snaps) > keep_last:
+            tags = (t for s in snaps[:-keep_last] for t in (*s.get("expired_tags", ()), s.get("tag")))
+            kept[0]["expired_tags"] = [t for t in tags if t]
+            self._write_log(kept)
         live = {g for s in kept for g in s["files"]}
         removed = 0
         data_dir = os.path.join(self.path, "data")
@@ -261,10 +274,6 @@ class FeatureStore:
             if g not in live:
                 shutil.rmtree(os.path.join(data_dir, g))
                 removed += 1
-        tmp = self._log_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(kept, f, indent=1)
-        os.replace(tmp, self._log_path())
         return removed
 
 

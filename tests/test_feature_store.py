@@ -142,6 +142,79 @@ def test_expired_snapshot_tags_resolve_to_oldest_kept(spark, store):
     assert store.count(2) == 3
 
 
+def _crash_once(monkeypatch, module, name):
+    """Make ``module.name`` raise on its next call, then behave again."""
+    real = getattr(module, name)
+    calls = []
+
+    def crash(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise OSError(f"injected crash in {name}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, crash)
+    return calls
+
+
+@pytest.mark.parametrize("crash_at", ["log swap", "group removal"])
+def test_expire_crash_leaves_logged_versions_readable(spark, store, monkeypatch, crash_at):
+    """A crash inside ``expire_snapshots`` leaves every version the log
+    still names readable, row for row as before, and the next expiry
+    leaves no unreferenced group in ``data/``."""
+    import shutil
+
+    store.append(_batch(spark, [("a", T0, 1.0)]), tag="t0")
+    store.merge_columns(
+        spark.createDataFrame(
+            pd.DataFrame([("a", T0, 7.0)], columns=["conv_id", "ts", "f2"]),
+            schema="conv_id string, ts timestamp, f2 double",
+        )
+    )
+    store.append(spark.createDataFrame(
+        pd.DataFrame([("b", T1, 2.0, 3.0)], columns=["conv_id", "ts", "f1", "f2"]),
+        schema="conv_id string, ts timestamp, f1 double, f2 double",
+    ))
+    before = {v: sorted(store.read(version=v).collect()) for v in (0, 1, 2)}
+    if crash_at == "log swap":
+        _crash_once(monkeypatch, os, "replace")
+    else:
+        _crash_once(monkeypatch, shutil, "rmtree")
+    with pytest.raises(OSError, match="injected crash"):
+        store.expire_snapshots(keep_last=1)
+    for s in store.snapshots():
+        v = s["version"]
+        assert sorted(store.read(version=v).collect()) == before[v]
+        assert store.count(v) == len(before[v])
+    store.expire_snapshots(keep_last=1)
+    assert [s["version"] for s in store.snapshots()] == [2]
+    live = set(store.snapshots()[0]["files"])
+    assert set(os.listdir(os.path.join(store.path, "data"))) == live
+    assert sorted(store.read().collect()) == before[2]
+    assert store.find_version_by_tag("t0") == 2
+
+
+def test_expire_keep_last_below_one_rejected(spark, store):
+    """``keep_last < 1`` is refused and leaves the log, carried tags
+    included, byte for byte as it was."""
+    for i, key in enumerate("abc"):
+        store.append(_batch(spark, [(key, T0, float(i))]), tag=key)
+    store.expire_snapshots(keep_last=1)
+    with open(store._log_path(), "rb") as f:
+        log = f.read()
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            store.expire_snapshots(keep_last=bad)
+    with open(store._log_path(), "rb") as f:
+        assert f.read() == log
+    assert [store.find_version_by_tag(t) for t in "abc"] == [2, 2, 2]
+
+
+def test_merge_columns_on_empty_store_keeps_tag(spark, store):
+    assert store.merge_columns(_batch(spark, [("a", T0, 1.0)]), tag="first") == 0
+    assert store.find_version_by_tag("first") == 0
+
+
 def test_read_schema_same_with_and_without_recorded_struct(spark, store):
     """Every snapshot records its Spark struct, and a read with it gives the
     schema a read by inference gives (a log without structs), for every

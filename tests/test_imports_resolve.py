@@ -4,8 +4,9 @@ imports inside functions, which otherwise fail only when someone calls
 them. Pure AST walk, no Spark.
 Each file is parsed with warnings as errors, so an invalid escape sequence
 (a warning today, an error in a later Python) fails here too. Every package
-module path that ``README.md`` and ``COVERAGE.md`` name exists, so a
-retired module cannot leave its doc rows behind."""
+module path that ``README.md`` and ``COVERAGE.md`` name exists, and every
+``module.py::name`` they name is a top-level definition of that module, so a
+retired module or function cannot leave its doc rows behind."""
 
 from __future__ import annotations
 
@@ -106,10 +107,13 @@ def test_oracles_only_for_registered_queries():
 
 
 # a package module path in prose: ``operators/asof.py``, optionally under
-# ``featureextraction_spark/``, or a brace list ``operators/{rolling,cohorts}.py``
+# ``featureextraction_spark/``, or a brace list ``operators/{rolling,cohorts}.py``,
+# optionally followed by a definition in it: ``operators/asof.py::asof_join``
+# (``::Class.method`` names the class)
 _DOC_PATH = re.compile(
     r"(?<![\w/.])(?:featureextraction_spark/)?"
     r"((?:functions|operators|oracle|plans|sources|streaming)/[\w{},]+\.py)"
+    r"(?:::(\w+))?"
 )
 
 
@@ -125,9 +129,10 @@ def test_doc_module_paths_exist():
             text = f.read()
         for m in _DOC_PATH.finditer(text):
             line = text.count("\n", 0, m.start()) + 1
-            missing += [
-                f"{doc}:{line}: {p}"
-                for p in _expand(m[1])
-                if not os.path.isfile(os.path.join(ROOT, PKG, p))
-            ]
-    assert not missing, "docs name missing modules:\n" + "\n".join(missing)
+            for p in _expand(m[1]):
+                path = os.path.join(ROOT, PKG, p)
+                if not os.path.isfile(path):
+                    missing.append(f"{doc}:{line}: {p}")
+                elif m[2] and m[2] not in _top_level_names(path):
+                    missing.append(f"{doc}:{line}: {p}::{m[2]}")
+    assert not missing, "docs name missing modules or definitions:\n" + "\n".join(missing)
