@@ -6,6 +6,7 @@ the reference's writer SHOULD have had (its own TODO, writer.py:47)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -145,16 +146,12 @@ def test_expired_snapshot_tags_resolve_to_oldest_kept(spark, store):
 def _crash_once(monkeypatch, module, name):
     """Make ``module.name`` raise on its next call, then behave again."""
     real = getattr(module, name)
-    calls = []
 
     def crash(*args, **kwargs):
-        calls.append(args)
-        if len(calls) == 1:
-            raise OSError(f"injected crash in {name}")
-        return real(*args, **kwargs)
+        monkeypatch.setattr(module, name, real)
+        raise OSError(f"injected crash in {name}")
 
     monkeypatch.setattr(module, name, crash)
-    return calls
 
 
 @pytest.mark.parametrize("crash_at", ["log swap", "group removal"])
@@ -162,8 +159,6 @@ def test_expire_crash_leaves_logged_versions_readable(spark, store, monkeypatch,
     """A crash inside ``expire_snapshots`` leaves every version the log
     still names readable, row for row as before, and the next expiry
     leaves no unreferenced group in ``data/``."""
-    import shutil
-
     store.append(_batch(spark, [("a", T0, 1.0)]), tag="t0")
     store.merge_columns(
         spark.createDataFrame(
