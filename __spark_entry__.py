@@ -32,10 +32,6 @@ from featureextraction_spark.operators.runlength import run_length_encode  # noq
 from featureextraction_spark.operators.sessionize import sessionize  # noqa: E402
 from featureextraction_spark.operators.transitions import transition_count  # noqa: E402
 from featureextraction_spark.functions.time import epoch_us, epoch_seconds  # noqa: E402
-from featureextraction_spark.operators.contour import (  # noqa: E402
-    ols_aggregate,
-    with_characteristic_contour,
-)
 from featureextraction_spark.plans.feature_pipeline import (  # noqa: E402
     NUMERIC_FEATURES as PIPELINE_NUMERIC_FEATURES,
     point_in_time_features,
@@ -232,40 +228,6 @@ def q_backfill_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_asof_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 third physical strategy: broadcast + range predicate + max_by
-    (the small-data-side path) — same DuckDB oracle as the plain and
-    salted forms proves all three strategies compute one relation."""
-    from featureextraction_spark.operators.asof import asof_join_broadcast
-
-    ev = _load(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max_by("value", "event_id").alias("click_value"),
-            F.max("event_id").alias("click_event_id"),
-        )
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "event_id", "ts")
-    res = asof_join_broadcast(
-        purchases,
-        clicks,
-        on="ts",
-        by="user_id",
-        tie="click_event_id",
-        value_cols=["click_value"],
-        matched_cols=True,
-    )
-    return res.select(
-        "user_id",
-        "event_id",
-        epoch_us(res, "ts").alias("ts_us"),
-        epoch_us(res, "matched_ts").alias("matched_ts_us"),
-        F.round("click_value", 4).alias("click_value"),
-    )
-
-
 def q_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 transition counts: event_type switches per user along (ts, event_id)."""
     ev = _load(spark, sf_dir, "events")
@@ -384,14 +346,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("count_order"),
         )
     )
-
-
-def q_contour_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3+A10 relational: clamped-cumsum contour + OLS slant via regr_*
-    aggregates — pure expressions, zero Python, whole-stage codegen."""
-    ev = _load(spark, sf_dir, "events")
-    c = with_characteristic_contour(ev, "value", key="user_id", order=("ts", "event_id"))
-    return ols_aggregate(c, "contour", "contour_x", key="user_id", ndigits=6)
 
 
 def _events_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4700,14 +4654,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "backfill_salted": q_backfill_salted,
         "asof_join": q_asof_join,
         "asof_join_salted": q_asof_join_salted,
-        "asof_join_broadcast": q_asof_join_broadcast,
         "transitions": q_transitions,
         "run_length": q_run_length,
         "membership_join": q_membership_join,
         "column_merge": q_column_merge,
         "categorise": q_categorise,
         "pricing_summary": q_pricing_summary,
-        "contour_ols": q_contour_ols,
         "feature_families": q_feature_families,
         "feature_vectors": q_feature_vectors,
         "feature_vectors_oracled": q_feature_vectors_oracled,
@@ -6409,48 +6361,6 @@ def oracle_sql() -> dict[str, str]:
             FROM keyed k LEFT JOIN splits s USING (line_id)
             WHERE coalesce(s.type, 'unknown') = 'train'
         """,
-        "contour_ols": f"""
-            WITH s AS (
-                SELECT user_id,
-                       row_number() OVER ({win}) - 1 AS x,
-                       coalesce(sign(value - lag(value) OVER ({win})), 0)
-                         + CASE WHEN row_number() OVER ({win}) = 1 THEN value ELSE 0 END AS inc
-                FROM events
-            ), c0 AS (
-                SELECT user_id, x,
-                       sum(inc) OVER (PARTITION BY user_id ORDER BY x
-                                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS raw
-                FROM s
-            ), c AS (
-                SELECT user_id, x,
-                       raw - least(0, min(raw) OVER (PARTITION BY user_id)) AS contour
-                FROM c0
-            ),
-            -- raw sums are exact integers in float64 (integer contour), so
-            -- the closed form below is accumulation-order independent and
-            -- bit-identical to the engine's ols_aggregate (same expression
-            -- shape); regr_* streaming-float aggregates are NOT (r2 flake)
-            a AS (
-                SELECT user_id, count(*)::DOUBLE AS n,
-                       sum(x::DOUBLE) AS sx, sum(contour) AS sy,
-                       sum(x::DOUBLE * contour) AS sxy,
-                       sum(x::DOUBLE * x::DOUBLE) AS sxx,
-                       sum(contour * contour) AS syy
-                FROM c GROUP BY user_id
-            )
-            SELECT user_id,
-                   round(CASE WHEN (n * sxx - sx * sx) <> 0
-                              THEN (n * sxy - sx * sy) / (n * sxx - sx * sx)
-                         END, 6) AS slant,
-                   round(CASE WHEN n > 2 AND (n * sxx - sx * sx) <> 0
-                              THEN ((n * syy - sy * sy)
-                                    - (n * sxy - sx * sy) * (n * sxy - sx * sy)
-                                      / (n * sxx - sx * sx))
-                                   / (n * (n - 2))
-                         END, 6) AS slant_mse,
-                   CAST(n AS BIGINT) AS n_points
-            FROM a
-        """,
         "pricing_summary": """
             SELECT l_returnflag, l_linestatus,
                    round(sum(l_quantity), 2) AS sum_qty,
@@ -6468,7 +6378,6 @@ def oracle_sql() -> dict[str, str]:
     # external gate proves the skew strategies compute the same relation
     base["sessionize_salted"] = base["sessionize"]
     base["backfill_salted"] = base["backfill"]
-    base["asof_join_broadcast"] = base["asof_join"]
     base["feature_families"] = _feature_families_oracle_sql()
     base["feature_vectors_oracled"] = _feature_vectors_oracle_sql()
     base["components_2d"] = _components_2d_oracle_sql()

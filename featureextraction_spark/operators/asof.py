@@ -10,19 +10,16 @@ The reference has no as-of join; its closest analogs are the memoized
 ``contours[-1] + sign(...)`` carry-forward
 (``src/preparation/features/contour.py:87``).
 
-Three physical strategies, one logical semantics (all tested equal):
+Two physical strategies, one logical semantics (tested equal):
 
-- ``asof_join``           — ``forward_fill`` of the data state over the
-                            union of data and probe rows. One shuffle on
-                            the entity key; sorted within partitions ⇒
-                            physically a sorted merge. Default.
-- ``asof_join_salted``    — ``forward_fill_salted`` over the same union:
-                            filled per (key, time-bucket), with the shared
-                            cross-bucket carry table, so no task ever holds
-                            a whole mega-conversation. The north-rule skew
-                            path.
-- ``asof_join_broadcast`` — small data side: broadcast + theta join +
-                            ``max_by``. No shuffle of the probe side at all.
+- ``asof_join``        — ``forward_fill`` of the data state over the union
+                         of data and probe rows. One shuffle on the entity
+                         key; sorted within partitions ⇒ physically a
+                         sorted merge. Default.
+- ``asof_join_salted`` — ``forward_fill_salted`` over the same union:
+                         filled per (key, time-bucket), with the shared
+                         cross-bucket carry table, so no task ever holds a
+                         whole mega-conversation. The north-rule skew path.
 
 The data row's matched values travel inside ONE struct so that a data row
 whose value column is genuinely NULL is still "the match" (last-ignorenulls
@@ -139,42 +136,6 @@ def asof_join_salted(
     return _unpack(out_rows, probes.columns, value_cols, prefix, matched_cols)
 
 
-def asof_join_broadcast(
-    probes: DataFrame,
-    data: DataFrame,
-    on: str = "ts",
-    by: str = "conv_id",
-    tie: str = "turn_idx",
-    value_cols: Sequence[str] | None = None,
-    prefix: str = "",
-    allow_exact_matches: bool = True,
-    matched_cols: bool = True,
-) -> DataFrame:
-    """Small-data-side as-of: broadcast + range predicate + ``max_by``.
-
-    Left join keeps no-match probes (NULL state). Probe identity preserved
-    via a transient unique id, so duplicate probe rows survive.
-    """
-    value_cols = list(value_cols) if value_cols is not None else [
-        c for c in data.columns if c not in (by, on, tie)
-    ]
-    pid = probes.withColumn("__pid", F.monotonically_increasing_id())
-    d = data.select(
-        F.col(by).alias("__d_by"),
-        F.col(on).alias("__d_on"),
-        F.col(tie).cast("long").alias("__d_tie"),
-        _state_struct(on, tie, value_cols).alias("__state"),
-    )
-    cmp_ = F.col("__d_on") <= F.col(on) if allow_exact_matches else F.col("__d_on") < F.col(on)
-    joined = pid.join(
-        F.broadcast(d), (F.col(by) == F.col("__d_by")) & cmp_, "left"
-    )
-    best = joined.groupBy("__pid", *[F.col(c) for c in probes.columns]).agg(
-        F.max_by("__state", F.struct(F.col("__d_on"), F.col("__d_tie"))).alias("__state")
-    )
-    return _unpack(best, probes.columns, value_cols, prefix, matched_cols)
-
-
 def apply_staleness(
     out: DataFrame,
     on: str = "ts",
@@ -188,8 +149,8 @@ def apply_staleness(
     ``tolerance_us`` microseconds before the probe is EXPIRED — its value
     columns (and matched-ts/turn bookkeeping) become NULL, exactly as if
     no data row existed, plus a ``{prefix}fresh`` 0/1 flag (0 covers both
-    "expired" and "never matched"). A pure projection over any of the
-    three as-of strategies' output — the tolerance adds zero shuffles.
+    "expired" and "never matched"). A pure projection over either as-of
+    strategy's output — the tolerance adds zero shuffles.
 
     The comparison is on epoch µs (NTZ-safe) and INCLUSIVE at the bound:
     a match exactly ``tolerance_us`` old is still fresh, mirroring the

@@ -2,7 +2,7 @@
 
 The multi-feature generalisation of the reference's univariate
 contour OLS (``src/preparation/features.py`` slope fits, and this
-repo's ``operators/contour.py``): fit y = b0 + b1·x1 + b2·x2 per group
+repo's ``series_kernels.ols_fit``): fit y = b0 + b1·x1 + b2·x2 per group
 exactly, with Cramer's rule on the 2×2 centered normal matrix.
 
 Bit-portability contract (the ``welch_t2`` / ``corr_matrix`` one):
@@ -144,7 +144,8 @@ def spearman_corr(
 
     Public-knowledge semantics (Spearman 1904, average-rank tie
     handling); no reference counterpart (the reference fits are OLS —
-    ``src/preparation/features.py`` — mirrored by ``contour_ols``).
+    ``src/preparation/features.py`` — mirrored by
+    ``series_kernels.ols_fit``).
     """
     from pyspark.sql import Window
 

@@ -32,6 +32,7 @@ no longer names.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -125,9 +126,14 @@ class FeatureStore:
 
     def _write_log(self, snaps: list[dict]) -> None:
         tmp = self._log_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(snaps, f, indent=1)
-        os.replace(tmp, self._log_path())  # atomic commit point
+        try:
+            with open(tmp, "w") as f:
+                json.dump(snaps, f, indent=1)
+            os.replace(tmp, self._log_path())  # atomic commit point
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
 
     def _write_group(self, df: DataFrame) -> str:
         group = uuid.uuid4().hex
@@ -257,7 +263,9 @@ class FeatureStore:
 
         The shorter log is committed before any group is removed, so a
         crash leaves every logged version readable; the groups it leaves
-        behind are unreferenced, and the next call removes them.
+        behind are unreferenced, and the next call removes them. It also
+        removes log temp files: with a single writer, one found here was
+        left by a kill between a log write and its rename.
         """
         if keep_last < 1:
             raise ValueError(f"expire_snapshots: keep_last must be >= 1, got {keep_last}")
@@ -267,6 +275,9 @@ class FeatureStore:
             tags = (t for s in snaps[:-keep_last] for t in (*s.get("expired_tags", ()), s.get("tag")))
             kept[0]["expired_tags"] = [t for t in tags if t]
             self._write_log(kept)
+        for n in os.listdir(self.path):
+            if n.startswith(_LOG + ".tmp."):
+                os.remove(os.path.join(self.path, n))
         live = {g for s in kept for g in s["files"]}
         removed = 0
         data_dir = os.path.join(self.path, "data")

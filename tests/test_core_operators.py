@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from featureextraction_spark.operators import asof as asof_ops
 from featureextraction_spark.operators.backfill import forward_fill, forward_fill_salted
@@ -182,16 +181,6 @@ def test_asof_join_salted_equals_plain(spark, transcripts, probes):
                 asof_ops.asof_join_salted(probes, transcripts, bucket_seconds=bucket, **kw)
             )
             _check_asof(salted, plain)
-
-
-def test_asof_join_broadcast_equals_plain(spark, transcripts, probes):
-    small = transcripts.filter(F.col("conv_id").isin("conv_00003", "conv_00004"))
-    small_probes = probes.filter(F.col("conv_id").isin("conv_00003", "conv_00004"))
-    plain = _collect(asof_ops.asof_join(small_probes, small, value_cols=["role", "text"]))
-    bcast = _collect(
-        asof_ops.asof_join_broadcast(small_probes, small, value_cols=["role", "text"])
-    )
-    _check_asof(bcast, plain)
 
 
 def test_asof_null_value_preserved(spark):

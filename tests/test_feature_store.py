@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import signal
+import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -39,6 +42,7 @@ def _batch(spark, rows):
     )
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 T0 = pd.Timestamp("2024-01-01 00:00:00")
 T1 = pd.Timestamp("2024-01-01 01:00:00")
 T2 = pd.Timestamp("2024-01-01 02:00:00")
@@ -187,6 +191,53 @@ def test_expire_crash_leaves_logged_versions_readable(spark, store, monkeypatch,
     assert set(os.listdir(os.path.join(store.path, "data"))) == live
     assert sorted(store.read().collect()) == before[2]
     assert store.find_version_by_tag("t0") == 2
+
+
+def _log_temp_files(store):
+    return [n for n in os.listdir(store.path) if ".json.tmp." in n]
+
+
+def test_failed_log_swap_removes_its_temp_file(spark, store, monkeypatch):
+    """A log write whose rename fails removes its temp file and leaves the
+    log byte for byte as it was."""
+    store.append(_batch(spark, [("a", T0, 1.0)]))
+    store.append(_batch(spark, [("b", T1, 2.0)]))
+    with open(store._log_path(), "rb") as f:
+        log = f.read()
+    _crash_once(monkeypatch, os, "replace")
+    with pytest.raises(OSError, match="injected crash"):
+        store.expire_snapshots(keep_last=1)
+    with open(store._log_path(), "rb") as f:
+        assert f.read() == log
+    assert _log_temp_files(store) == []
+
+
+def test_expire_sweeps_log_temp_file_left_by_a_kill(spark, store):
+    """A process killed between writing the new log and renaming it leaves
+    the old log intact and its temp file behind; the next expiry removes
+    the temp file and commits as a clean run would."""
+    store.append(_batch(spark, [("a", T0, 1.0)]), tag="t0")
+    store.append(_batch(spark, [("b", T1, 2.0)]))
+    with open(store._log_path(), "rb") as f:
+        log = f.read()
+    killed = subprocess.run(
+        [sys.executable, "-c", (
+            "import os, signal, sys\n"
+            "from featureextraction_spark.sources.feature_store import FeatureStore\n"
+            "os.replace = lambda *a: os.kill(os.getpid(), signal.SIGKILL)\n"
+            "FeatureStore(None, sys.argv[1], ['conv_id', 'ts']).expire_snapshots(1)\n"
+        ), store.path],
+        cwd=ROOT,
+    )
+    assert killed.returncode == -signal.SIGKILL
+    with open(store._log_path(), "rb") as f:
+        assert f.read() == log
+    assert len(_log_temp_files(store)) == 1
+    store.expire_snapshots(keep_last=1)
+    assert _log_temp_files(store) == []
+    assert [s["version"] for s in store.snapshots()] == [1]
+    assert store.find_version_by_tag("t0") == 1
+    assert store.count() == 2
 
 
 def test_expire_keep_last_below_one_rejected(spark, store):

@@ -6,7 +6,9 @@ Each file is parsed with warnings as errors, so an invalid escape sequence
 (a warning today, an error in a later Python) fails here too. Every package
 module path that ``README.md`` and ``COVERAGE.md`` name exists, and every
 ``module.py::name`` they name is a top-level definition of that module, so a
-retired module or function cannot leave its doc rows behind."""
+retired module or function cannot leave its doc rows behind. No top-level
+import in the package, the scripts or the driver entry goes unread, so it
+cannot leave an import behind either."""
 
 from __future__ import annotations
 
@@ -48,11 +50,21 @@ def _module_of(path: str) -> str:
     return rel[: -len(".__init__")] if rel.endswith(".__init__") else rel
 
 
-def _top_level_names(path: str) -> set[str]:
-    names: set[str] = set()
-    todo = list(_parse(path).body)
+def _top_level(tree: ast.Module):
+    """The module's statements, with those of top-level ``if``/``try``."""
+    todo = list(tree.body)
     while todo:
         n = todo.pop()
+        if isinstance(n, (ast.If, ast.Try)):
+            todo += n.body + n.orelse + getattr(n, "finalbody", [])
+            todo += [s for h in getattr(n, "handlers", []) for s in h.body]
+        else:
+            yield n
+
+
+def _top_level_names(path: str) -> set[str]:
+    names: set[str] = set()
+    for n in _top_level(_parse(path)):
         if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             names.add(n.name)
         elif isinstance(n, (ast.Assign, ast.AnnAssign)):
@@ -60,9 +72,6 @@ def _top_level_names(path: str) -> set[str]:
             names |= {x.id for t in targets for x in ast.walk(t) if isinstance(x, ast.Name)}
         elif isinstance(n, (ast.Import, ast.ImportFrom)):
             names |= {(a.asname or a.name).split(".")[0] for a in n.names}
-        elif isinstance(n, (ast.If, ast.Try)):
-            todo += n.body + n.orelse + getattr(n, "finalbody", [])
-            todo += [s for h in getattr(n, "handlers", []) for s in h.body]
     return names
 
 
@@ -136,3 +145,38 @@ def test_doc_module_paths_exist():
                 elif m[2] and m[2] not in _top_level_names(path):
                     missing.append(f"{doc}:{line}: {p}::{m[2]}")
     assert not missing, "docs name missing modules or definitions:\n" + "\n".join(missing)
+
+
+_NOQA_F401 = re.compile(r"#\s*noqa:[^#\n]*\bF401\b")
+
+
+def _unused_imports(path: str):
+    """(line, name) for each top-level import in ``path`` whose bound name
+    the module never reads."""
+    tree = _parse(path)
+    with open(path) as f:
+        lines = f.read().splitlines()
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for n in _top_level(tree):
+        if not isinstance(n, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+            continue
+        if any(_NOQA_F401.search(x) for x in lines[n.lineno - 1 : n.end_lineno]):
+            continue
+        for a in n.names:
+            name = a.asname or a.name.split(".")[0]
+            if name not in read:
+                yield n.lineno, name
+
+
+def test_no_unused_top_level_imports():
+    """``__init__.py`` files re-export, so they are not checked; a line
+    marked ``# noqa: F401`` is a deliberate re-export too."""
+    unused = []
+    for path in _sources():
+        rel = os.path.relpath(path, ROOT)
+        if rel.startswith("perfbench") or os.path.basename(path) == "__init__.py":
+            continue
+        unused += [f"{rel}:{line}: {name}" for line, name in _unused_imports(path)]
+    assert not unused, "unused imports:\n" + "\n".join(unused)

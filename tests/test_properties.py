@@ -12,7 +12,7 @@ import datetime as dt
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -48,6 +48,12 @@ row_strategy = st.lists(
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(data=row_strategy, probes=row_strategy)
+@example(
+    # two identical probe rows, a probe before the first turn, one at a
+    # data row's ts, and one four empty 3600 s buckets after the last row
+    data=[(0, 0, 7200), (0, 1, 7300), (0, 2, 9000)],
+    probes=[(0, 5, 8000), (0, 5, 8000), (0, 6, 100), (0, 7, 7300), (0, 8, 27000)],
+)
 def test_asof_never_leaks_and_salted_equal(spark, data, probes):
     d = _events(spark, data)
     p = _events(spark, probes).select("conv_id", "turn_idx", "ts")
@@ -56,6 +62,7 @@ def test_asof_never_leaks_and_salted_equal(spark, data, probes):
         matched_cols=True,
     )
     pdf = out.toPandas()
+    assert len(pdf) == len(probes)  # one probe row out per probe row in
     # zero temporal leakage: every matched ts is <= its probe ts
     m = pdf.dropna(subset=["matched_ts"])
     assert (m["matched_ts"] <= m["ts"]).all()

@@ -422,83 +422,6 @@ def doc_stream_dir(spark, tmp_path_factory):
     return str(base)
 
 
-def test_streaming_line_dedup_matches_batch(spark, doc_stream_dir):
-    """The stateless line-dedup projection on a stream is row-equal to the
-    batch explode+groupBy formulation — same Σ(count−1) duplication counts
-    and char-mass fractions, including empty/NULL documents."""
-    import pandas as pd
-
-    from featureextraction_spark.functions.textstats import line_dedup_features
-    from featureextraction_spark.streaming.scoring import streaming_line_dedup
-
-    batch = spark.read.parquet(doc_stream_dir)
-    got = _run_stream(
-        spark,
-        doc_stream_dir,
-        batch,
-        lambda src: streaming_line_dedup(src),
-        "append",
-        "line_dedup_stream",
-    ).sort_values("doc_id").reset_index(drop=True)
-    want = (
-        line_dedup_features(batch)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-    # the fixture actually exercises duplication: some doc repeats a line
-    assert (got["dup_lines"] > 0).any()
-
-
-def test_streaming_unigram_lm_matches_batch(spark, doc_stream_dir):
-    """Unigram-LM scoring against a broadcast batch-fit snapshot is equal
-    to the batch operator with the same reference slice: integer columns
-    (n_tokens, oov_tokens, lm_num) and the single-division mean_tok_prob
-    bit-equal; avg_logprob/ppl tolerance-equal (multi-term float sums are
-    accumulation-order-dependent — the batch driver query's own
-    contract)."""
-    import numpy as np
-    import pandas as pd
-
-    from featureextraction_spark.functions.textstats import unigram_lm_score
-    from featureextraction_spark.streaming.scoring import (
-        streaming_unigram_lm,
-        unigram_lm_snapshot,
-    )
-
-    batch = spark.read.parquet(doc_stream_dir)
-    ref = F.col("doc_id") % 4 == 0
-    snapshot = unigram_lm_snapshot(batch.filter(ref)).persist()
-    snapshot.count()
-    got = _run_stream(
-        spark,
-        doc_stream_dir,
-        batch,
-        lambda src: streaming_unigram_lm(src, snapshot),
-        "append",
-        "unigram_lm_stream",
-    ).sort_values("doc_id").reset_index(drop=True)
-    want = (
-        unigram_lm_score(batch, ref=ref)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    for c in ["n_tokens", "oov_tokens", "lm_num"]:
-        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
-    assert (got["mean_tok_prob"].to_numpy() == want["mean_tok_prob"].to_numpy()).all()
-    np.testing.assert_allclose(
-        got["avg_logprob"].to_numpy(), want["avg_logprob"].to_numpy(), rtol=1e-12
-    )
-    np.testing.assert_allclose(
-        got["ppl"].to_numpy(), want["ppl"].to_numpy(), rtol=1e-12
-    )
-    # OOV actually exercised: non-reference docs carry unseen tokens
-    assert (got["oov_tokens"] > 0).any()
-    snapshot.unpersist()
-
-
 def test_streaming_chunking_matches_batch(spark, doc_stream_dir):
     """chunk_documents is map-only (split → sequence → explode → slice),
     so the BATCH operator runs on a live stream unchanged — append mode,
@@ -559,94 +482,6 @@ def test_streaming_quality_classifier_matches_batch(spark, doc_stream_dir):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
-
-
-def test_streaming_hashed_features_matches_batch(spark, doc_stream_dir):
-    """The dense hashing-trick projection on a stream equals the batch
-    explode+groupBy sparse formulation: exploding the dense vectors and
-    dropping zero buckets reproduces exactly the batch rows (same md5
-    bucket/sign bits), including empty/NULL documents (no rows)."""
-    from featureextraction_spark.operators.encoding import hashed_features
-    from featureextraction_spark.streaming.scoring import (
-        streaming_hashed_features,
-    )
-
-    batch = spark.read.parquet(doc_stream_dir)
-    got = _run_stream(
-        spark,
-        doc_stream_dir,
-        batch,
-        lambda src: streaming_hashed_features(src),
-        "append",
-        "hashed_stream",
-    )
-    sparse = {}
-    for _, r in got.iterrows():
-        for b, (v, c) in enumerate(zip(r["hash_vec"], r["hash_cnt"])):
-            if c:
-                sparse[(r["doc_id"], b)] = (v, c)
-    want = {
-        (r.doc_id, r.bucket): (r.val, r.n_tokens)
-        for r in hashed_features(batch).collect()
-    }
-    assert sparse == want
-    # total token counts agree with the dense n_tokens column too
-    per_doc = {r.doc_id: r["n_tokens"] for _, r in got.iterrows()}
-    for (d, _), (_, c) in want.items():
-        per_doc[d] -= c
-    assert all(v == 0 for v in per_doc.values())
-
-
-def test_streaming_standard_scale_matches_batch(spark, stream_dir, batch_df):
-    """Stream-side z-transform against the batch-fit snapshot is
-    bit-equal to the batch operator: same integer moments, same
-    double-spelled transform, grouped train split replicated via the
-    same md5."""
-    import pandas as pd
-
-    from featureextraction_spark.operators.encoding import standard_scale
-    from featureextraction_spark.streaming.scoring import (
-        scale_snapshot,
-        streaming_standard_scale,
-    )
-    from pyspark.sql import functions as F
-
-    def with_val(df):
-        return df.withColumn(
-            "value", F.length(F.coalesce(F.col("text"), F.lit(""))).cast("double")
-        ).withColumn(
-            "row_id", F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
-        )
-
-    b = with_val(batch_df)
-    want = {
-        r.row_id: (r.vq, r.n_train, r.sum_q, r.sum_sq_q, r.z)
-        for r in standard_scale(
-            b, value="value", id_col="row_id", group_id="conv_id",
-            train_frac=0.8, seed=42,
-        ).collect()
-    }
-    train = standard_scale(
-        b, value="value", id_col="row_id", group_id="conv_id",
-        train_frac=0.8, seed=42,
-    ).filter("split = 'train'").select("row_id")
-    snap = scale_snapshot(b.join(train, "row_id"), value="value")
-    snap.persist().count()
-    got = _run_stream(
-        spark,
-        stream_dir,
-        batch_df,
-        lambda src: streaming_standard_scale(
-            with_val(src), snap, value="value", id_col="row_id"
-        ),
-        "append",
-        "scale_stream",
-    )
-    assert len(got) == len(want)
-    for _, r in got.iterrows():
-        w = want[r["row_id"]]
-        assert (r["vq"], r["n_train"], r["sum_q"], r["sum_sq_q"]) == w[:4]
-        assert r["z"] == w[4]  # bit-equal, same IEEE ops
 
 
 def test_streaming_sketches_match_batch(spark, doc_stream_dir):
