@@ -1772,24 +1772,6 @@ def q_hll_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort-retention triangle: users cohorted by integer week
-    (µs div — no calendar functions) of first event; distinct-actives
-    per (cohort, offset) reduced to triples BEFORE counting; fraction is
-    one integer÷integer division."""
-    from featureextraction_spark.operators.cohorts import cohort_retention
-
-    ev = _load(spark, sf_dir, "events")
-    out = cohort_retention(ev)
-    return out.select(
-        "cohort_week",
-        "week_offset",
-        "active_users",
-        "cohort_users",
-        _hround6(F.col("retained_frac")).alias("retained_frac"),
-    )
-
-
 RANGE_JOIN_WINDOW_US = 1_800 * 1_000_000  # 30 min post-purchase window
 
 
@@ -1815,25 +1797,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         clicks, purch, by="user_id", bucket_us=RANGE_JOIN_WINDOW_US
     )
     return out.select("user_id", "purchase_id", "click_id", "us", "start_us")
-
-
-def q_seasonal_z(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day seasonal baseline per event type (integer µs `div`
-    hours, exact milli-moment fit — the standard_scale arithmetic) and a
-    per-event residual z through the nudged rounding; degenerate groups
-    (n≤1 or zero variance) yield NULL."""
-    from featureextraction_spark.operators.cohorts import seasonal_baseline
-
-    ev = _load(spark, sf_dir, "events")
-    out = seasonal_baseline(ev)
-    return out.select(
-        "event_id",
-        "event_type",
-        "hour",
-        "vq",
-        "n",
-        _hround6(F.col("seasonal_z")).alias("seasonal_z"),
-    )
 
 
 def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1886,7 +1849,6 @@ def q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-granularity ROLLUP report over (event_type, hour-of-day):
     ONE Expand + one map-combinable aggregate for all three levels;
     grouping() flags disambiguate subtotal rows; exact quantized sums."""
-    from featureextraction_spark.operators.cohorts import DAY_US, HOUR_US
     from featureextraction_spark.operators.olap import rollup_counts
     from featureextraction_spark.operators.rolling import quantize_q6
 
@@ -1921,6 +1883,8 @@ def q_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenize_to_ids(docs, top_k=500)
 
 
+HOUR_US = 3_600 * 1_000_000
+DAY_US = 24 * HOUR_US
 EMBARGO_US = 86_400 * 1_000_000  # 1-day purge gap
 
 
@@ -2661,19 +2625,6 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_merge_table(docs, n_merges=12)
 
 
-def q_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier risk table over user lifetimes (right-censored at a
-    7-day horizon before dataset end): one key collapse + tiny-table
-    two-phase cumsum; d/n_risk integers, hazard the closing division."""
-    from featureextraction_spark.operators.cohorts import survival_table
-
-    ev = _load(spark, sf_dir, "events")
-    out = survival_table(ev, censor_horizon_days=7)
-    return out.select(
-        "t", "n_risk", "d", "c", _hround6(F.col("hazard")).alias("hazard")
-    )
-
-
 def q_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-phrase retrieval via positional postings chained by
     (doc, pos+i) equi-joins — only the phrase terms' postings shuffle."""
@@ -3134,32 +3085,6 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ols2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate OLS per return flag: extendedprice (dollars) on
-    quantity and discount (pct) — nine exact BIGINT sufficient stats,
-    Cramer's-rule betas closed in a fixed double tree."""
-    from featureextraction_spark.operators.regression import bivariate_ols
-
-    li = _load(spark, sf_dir, "lineitem")
-    out = bivariate_ols(
-        li,
-        y="l_extendedprice",
-        x1="l_quantity",
-        x2="l_discount",
-        by="l_returnflag",
-        qy=0.01,
-        q1=1.0,
-        q2=100.0,
-    )
-    return out.select(
-        "grp", "n", "s1", "s2", "sy", "s11", "s22", "s12", "s1y", "s2y",
-        "a11", "a12", "a22", "b1", "b2",
-        _hround6(F.col("beta1")).alias("beta1"),
-        _hround6(F.col("beta2")).alias("beta2"),
-        _hround6(F.col("intercept_q")).alias("intercept_q"),
-    )
-
-
 def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The keep-one apply step: near-dup clusters (same exact-Jaccard
     pair set as dedup_clusters) resolved to canonical docs — longest
@@ -3224,27 +3149,6 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rd_den",
         _hround6(F.col("flesch")).alias("flesch"),
         _hround6(F.col("fk_grade")).alias("fk_grade"),
-    )
-
-
-def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-lang Spearman rank correlation (average ranks) between doc
-    size and whitespace-token count — the monotone-association audit;
-    doubled ranks keep every sufficient statistic BIGINT-exact, rho is
-    one fixed num/(sqrt*sqrt) double tree."""
-    from featureextraction_spark.functions.textstats import token_count
-    from featureextraction_spark.operators.regression import spearman_corr
-
-    docs = _load(spark, sf_dir, "documents")
-    d = docs.select(
-        "lang",
-        F.col("n_chars").cast("double").alias("x"),
-        token_count(F.col("text")).cast("double").alias("y"),
-    )
-    out = spearman_corr(d, x="x", y="y", by="lang")
-    return out.select(
-        "grp", "n", "rho_num", "dx", "dy",
-        _hround6(F.col("rho")).alias("rho"),
     )
 
 
@@ -4734,9 +4638,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cms_estimate": q_cms_estimate,
         "hll_registers": q_hll_registers,
         "hll_card": q_hll_card,
-        "cohort_retention": q_cohort_retention,
         "range_join": q_range_join,
-        "seasonal_z": q_seasonal_z,
         "asof_forward": q_asof_forward,
         "scd2_build": q_scd2_build,
         "rollup_counts": q_rollup_counts,
@@ -4773,7 +4675,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scd2_lookup": q_scd2_lookup,
         "profile": q_profile,
         "expectations": q_expectations,
-        "survival": q_survival,
         "phrase_match": q_phrase_match,
         "clustering": q_clustering,
         "bpe_train": q_bpe_train,
@@ -4807,12 +4708,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ri_audit": q_ri_audit,
         "welch": q_welch,
         "corr_matrix": q_corr_matrix,
-        "ols2": q_ols2,
         "canonical_docs": q_canonical_docs,
         "pagerank": q_pagerank,
         "concurrency": q_concurrency,
         "readability": q_readability,
-        "spearman": q_spearman,
         "link_pred": q_link_pred,
         "cross_corr": q_cross_corr,
         "ari": q_ari,
@@ -4877,51 +4776,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _round4ag_oracle_sql() -> dict[str, str]:
-    """Oracles for the rank-correlation / link-prediction / CCF reads."""
-    tokens_re = "'[^ \\t\\n\\r\\f\\x0B]+'"
-    peers_x = ("count(*) OVER (PARTITION BY grp ORDER BY xq "
-               "RANGE BETWEEN CURRENT ROW AND CURRENT ROW)")
-    peers_y = ("count(*) OVER (PARTITION BY grp ORDER BY yq "
-               "RANGE BETWEEN CURRENT ROW AND CURRENT ROW)")
+    """Oracles for the link-prediction / CCF reads."""
     return {
-        "spearman": f"""
-            WITH d AS (
-                SELECT lang AS grp,
-                       CAST(n_chars AS BIGINT) AS xq,
-                       CAST(length(regexp_extract_all(text, {tokens_re}))
-                            AS BIGINT) AS yq
-                FROM documents
-            ),
-            r AS (
-                SELECT grp,
-                       CAST(2 * rank() OVER (PARTITION BY grp ORDER BY xq)
-                            + {peers_x} - 1 AS BIGINT) AS rx,
-                       CAST(2 * rank() OVER (PARTITION BY grp ORDER BY yq)
-                            + {peers_y} - 1 AS BIGINT) AS ry
-                FROM d
-            ),
-            g AS (
-                SELECT grp, CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(rx) AS BIGINT) AS srx,
-                       CAST(sum(ry) AS BIGINT) AS sry,
-                       CAST(sum(rx * ry) AS BIGINT) AS sxy,
-                       CAST(sum(rx * rx) AS BIGINT) AS sxx,
-                       CAST(sum(ry * ry) AS BIGINT) AS syy
-                FROM r GROUP BY grp
-            )
-            SELECT grp, n,
-                   CAST(n * sxy - srx * sry AS BIGINT) AS rho_num,
-                   CAST(n * sxx - srx * srx AS BIGINT) AS dx,
-                   CAST(n * syy - sry * sry AS BIGINT) AS dy,
-                   CASE WHEN n * sxx - srx * srx > 0
-                             AND n * syy - sry * sry > 0
-                        THEN round(CAST(n * sxy - srx * sry AS DOUBLE)
-                                   / (sqrt(CAST(n * sxx - srx * srx AS DOUBLE))
-                                      * sqrt(CAST(n * syy - sry * sry
-                                                  AS DOUBLE))) + 1e-9, 6)
-                   END AS rho
-            FROM g
-        """,
         "link_pred": """
             WITH e AS MATERIALIZED (
                 SELECT a.l_partkey AS u, b.l_partkey AS v
@@ -8223,21 +8079,6 @@ _NORM_FP = (
 
 _TOKENS_RE = "'[^ \\t\\n\\r\\f\\x0B]+'"
 
-# rounded composite quality score — byte-identical to the expression inside
-# the text_quality oracle (mean of length/alpha/punct/stopword subscores)
-_QSCORE_SQL = f"""round((least(length(regexp_extract_all(text, {_TOKENS_RE})) / 20.0, 1.0)
-                          + CASE WHEN length(text) > 0
-                            THEN length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0
-                                 / length(text) ELSE 0 END
-                          + (1.0 - least(CASE WHEN length(text) > 0
-                              THEN length(regexp_replace(text, $$[^.,;:!?'"()\\[\\]{{}}-]$$, '', 'g')) * 1.0
-                                   / length(text) ELSE 0 END * 5.0, 1.0))
-                          + least(CASE WHEN length(regexp_extract_all(text, {_TOKENS_RE})) > 0
-                              THEN length(regexp_extract_all(lower(text),
-                                   '(^|[ ])(the|and|of|to|is|in|that|it|for|with)([ ]|$)')) * 1.0
-                                   / length(regexp_extract_all(text, {_TOKENS_RE}))
-                              ELSE 0 END * 4.0, 1.0)) / 4.0, 6)"""
-
 
 def _training_ops_oracle_sql() -> dict[str, str]:
     jaccard_tail = """
@@ -10427,40 +10268,9 @@ def _sketch_oracle_sql() -> dict[str, str]:
 
 
 def _analytics_oracle_sql() -> dict[str, str]:
-    """Cohort / range-join / seasonal-baseline oracles. The range join
-    replays the PLAIN THETA JOIN the bucketized rewrite must row-equal;
-    weeks/hours are integer `//` of epoch µs."""
+    """Range-join oracle: it replays the PLAIN THETA JOIN the bucketized
+    rewrite must row-equal."""
     return {
-        "cohort_retention": """
-            WITH t AS (
-                SELECT user_id, epoch_us(ts) // 604800000000 AS week
-                FROM events
-            ),
-            f AS (
-                SELECT user_id, min(week) AS cohort_week FROM t GROUP BY user_id
-            ),
-            tr AS (
-                SELECT DISTINCT f.cohort_week,
-                       t.week - f.cohort_week AS week_offset,
-                       t.user_id
-                FROM t JOIN f USING (user_id)
-            ),
-            cells AS (
-                SELECT cohort_week, week_offset, count(*) AS active_users
-                FROM tr GROUP BY 1, 2
-            ),
-            sz AS (
-                SELECT cohort_week, count(*) AS cohort_users FROM f GROUP BY 1
-            )
-            SELECT CAST(cohort_week AS BIGINT) AS cohort_week,
-                   CAST(week_offset AS BIGINT) AS week_offset,
-                   CAST(active_users AS BIGINT) AS active_users,
-                   CAST(cohort_users AS BIGINT) AS cohort_users,
-                   round(CAST(active_users AS DOUBLE)
-                         / CAST(cohort_users AS DOUBLE) + 1e-9, 6)
-                       AS retained_frac
-            FROM cells JOIN sz USING (cohort_week)
-        """,
         # the spec the bucketized equi-join rewrite must row-equal
         "range_join": f"""
             WITH p AS (
@@ -10476,35 +10286,6 @@ def _analytics_oracle_sql() -> dict[str, str]:
             SELECT p.user_id, purchase_id, click_id, us, start_us
             FROM p JOIN c ON p.user_id = c.user_id
                          AND c.us >= p.start_us AND c.us <= p.end_us
-        """,
-        "seasonal_z": """
-            WITH t AS (
-                SELECT event_id, event_type,
-                       (epoch_us(ts) % 86400000000) // 3600000000 AS hour,
-                       CAST(floor(value * 1000.0 + 0.5) AS BIGINT) AS vq
-                FROM events
-            ),
-            prof AS (
-                SELECT event_type, hour,
-                       CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(vq) AS BIGINT) AS sum_q,
-                       CAST(sum(vq * vq) AS BIGINT) AS sum_sq_q
-                FROM t GROUP BY 1, 2
-            ),
-            v AS (
-                SELECT t.event_id, t.event_type, t.hour, t.vq, p.n,
-                       CAST(p.sum_q AS DOUBLE) / CAST(p.n AS DOUBLE) AS mu,
-                       (CAST(p.sum_sq_q AS DOUBLE)
-                        - CAST(p.sum_q AS DOUBLE) * CAST(p.sum_q AS DOUBLE)
-                          / CAST(p.n AS DOUBLE))
-                       / (CAST(p.n AS DOUBLE) - 1.0) AS var
-                FROM t JOIN prof p USING (event_type, hour)
-            )
-            SELECT event_id, event_type, CAST(hour AS BIGINT) AS hour, vq, n,
-                   round(CASE WHEN n > 1 AND var > 0
-                              THEN (CAST(vq AS DOUBLE) - mu) / sqrt(var)
-                         END + 1e-9, 6) AS seasonal_z
-            FROM v
         """,
     }
 
@@ -10865,8 +10646,9 @@ def _round4n_oracle_sql() -> dict[str, str]:
 def _activity_oracle_sql() -> dict[str, str]:
     """DuckDB replays of the rolling-active / HLL-rolling / last-touch
     attribution operators (operators/activity.py). Days are integer
-    `//` of epoch µs (the cohorts rule); the HLL register math is the
-    sketches portability contract (md5-60-bit, bin() rho, integer Z);
+    `//` of epoch µs (no calendar functions, no double division); the
+    HLL register math is the sketches portability contract (md5-60-bit,
+    bin() rho, integer Z);
     per-channel value totals sum integer thousandths."""
     from featureextraction_spark.operators.sketches import HLL_EST_NUM
 
@@ -11449,46 +11231,10 @@ def _round4t_oracle_sql() -> dict[str, str]:
 
 
 def _round4u_oracle_sql() -> dict[str, str]:
-    """DuckDB replay of the survival risk table (window cumsum over the
-    tiny distinct-lifetime table) and the positional phrase chain
-    (1-based array index shifted to Spark's 0-based posexplode)."""
+    """DuckDB replay of the positional phrase chain (1-based array index
+    shifted to Spark's 0-based posexplode)."""
     w0, w1, w2 = PHRASE_TOKENS
     return {
-        "survival": """
-            WITH per AS (
-                SELECT user_id,
-                       min(epoch_us(ts) // 86400000000) AS first_day,
-                       max(epoch_us(ts) // 86400000000) AS last_day
-                FROM events GROUP BY user_id
-            ),
-            e AS (SELECT max(last_day) AS end_day FROM per),
-            lt AS (
-                SELECT last_day - first_day AS t,
-                       CASE WHEN (SELECT end_day FROM e) - last_day > 7
-                            THEN 1 ELSE 0 END AS churned
-                FROM per
-            ),
-            by_t AS (
-                SELECT t, CAST(sum(churned) AS BIGINT) AS d,
-                       CAST(count(*) - sum(churned) AS BIGINT) AS c,
-                       CAST(count(*) AS BIGINT) AS lv
-                FROM lt GROUP BY t
-            ),
-            cum AS (
-                SELECT t, d, c,
-                       CAST(coalesce(sum(lv) OVER (
-                           ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                       ), 0) AS BIGINT) AS left_before,
-                       CAST((SELECT sum(lv) FROM by_t) AS BIGINT) AS total
-                FROM by_t
-            )
-            SELECT t, CAST(total - left_before AS BIGINT) AS n_risk, d, c,
-                   round(CAST(d AS DOUBLE)
-                         / CAST(total - left_before AS DOUBLE) + 1e-9, 6)
-                       AS hazard
-            FROM cum
-        """,
         "phrase_match": f"""
             WITH t AS (
                 SELECT doc_id,
@@ -12611,7 +12357,7 @@ def _round4ad_oracle_sql() -> dict[str, str]:
 
 
 def _round4ae_oracle_sql() -> dict[str, str]:
-    """Oracles for Welch t², the correlation matrix and bivariate OLS —
+    """Oracles for Welch t² and the correlation matrix —
     the double expressions mirror the Spark trees operation for
     operation (casts of exact int64 then correctly-rounded IEEE ops)."""
 
@@ -12735,70 +12481,6 @@ def _round4ae_oracle_sql() -> dict[str, str]:
                 FROM q
             )
             {corr_union}
-        """,
-        "ols2": """
-            WITH q AS (
-                SELECT l_returnflag AS grp,
-                       CAST(floor(CAST(l_extendedprice AS DOUBLE) * 0.01
-                                  + 0.5) AS BIGINT) AS yq,
-                       CAST(floor(CAST(l_quantity AS DOUBLE) * 1.0 + 0.5)
-                            AS BIGINT) AS x1q,
-                       CAST(floor(CAST(l_discount AS DOUBLE) * 100.0 + 0.5)
-                            AS BIGINT) AS x2q
-                FROM lineitem
-            ),
-            g AS (
-                SELECT grp,
-                       CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(x1q) AS BIGINT) AS s1,
-                       CAST(sum(x2q) AS BIGINT) AS s2,
-                       CAST(sum(yq) AS BIGINT) AS sy,
-                       CAST(sum(x1q * x1q) AS BIGINT) AS s11,
-                       CAST(sum(x2q * x2q) AS BIGINT) AS s22,
-                       CAST(sum(x1q * x2q) AS BIGINT) AS s12,
-                       CAST(sum(x1q * yq) AS BIGINT) AS s1y,
-                       CAST(sum(x2q * yq) AS BIGINT) AS s2y
-                FROM q GROUP BY grp
-            ),
-            a AS (
-                SELECT grp, n, s1, s2, sy, s11, s22, s12, s1y, s2y,
-                       CAST(n * s11 - s1 * s1 AS BIGINT) AS a11,
-                       CAST(n * s12 - s1 * s2 AS BIGINT) AS a12,
-                       CAST(n * s22 - s2 * s2 AS BIGINT) AS a22,
-                       CAST(n * s1y - s1 * sy AS BIGINT) AS b1,
-                       CAST(n * s2y - s2 * sy AS BIGINT) AS b2
-                FROM g
-            ),
-            d AS (
-                SELECT *,
-                       CAST(a11 AS DOUBLE) * CAST(a22 AS DOUBLE)
-                           - CAST(a12 AS DOUBLE) * CAST(a12 AS DOUBLE)
-                           AS det
-                FROM a
-            ),
-            b AS (
-                SELECT *,
-                       (CAST(b1 AS DOUBLE) * CAST(a22 AS DOUBLE)
-                        - CAST(b2 AS DOUBLE) * CAST(a12 AS DOUBLE)) / det
-                           AS beta1_raw,
-                       (CAST(b2 AS DOUBLE) * CAST(a11 AS DOUBLE)
-                        - CAST(b1 AS DOUBLE) * CAST(a12 AS DOUBLE)) / det
-                           AS beta2_raw
-                FROM d
-            )
-            SELECT grp, n, s1, s2, sy, s11, s22, s12, s1y, s2y,
-                   a11, a12, a22, b1, b2,
-                   CASE WHEN det <> 0
-                        THEN round(beta1_raw + 1e-9, 6) END AS beta1,
-                   CASE WHEN det <> 0
-                        THEN round(beta2_raw + 1e-9, 6) END AS beta2,
-                   CASE WHEN det <> 0
-                        THEN round((CAST(sy AS DOUBLE)
-                                    - beta1_raw * CAST(s1 AS DOUBLE)
-                                    - beta2_raw * CAST(s2 AS DOUBLE))
-                                   / CAST(n AS DOUBLE) + 1e-9, 6)
-                   END AS intercept_q
-            FROM b
         """,
     }
 

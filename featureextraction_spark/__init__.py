@@ -28,5 +28,3 @@ per-row Python in any hot path.
 """
 
 __version__ = "0.1.0"
-
-TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]

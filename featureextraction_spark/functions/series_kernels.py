@@ -282,11 +282,7 @@ def local_slopes(
     return lefts, rights
 
 
-def contour_features(
-    raw: np.ndarray,
-    extremes_window: int = EXTREMES_WINDOW,
-    slope_distance: int = SLOPE_DISTANCE,
-) -> dict[str, float]:
+def contour_features(raw: np.ndarray) -> dict[str, float]:
     """The 8-feature contour family (``contour.py:30-63``) over a gap-free
     raw series. Keys unprefixed; caller adds lc_/uc_."""
     nan8 = {
@@ -304,10 +300,10 @@ def contour_features(
         return nan8
     c = characteristic_contour(raw)
     _, slant, slant_mse = ols_fit(c)
-    maxima = local_extremes(c, extremes_window, True)
-    minima = local_extremes(c, extremes_window, False)
-    max_l, max_r = local_slopes(c, maxima, slope_distance)
-    min_l, min_r = local_slopes(c, minima, slope_distance)
+    maxima = local_extremes(c, EXTREMES_WINDOW, True)
+    minima = local_extremes(c, EXTREMES_WINDOW, False)
+    max_l, max_r = local_slopes(c, maxima, SLOPE_DISTANCE)
+    min_l, min_r = local_slopes(c, minima, SLOPE_DISTANCE)
 
     def avg(a: np.ndarray) -> float:
         return float(a.mean()) if len(a) else math.nan  # np.average([]) → nan policy

@@ -54,7 +54,7 @@ def _day_expr() -> F.Column:
 
 def _user_day(df: DataFrame, user: str, ts: str) -> DataFrame:
     """(__u, day) projection — integer epoch-day via integer division
-    (epoch µs exceed double's exact range, same rule as cohorts);
+    (epoch µs exceed double's exact range, so no double division);
     NTZ-safe via the shared epoch_us helper."""
     return df.select(
         F.col(user).alias("__u"), epoch_us(df, ts).alias("__us")

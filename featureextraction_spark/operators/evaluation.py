@@ -1316,9 +1316,9 @@ def anova_f(df: DataFrame, group: str, value: str) -> DataFrame:
 
 def kendall_tau_b(df: DataFrame, a: str, b: str) -> DataFrame:
     """Kendall's tau-b rank correlation between two DISCRETE integer
-    columns — the tie-corrected concordance coefficient beside spearman
-    (continuous ranks): computed entirely from the bounded (a, b)
-    contingency cell table, never from row pairs.
+    columns — the tie-corrected concordance coefficient: computed
+    entirely from the bounded (a, b) contingency cell table, never from
+    row pairs.
 
         C, D = Σ over cell pairs (strictly ordered both ways / opposite)
         n1 = Σ_a t_a(t_a−1)/2,  n2 = Σ_b t_b(t_b−1)/2,  n0 = n(n−1)/2

@@ -305,7 +305,7 @@ def cross_correlation(
     Pearson correlation of (x_t, y_{t+k}) over the days where BOTH sides
     exist; positive k means y lags x (x leads).
 
-    Bit-portability contract (the ``corr_matrix`` / ``ols2`` one): the
+    Bit-portability contract (the ``corr_matrix`` one): the
     caller supplies exact BIGINT values (counts, or pre-quantized
     floats), so per lag the sufficient statistics n, Σx, Σy, Σxy, Σx²,
     Σy² are exact BIGINTs and the n-cleared moments

@@ -39,24 +39,3 @@ def run_length_encode(
         *(extra_aggs or []),
     )
 
-
-def median_run_length(
-    df: DataFrame,
-    col: str,
-    value,
-    key: str = "conv_id",
-    order: tuple[str, ...] = ("turn_idx",),
-    drop_leading: bool = True,
-    out: str = "median_run_length",
-) -> DataFrame:
-    """Median length of runs where ``col == value``, optionally dropping a
-    leading run (the reference drops the left-margin white run,
-    ``medianwidth.py:33-38``). Exact median (allclose parity — A5)."""
-    runs = run_length_encode(df, col, key, order)
-    matching = runs.filter(F.col("run_value").eqNullSafe(F.lit(value)))
-    if drop_leading:
-        first_run = runs.groupBy(key).agg(F.min("run_id").alias("__first_run"))
-        matching = matching.join(first_run, key, "left").filter(
-            F.col("run_id") != F.col("__first_run")
-        )
-    return matching.groupBy(key).agg(F.median("run_length").alias(out))

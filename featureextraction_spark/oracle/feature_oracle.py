@@ -29,8 +29,6 @@ def point_in_time_features_oracle(
     transcripts: pd.DataFrame,
     probes: pd.DataFrame,
     gap_seconds: int = 1800,
-    extremes_window: int = 10,
-    slope_distance: int = 10,
 ) -> pd.DataFrame:
     t = transcripts.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
         drop=True
@@ -79,8 +77,8 @@ def point_in_time_features_oracle(
 
         z1, z2, z3 = R.zones_naive(s)
         mw = R.median_width_naive(s)
-        lc = R.contour_features_naive(lc_raw, extremes_window, slope_distance)
-        uc = R.contour_features_naive(uc_raw, extremes_window, slope_distance)
+        lc = R.contour_features_naive(lc_raw)
+        uc = R.contour_features_naive(uc_raw)
         sl_max, sl_avg, sl_std = R.slantness_naive(R.contour_naive(lc_raw))
         last = pre.iloc[-1]
         rows.append(

@@ -19,8 +19,6 @@ from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.joins import membership_join
 
-SPLIT_TYPES = ("train", "test", "validation_1", "validation_2")
-
 
 def derive_key(df: DataFrame, src: str, out: str, strip_suffix: str) -> DataFrame:
     """P5: derive the join key by stripping a literal suffix (``.png``)."""

@@ -20,40 +20,13 @@ from featureextraction_spark.plans.feature_pipeline import (
     turn_state,
 )
 
-
-def _aligned(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame):
-    key = ["conv_id", "ts"]
-    s = spark_pdf.sort_values(key, kind="mergesort").reset_index(drop=True)
-    o = oracle_pdf.sort_values(key, kind="mergesort").reset_index(drop=True)
-    assert len(s) == len(o)
-    assert list(s["conv_id"]) == list(o["conv_id"])
-    return s, o
-
-
-def _assert_feature_parity(s: pd.DataFrame, o: pd.DataFrame):
-    for c in NUMERIC_FEATURES:
-        a = s[c].to_numpy(dtype=float)
-        b = o[c].to_numpy(dtype=float)
-        ok = np.isclose(a, b, rtol=1e-9, atol=1e-9, equal_nan=True)
-        assert ok.all(), (
-            f"{c}: {(~ok).sum()} mismatches, first at {int(np.argmax(~ok))}: "
-            f"spark={a[~ok][:3]} oracle={b[~ok][:3]}"
-        )
-    for c in ("session_id", "turn_count", "role_transitions"):
-        a = s[c].astype("Int64")
-        b = o[c].astype("Int64")
-        assert a.equals(b), f"{c} mismatch"
-    for c in ("prev_role", "last_tool"):
-        a = s[c].fillna("∅")
-        b = o[c].fillna("∅")
-        assert list(a) == list(b), f"{c} mismatch"
+from conftest import assert_feature_parity
 
 
 def test_pipeline_matches_oracle(spark, transcripts, transcripts_pdf, probes, probes_pdf):
     got = point_in_time_features(transcripts, probes).toPandas()
     exp = point_in_time_features_oracle(transcripts_pdf, probes_pdf)
-    s, o = _aligned(got, exp)
-    _assert_feature_parity(s, o)
+    assert_feature_parity(got, exp)
 
 
 def test_pipeline_zero_temporal_leakage_on_spark_output(

@@ -8,7 +8,9 @@ module path that ``README.md`` and ``COVERAGE.md`` name exists, and every
 ``module.py::name`` they name is a top-level definition of that module, so a
 retired module or function cannot leave its doc rows behind. No top-level
 import in the package, the scripts or the driver entry goes unread, so it
-cannot leave an import behind either."""
+cannot leave an import behind either; and no top-level definition of the
+package or the driver entry goes unread anywhere in the repo's code, so a
+retirement cannot leave a dead helper behind."""
 
 from __future__ import annotations
 
@@ -16,14 +18,15 @@ import ast
 import os
 import re
 import warnings
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "featureextraction_spark"
 
 
-def _sources() -> list[str]:
+def _sources(tops=(PKG, "scripts", "perfbench")) -> list[str]:
     out = [os.path.join(ROOT, "__spark_entry__.py")]
-    for top in (PKG, "scripts", "perfbench"):
+    for top in tops:
         for d, _, names in os.walk(os.path.join(ROOT, top)):
             out += [os.path.join(d, n) for n in names if n.endswith(".py")]
     return sorted(out)
@@ -62,15 +65,24 @@ def _top_level(tree: ast.Module):
             yield n
 
 
-def _top_level_names(path: str) -> set[str]:
-    names: set[str] = set()
-    for n in _top_level(_parse(path)):
+def _definitions(tree: ast.Module):
+    """(name, node) for each top-level function, class and assigned name."""
+    for n in _top_level(tree):
         if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            names.add(n.name)
+            yield n.name, n
         elif isinstance(n, (ast.Assign, ast.AnnAssign)):
             targets = n.targets if isinstance(n, ast.Assign) else [n.target]
-            names |= {x.id for t in targets for x in ast.walk(t) if isinstance(x, ast.Name)}
-        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            for t in targets:
+                for x in ast.walk(t):
+                    if isinstance(x, ast.Name):
+                        yield x.id, n
+
+
+def _top_level_names(path: str) -> set[str]:
+    tree = _parse(path)
+    names = {name for name, _ in _definitions(tree)}
+    for n in _top_level(tree):
+        if isinstance(n, (ast.Import, ast.ImportFrom)):
             names |= {(a.asname or a.name).split(".")[0] for a in n.names}
     return names
 
@@ -116,7 +128,7 @@ def test_oracles_only_for_registered_queries():
 
 
 # a package module path in prose: ``operators/asof.py``, optionally under
-# ``featureextraction_spark/``, or a brace list ``operators/{rolling,cohorts}.py``,
+# ``featureextraction_spark/``, or a brace list ``operators/{rolling,olap}.py``,
 # optionally followed by a definition in it: ``operators/asof.py::asof_join``
 # (``::Class.method`` names the class)
 _DOC_PATH = re.compile(
@@ -180,3 +192,35 @@ def test_no_unused_top_level_imports():
             continue
         unused += [f"{rel}:{line}: {name}" for line, name in _unused_imports(path)]
     assert not unused, "unused imports:\n" + "\n".join(unused)
+
+
+def _reads(tree: ast.AST):
+    """Every name ``tree`` reads: loaded names, attribute names and
+    names imported from a module."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.ImportFrom):
+            yield from (a.name for a in n.names)
+
+
+def test_no_unreferenced_top_level_definitions():
+    """A definition counts as read when any file of the package, the
+    scripts, the tests, the benchmark or the driver entry reads its name
+    outside the definition itself. Names are matched, not resolved, so a
+    read of an equal name elsewhere keeps a definition alive."""
+    trees = {p: _parse(p) for p in _sources((PKG, "scripts", "perfbench", "tests"))}
+    reads = Counter(name for t in trees.values() for name in _reads(t))
+    dead = []
+    for path, tree in sorted(trees.items()):
+        rel = os.path.relpath(path, ROOT)
+        if not (rel.startswith(PKG) or rel == "__spark_entry__.py"):
+            continue
+        for name, node in _definitions(tree):
+            if name.startswith("__") and name.endswith("__"):
+                continue
+            if reads[name] == sum(1 for x in _reads(node) if x == name):
+                dead.append(f"{rel}:{node.lineno}: {name}")
+    assert not dead, "definitions nothing reads:\n" + "\n".join(dead)

@@ -749,23 +749,6 @@ def test_phrase_match_filters_before_join_no_nested_loop(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_survival_no_single_partition_window(spark, tr_parquet):
-    from featureextraction_spark.operators.cohorts import survival_table
-    from featureextraction_spark.operators.cache import (
-        release_persisted_intermediates,
-    )
-
-    out = survival_table(
-        tr_parquet.selectExpr("conv_id AS user_id", "ts"),
-        censor_horizon_days=1,
-    )
-    plan = plan_of(out)
-    for ln in plan.splitlines():
-        if "windowspecdefinition" in ln:
-            assert "__pid" in ln, ln
-    release_persisted_intermediates()
-
-
 def test_pit_read_one_exchange_per_source_no_python(spark, tr_parquet):
     from featureextraction_spark.operators.scd import scd2_intervals
     from featureextraction_spark.plans.pit_read import point_in_time_read
@@ -1004,20 +987,6 @@ def test_corr_matrix_is_one_scan_one_fold(spark):
     plan = plan_of(corr_matrix(df, [("a", 1.0), ("b", 1.0), ("c", 1.0)]))
     # all K(K-1)/2 pair sums ride ONE aggregate over ONE scan
     assert plan.count("Scan ") <= 1, plan
-    assert "partial_" in plan, plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_bivariate_ols_single_exchange_partial_agg(spark):
-    from featureextraction_spark.operators.regression import bivariate_ols
-
-    df = spark.createDataFrame(
-        [("g%d" % (i % 3), float(i % 90), float(i % 11), float(i % 5))
-         for i in range(300)],
-        "grp string, y double, x1 double, x2 double",
-    )
-    plan = plan_of(bivariate_ols(df, y="y", x1="x1", x2="x2", by="grp"))
-    assert count_exchanges(plan) == 1, plan
     assert "partial_" in plan, plan
     assert "BatchEvalPython" not in plan
 

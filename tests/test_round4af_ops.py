@@ -1,5 +1,5 @@
 """Round-4 additions (thirty-first batch): Welch t², single-scan
-correlation matrix, bivariate OLS — each vs a verbatim naive python
+correlation matrix, canonical-doc pick — each vs a verbatim naive python
 oracle (statistics double-checked against closed forms)."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.evaluation import welch_t2
 from featureextraction_spark.operators.profiling import corr_matrix
-from featureextraction_spark.operators.regression import bivariate_ols
 
 
 def test_welch_t2_vs_naive(spark):
@@ -104,43 +103,6 @@ def test_corr_matrix_vs_naive(spark):
     assert out[("a", "b")].r_sign == 1 and out[("a", "b")].r2 > 0.9
     assert out[("a", "c")].r_sign == -1 and out[("a", "c")].r2 > 0.9
     assert out[("a", "d")].r2 < 0.1
-
-
-def test_bivariate_ols_recovers_planted_coefficients(spark):
-    rng = random.Random(419)
-    rows = []
-    # y = 7 + 3*x1 - 2*x2 + noise, per two groups with different betas
-    for _ in range(2000):
-        x1, x2 = rng.randrange(0, 50), rng.randrange(0, 30)
-        rows.append(("p", float(7 + 3 * x1 - 2 * x2 + rng.randrange(-2, 3)),
-                     float(x1), float(x2)))
-    for _ in range(2000):
-        x1, x2 = rng.randrange(0, 50), rng.randrange(0, 30)
-        rows.append(("q", float(-4 + 1 * x1 + 5 * x2 + rng.randrange(-2, 3)),
-                     float(x1), float(x2)))
-    # collinear group: x2 == x1 -> det 0 -> NULL betas
-    rows += [("col", float(i), float(i), float(i)) for i in range(10)]
-    df = spark.createDataFrame(rows, "grp string, y double, x1 double, x2 double")
-    got = {r.grp: r for r in bivariate_ols(
-        df, y="y", x1="x1", x2="x2", by="grp"
-    ).collect()}
-    # exact sufficient statistics vs naive
-    import math
-
-    for g in ["p", "q"]:
-        pts = [(math.floor(y + 0.5), math.floor(x1 + 0.5), math.floor(x2 + 0.5))
-               for gg, y, x1, x2 in rows if gg == g]
-        n = len(pts)
-        s1 = sum(p[1] for p in pts)
-        s2 = sum(p[2] for p in pts)
-        sy = sum(p[0] for p in pts)
-        s1y = sum(p[1] * p[0] for p in pts)
-        r = got[g]
-        assert (r.n, r.s1, r.s2, r.sy, r.s1y) == (n, s1, s2, sy, s1y), g
-    assert abs(got["p"].beta1 - 3) < 0.05 and abs(got["p"].beta2 + 2) < 0.05
-    assert abs(got["p"].intercept_q - 7) < 1.6
-    assert abs(got["q"].beta1 - 1) < 0.05 and abs(got["q"].beta2 - 5) < 0.05
-    assert got["col"].beta1 is None and got["col"].beta2 is None
 
 
 def test_canonical_pick_vs_naive(spark):

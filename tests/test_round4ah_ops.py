@@ -1,6 +1,6 @@
-"""Round-4 additions (twenty-ninth batch): Spearman rank correlation
-with average ranks, structural link-prediction scores, lead-lag
-cross-correlation — each vs a verbatim naive python oracle."""
+"""Round-4 additions (twenty-ninth batch): structural link-prediction
+scores, lead-lag cross-correlation — each vs a verbatim naive python
+oracle."""
 
 from __future__ import annotations
 
@@ -10,24 +10,7 @@ import random
 from pyspark.sql import functions as F
 
 from featureextraction_spark.operators.graph import link_prediction_scores
-from featureextraction_spark.operators.regression import spearman_corr
 from featureextraction_spark.operators.rolling import cross_correlation
-
-
-def _avg_ranks_doubled(vals):
-    """2x average rank per value (ties share the mean of their span)."""
-    order = sorted(range(len(vals)), key=lambda i: vals[i])
-    r2 = [0] * len(vals)
-    i = 0
-    while i < len(order):
-        j = i
-        while j < len(order) and vals[order[j]] == vals[order[i]]:
-            j += 1
-        # positions i+1 .. j (1-based): doubled average = (i+1) + j
-        for k in range(i, j):
-            r2[order[k]] = (i + 1) + j
-        i = j
-    return r2
 
 
 def _naive_pearson_int(xs, ys):
@@ -43,38 +26,6 @@ def _naive_pearson_int(xs, ys):
     if dx > 0 and dy > 0:
         rho = num / (math.sqrt(dx) * math.sqrt(dy))
     return num, dx, dy, rho
-
-
-def test_spearman_vs_naive_with_ties(spark):
-    rng = random.Random(71)
-    rows = []
-    for g in ("a", "b"):
-        for _ in range(60):
-            x = rng.randrange(12)          # heavy ties
-            y = 2 * x + rng.randrange(8)   # monotone-ish + noise
-            rows.append((g, float(x), float(y)))
-    df = spark.createDataFrame(rows, "grp string, x double, y double")
-    got = {r.grp: r for r in spearman_corr(df, "x", "y", "grp").collect()}
-    for g in ("a", "b"):
-        xs = [x for gg, x, _ in rows if gg == g]
-        ys = [y for gg, _, y in rows if gg == g]
-        rx, ry = _avg_ranks_doubled(xs), _avg_ranks_doubled(ys)
-        num, dx, dy, rho = _naive_pearson_int(rx, ry)
-        r = got[g]
-        assert (r.n, r.rho_num, r.dx, r.dy) == (60, num, dx, dy)
-        assert abs(r.rho - rho) < 1e-12
-        assert r.rho > 0.5  # monotone signal must show
-
-
-def test_spearman_perfect_and_constant(spark):
-    rows = [("m", float(i), float(i * i)) for i in range(1, 20)]
-    rows += [("c", float(i), 5.0) for i in range(10)]
-    df = spark.createDataFrame(rows, "grp string, x double, y double")
-    got = {r.grp: r for r in spearman_corr(df, "x", "y", "grp").collect()}
-    # strictly monotone (even though nonlinear): rho exactly 1
-    assert abs(got["m"].rho - 1.0) < 1e-12
-    # constant y: undefined -> NULL
-    assert got["c"].rho is None and got["c"].dy == 0
 
 
 def _naive_link_pred(edges, min_cn=2, scale=10**12):

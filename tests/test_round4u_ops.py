@@ -1,62 +1,14 @@
-"""Round-4 additions (twentieth batch): Kaplan-Meier survival risk
-table with right censoring, positional-index phrase matching — each vs
-a verbatim naive python oracle."""
+"""Round-4 additions (twentieth batch): positional-index phrase
+matching, BPE merge training and the point-in-time read — each vs a
+verbatim naive python oracle."""
 
 from __future__ import annotations
 
-import datetime as dt
 import random
 import re
 from collections import Counter, defaultdict
 
-from featureextraction_spark.operators.cohorts import survival_table
 from featureextraction_spark.operators.retrieval import phrase_match
-
-US_PER_DAY = 86_400_000_000
-EPOCH = dt.datetime(1970, 1, 1)
-
-
-def test_survival_table_vs_naive(spark):
-    rng = random.Random(47)
-    rows = []
-    for u in range(80):
-        start = rng.randrange(0, 20 * US_PER_DAY)
-        life = rng.randrange(0, 15 * US_PER_DAY)
-        for _ in range(rng.randint(1, 6)):
-            t = start + rng.randrange(0, life + 1)
-            rows.append((u, EPOCH + dt.timedelta(microseconds=t)))
-        rows.append((u, EPOCH + dt.timedelta(microseconds=start)))
-        rows.append((u, EPOCH + dt.timedelta(microseconds=start + life)))
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-
-    per = {}
-    for u, ts in rows:
-        us = (ts - EPOCH) // dt.timedelta(microseconds=1)
-        d = us // US_PER_DAY
-        lo, hi = per.get(u, (d, d))
-        per[u] = (min(lo, d), max(hi, d))
-    end_day = max(hi for _, hi in per.values())
-    lifetimes = []
-    for lo, hi in per.values():
-        lifetimes.append((hi - lo, 1 if end_day - hi > 7 else 0))
-    deaths = Counter(t for t, ch in lifetimes if ch)
-    cens = Counter(t for t, ch in lifetimes if not ch)
-    ts_sorted = sorted(set(t for t, _ in lifetimes))
-    total = len(per)
-    want = {}
-    left = 0
-    for t in ts_sorted:
-        n_risk = total - left
-        want[t] = (n_risk, deaths.get(t, 0), cens.get(t, 0))
-        left += deaths.get(t, 0) + cens.get(t, 0)
-
-    out = survival_table(df, censor_horizon_days=7).collect()
-    got = {r.t: (r.n_risk, r.d, r.c) for r in out}
-    assert got == want
-    for r in out:
-        assert abs(r.hazard - r.d / r.n_risk) < 1e-12
-    # risk set telescopes to zero and everyone leaves exactly once
-    assert sum(r.d + r.c for r in out) == total
 
 
 def _naive_phrase(docs, phrase):

@@ -7,21 +7,23 @@ changing a stage parameter recomputes that stage and everything downstream
 of it; a crash between any stage's data commit and its manifest commit
 reruns to the store a clean run leaves; a store version dropped by
 ``expire_snapshots`` is adopted from the kept snapshot that holds its rows,
-not appended again."""
+not appended again; the store's rows equal the independent oracle's."""
 
 from __future__ import annotations
 
 import os
 import sys
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
 from featureextraction_spark.datagen import make_transcripts  # noqa: E402
+from featureextraction_spark.oracle.feature_oracle import point_in_time_features_oracle  # noqa: E402
 
-from conftest import assert_pdf_equal, count_spark_jobs  # noqa: E402
+from conftest import assert_feature_parity, assert_pdf_equal, count_spark_jobs  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -219,6 +221,20 @@ def clean_store(spark, input_path, tmp_path_factory):
         ["--input", input_path, "--work", work, "--probes-per-conv", "2", "--cpus", "4"]
     )
     return _store(spark, work).read().toPandas()
+
+
+def test_store_matches_oracle(input_path, clean_store):
+    """The rows the job lands in the store are the independent pandas
+    oracle's feature vectors at the job's probes: the last two turns of
+    each conversation, by (ts, turn_idx)."""
+    tr = pd.read_parquet(input_path)
+    probes = (
+        tr.sort_values(["conv_id", "ts", "turn_idx"], ascending=[True, False, False])
+        .groupby("conv_id")
+        .head(2)[["conv_id", "ts"]]
+        .drop_duplicates()
+    )
+    assert_feature_parity(clean_store, point_in_time_features_oracle(tr, probes))
 
 
 @pytest.mark.parametrize("crashed", ["turn_state", "probes", "features", "store"])
