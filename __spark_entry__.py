@@ -30,7 +30,6 @@ from featureextraction_spark.operators.joins import membership_join  # noqa: E40
 from featureextraction_spark.operators.ordering import with_lag_lead  # noqa: E402
 from featureextraction_spark.operators.runlength import run_length_encode  # noqa: E402
 from featureextraction_spark.operators.sessionize import sessionize  # noqa: E402
-from featureextraction_spark.operators.transitions import transition_count  # noqa: E402
 from featureextraction_spark.functions.time import epoch_us, epoch_seconds  # noqa: E402
 from featureextraction_spark.plans.feature_pipeline import (  # noqa: E402
     NUMERIC_FEATURES as PIPELINE_NUMERIC_FEATURES,
@@ -226,12 +225,6 @@ def q_backfill_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id", "event_id", F.round("last_purchase_value", 4).alias("last_purchase_value")
     )
-
-
-def q_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 transition counts: event_type switches per user along (ts, event_id)."""
-    ev = _load(spark, sf_dir, "events")
-    return transition_count(ev, "event_type", key="user_id", order=("ts", "event_id"))
 
 
 def q_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1405,28 +1398,6 @@ def q_standard_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_session_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time session-state features at every event — position in
-    session, elapsed µs, running quantized value total — computed with
-    the single-exchange base-subtraction formulation (no second shuffle
-    on (key, session)); leakage-free by construction."""
-    from featureextraction_spark.operators.sessionize import session_state_features
-
-    ev = _load(spark, sf_dir, "events")
-    out = session_state_features(
-        ev, key="user_id", ts="ts", tie="event_id", value="value",
-        gap_seconds=SESSION_GAP_SECONDS,
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "session_id",
-        "turn_in_session",
-        "elapsed_us",
-        "run_value_sum_q",
-    )
-
-
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dyadic EWMA (α = 1/2, depth 20) of the value per user —
     integer fold ``acc·2 + x`` over the trailing frame, weight total
@@ -1568,50 +1539,6 @@ def q_label_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "next_role",
         "tool_within_h",
         "us_to_next_tool",
-    )
-
-
-ASOF_TOLERANCE_US = 3_600 * 1_000_000  # 1 h feature-store TTL
-
-
-def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 as-of join under a staleness bound (feature-store TTL): the
-    q_asof_join match expires when older than 1 h — expired probes keep
-    their row with NULLed features and fresh=0. Pure projection on top
-    of the sorted-merge as-of; zero added shuffles."""
-    from featureextraction_spark.operators.asof import apply_staleness
-
-    ev = _load(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max_by("value", "event_id").alias("click_value"),
-            F.max("event_id").alias("click_event_id"),
-        )
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts"
-    )
-    res = asof_join(
-        purchases,
-        clicks,
-        on="ts",
-        by="user_id",
-        tie="click_event_id",
-        value_cols=["click_value"],
-        matched_cols=True,
-    )
-    res = apply_staleness(
-        res, on="ts", value_cols=["click_value"], tolerance_us=ASOF_TOLERANCE_US
-    )
-    return res.select(
-        "user_id",
-        "event_id",
-        epoch_us(res, "ts").alias("ts_us"),
-        epoch_us(res, "matched_ts").alias("matched_ts_us"),
-        F.round("click_value", 4).alias("click_value"),
-        "fresh",
     )
 
 
@@ -1797,42 +1724,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         clicks, purch, by="user_id", bucket_us=RANGE_JOIN_WINDOW_US
     )
     return out.select("user_id", "purchase_id", "click_id", "us", "start_us")
-
-
-def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 dual — FORWARD as-of: each purchase ← NEAREST click at
-    ts' >= ts (inclusive, lowest-tie on equal ts). Implemented by time
-    reversal through the one backward sorted-merge code path; DuckDB
-    replays it with a native forward ASOF JOIN."""
-    from featureextraction_spark.operators.asof import asof_join_forward
-
-    ev = _load(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.min_by("value", "event_id").alias("click_value"),
-            F.min("event_id").alias("click_event_id"),
-        )
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts"
-    )
-    res = asof_join_forward(
-        purchases,
-        clicks,
-        on="ts",
-        by="user_id",
-        tie="click_event_id",
-        value_cols=["click_value"],
-    )
-    return res.select(
-        "user_id",
-        "event_id",
-        epoch_us(res, "ts").alias("ts_us"),
-        F.col("matched_us").alias("matched_ts_us"),
-        F.round("click_value", 4).alias("click_value"),
-    )
 
 
 def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2107,18 +1998,6 @@ def q_vocab_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_prefix(docs, coverage_num=90, coverage_den=100)
 
 
-def q_context_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(3-event context → next event) training-example counts per user
-    timeline — one user-keyed window exchange + one groupBy onto the
-    context vocabulary."""
-    from featureextraction_spark.operators.transitions import context_pairs
-
-    ev = _load(spark, sf_dir, "events")
-    return context_pairs(
-        ev, "event_type", key="user_id", order=("ts", "event_id")
-    )
-
-
 def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two deterministic hash-bucketed negatives per embedding query
     from the documents corpus — bucket equi-join (per-query cost
@@ -2141,19 +2020,6 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _load(spark, sf_dir, "events")
     return rfm_segments(ev)
-
-
-def q_session_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-session bounds + inter-session gap and right-censored churn
-    label — rides sessionize's single key exchange; the lead() runs on
-    the sessions table, orders of magnitude smaller than the log."""
-    from featureextraction_spark.operators.sessionize import session_gaps
-
-    ev = _load(spark, sf_dir, "events")
-    return session_gaps(
-        ev, key="user_id", ts="ts", tie="event_id",
-        gap_seconds=SESSION_GAP_SECONDS,
-    )
 
 
 def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2766,25 +2632,6 @@ def q_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "cat_a", "cat_b", "o", "r", "c", "n", "dev_num", "dev_den",
         _hround6(F.col("chi2_cell")).alias("chi2_cell"),
-    )
-
-
-def q_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user Laplace-smoothed first-order Markov transition model
-    over event types — next-action probability features; one user-keyed
-    window for bigrams, two prefix-sharing aggregates, the alphabet size
-    an in-plan broadcast 1-row aggregate."""
-    from featureextraction_spark.operators.transitions import (
-        markov_transitions,
-    )
-
-    ev = _load(spark, sf_dir, "events")
-    out = markov_transitions(
-        ev, state="event_type", key="user_id", order=("ts", "event_id")
-    )
-    return out.select(
-        "user_id", "prev", "cur", "c_ab", "c_a", "v", "prob_num",
-        "prob_den", _hround6(F.col("prob")).alias("prob"),
     )
 
 
@@ -3908,17 +3755,6 @@ def q_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 session journey prefixes (first 3 event types per
-    session) with exact ppm shares — clickstream path analysis riding
-    sessionize's one exchange; all-integer output."""
-    from featureextraction_spark.operators.sessionize import session_paths
-
-    ev = _load(spark, sf_dir, "events")
-    return session_paths(ev, depth=3, top_n=20,
-                         gap_seconds=SESSION_GAP_SECONDS)
-
-
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic mergeable Misra–Gries top-token summary with its
     error certificate, audited against the exact counts: every column is
@@ -4266,27 +4102,6 @@ def q_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-conversation conditional next-action entropy H(cur|prev) —
-    the predictability dial on markov's transition model; integer
-    bigram-count vehicles, one ln per cell under the shared nudge."""
-    from featureextraction_spark.operators.transitions import (
-        transition_entropy,
-    )
-
-    ev = _load(spark, sf_dir, "events")
-    out = transition_entropy(
-        ev, "event_type", key="user_id", order=("ts", "event_id")
-    )
-    return out.select(
-        "user_id",
-        "n_bigrams",
-        "n_prev",
-        "n_next",
-        _hround6(F.col("h_cond")).alias("h_cond"),
-    )
-
-
 def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-normalize doc length across language slices onto the
     pooled distribution (Bolstad et al. 2003) — ALL-INTEGER: within-
@@ -4558,7 +4373,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "backfill_salted": q_backfill_salted,
         "asof_join": q_asof_join,
         "asof_join_salted": q_asof_join_salted,
-        "transitions": q_transitions,
         "run_length": q_run_length,
         "membership_join": q_membership_join,
         "column_merge": q_column_merge,
@@ -4622,14 +4436,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hashed_features": q_hashed_features,
         "fold_assign": q_fold_assign,
         "standard_scale": q_standard_scale,
-        "session_features": q_session_features,
         "ewma": q_ewma,
         "vocab_growth": q_vocab_growth,
         "pmi_pairs": q_pmi_pairs,
         "recency": q_recency,
         "expanding_stats": q_expanding_stats,
         "label_windows": q_label_windows,
-        "asof_tolerance": q_asof_tolerance,
         "quantile_rank": q_quantile_rank,
         "winsorize": q_winsorize,
         "drift_bins": q_drift_bins,
@@ -4639,7 +4451,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_registers": q_hll_registers,
         "hll_card": q_hll_card,
         "range_join": q_range_join,
-        "asof_forward": q_asof_forward,
         "scd2_build": q_scd2_build,
         "rollup_counts": q_rollup_counts,
         "pivot_counts": q_pivot_counts,
@@ -4659,10 +4470,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_props": q_json_props,
         "top_docs": q_top_docs,
         "vocab_prefix": q_vocab_prefix,
-        "context_pairs": q_context_pairs,
         "negative_sample": q_negative_sample,
         "rfm": q_rfm,
-        "session_gaps": q_session_gaps,
         "zorder": q_zorder,
         "systematic_sample": q_systematic_sample,
         "rolling_moments": q_rolling_moments,
@@ -4693,7 +4502,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skyline": q_skyline,
         "benford": q_benford,
         "contingency": q_contingency,
-        "markov": q_markov,
         "sorted_blocking": q_sorted_blocking,
         "kanon": q_kanon,
         "bfs": q_bfs,
@@ -4738,7 +4546,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dataset_summary": q_dataset_summary,
         "kmv_setops": q_kmv_setops,
         "parity_audit": q_parity_audit,
-        "session_paths": q_session_paths,
         "heavy_hitters": q_heavy_hitters,
         "priority_sample": q_priority_sample,
         "zonemap_audit": q_zonemap_audit,
@@ -4756,7 +4563,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "js_drift": q_js_drift,
         "krippendorff": q_krippendorff,
         "balance_weights": q_balance_weights,
-        "transition_entropy": q_transition_entropy,
         "quantile_normalize": q_quantile_normalize,
         "zipf_law": q_zipf_law,
         "chao1": q_chao1,
@@ -5811,49 +5617,6 @@ def _round4am_oracle_sql() -> dict[str, str]:
                          + 1e-9, 6) AS gap_pct
             FROM s CROSS JOIN g
         """,
-        "session_paths": """
-            WITH flagged AS (
-                SELECT user_id, ts, event_id, event_type,
-                       CASE WHEN lag(ts) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) IS NULL
-                                 OR epoch(ts) - epoch(lag(ts) OVER (
-                                    PARTITION BY user_id
-                                    ORDER BY ts, event_id)) > 1800
-                            THEN 1 ELSE 0 END AS new_sess
-                FROM events
-            ),
-            sess AS (
-                SELECT user_id, ts, event_id, event_type,
-                       sum(new_sess) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-                FROM flagged
-            ),
-            r AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY user_id, session_id
-                    ORDER BY ts, event_id) AS rn
-                FROM sess
-            ),
-            p AS (
-                SELECT user_id, session_id,
-                       string_agg(event_type, '>' ORDER BY rn) AS path,
-                       CAST(max(rn) AS BIGINT) AS path_len
-                FROM r WHERE rn <= 3 GROUP BY 1, 2
-            ),
-            c AS (
-                SELECT path, path_len,
-                       CAST(count(*) AS BIGINT) AS n_sessions
-                FROM p GROUP BY 1, 2
-            ),
-            t AS (SELECT CAST(sum(n_sessions) AS BIGINT) AS total_sessions
-                  FROM c)
-            SELECT c.path, c.path_len, c.n_sessions, t.total_sessions,
-                   CAST(c.n_sessions * 1000000 // t.total_sessions
-                        AS BIGINT) AS share_ppm
-            FROM c CROSS JOIN t
-            ORDER BY c.n_sessions DESC, c.path LIMIT 20
-        """,
         # deterministic Misra–Gries: exact per-shard counts -> rank/offset
         # compress at k=24 -> order-free sum-then-prune merge (PODS'12) —
         # all-integer, so the error certificate itself is hash-gated
@@ -6139,17 +5902,6 @@ def oracle_sql() -> dict[str, str]:
                    round(c.click_value, 4) AS click_value
             FROM purch p ASOF LEFT JOIN clicks c
               ON p.user_id = c.user_id AND c.ts <= p.ts
-        """,
-        "transitions": f"""
-            WITH flagged AS (
-                SELECT user_id,
-                       CASE WHEN lag(event_type) OVER ({win}) IS NOT NULL
-                                 AND lag(event_type) OVER ({win}) IS DISTINCT FROM event_type
-                            THEN 1 ELSE 0 END AS chg
-                FROM events
-            )
-            SELECT user_id, CAST(sum(chg) AS BIGINT) AS event_type_transitions
-            FROM flagged GROUP BY user_id
         """,
         "run_length": f"""
             WITH flagged AS (
@@ -6649,34 +6401,6 @@ def oracle_sql() -> dict[str, str]:
                round(weight * CAST(k AS DOUBLE) / wsum + 1e-9, 6)
                    AS weight_norm
         FROM w CROSS JOIN t
-    """
-    # transition_entropy: same bigram window as markov; h_cond closes as
-    # sum(-c_ab·ln p)/T, one ln per bounded-alphabet cell, nudged
-    base["transition_entropy"] = """
-        WITH p AS (
-            SELECT user_id, event_type AS cur,
-                   lag(event_type) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS prev
-            FROM events
-        ),
-        pp AS (
-            SELECT user_id, prev, cur, CAST(count(*) AS BIGINT) AS c_ab
-            FROM p WHERE prev IS NOT NULL GROUP BY 1, 2, 3
-        ),
-        ca AS (
-            SELECT user_id, prev, CAST(sum(c_ab) AS BIGINT) AS c_a
-            FROM pp GROUP BY 1, 2
-        ),
-        cells AS (SELECT pp.*, c_a FROM pp JOIN ca USING (user_id, prev))
-        SELECT user_id,
-               CAST(sum(c_ab) AS BIGINT) AS n_bigrams,
-               CAST(count(DISTINCT prev) AS BIGINT) AS n_prev,
-               CAST(count(DISTINCT cur) AS BIGINT) AS n_next,
-               round(sum(-(CAST(c_ab AS DOUBLE)
-                           * ln(CAST(c_ab AS DOUBLE)
-                                / CAST(c_a AS DOUBLE))))
-                     / CAST(sum(c_ab) AS DOUBLE) + 1e-9, 6) AS h_cond
-        FROM cells GROUP BY user_id
     """
     # quantile_normalize: ALL-INTEGER — both ranks, the ceiling division
     # and the pooled order statistic are exact BIGINTs on both engines
@@ -9790,38 +9514,6 @@ def _curation_oracle_sql() -> dict[str, str]:
                          + 1e-9, 6) AS z
             FROM t, fit
         """,
-        # the spec the single-exchange base-subtraction formulation is
-        # row-equal to: plain per-(user, session) windows
-        "session_features": f"""
-            WITH flagged AS (
-                SELECT event_id, user_id, ts, epoch_us(ts) AS us,
-                       CAST(floor(value * 1000000.0 + 0.5) AS BIGINT) AS vq,
-                       CASE WHEN lag(ts) OVER ({{win}}) IS NULL
-                                 OR epoch(ts) - epoch(lag(ts) OVER ({{win}}))
-                                    > {SESSION_GAP_SECONDS}
-                            THEN 1 ELSE 0 END AS new_sess
-                FROM events
-            ), sess AS (
-                SELECT event_id, user_id, us, vq,
-                       CAST(sum(new_sess) OVER ({{cum}}) AS BIGINT)
-                           AS session_id
-                FROM flagged
-            )
-            SELECT event_id, user_id, session_id,
-                   CAST(row_number() OVER sw AS BIGINT) AS turn_in_session,
-                   CAST(us - first_value(us) OVER swf AS BIGINT) AS elapsed_us,
-                   CAST(sum(vq) OVER swf AS BIGINT) AS run_value_sum_q
-            FROM sess
-            WINDOW sw AS (PARTITION BY user_id, session_id
-                          ORDER BY us, event_id),
-                   swf AS (PARTITION BY user_id, session_id
-                           ORDER BY us, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        """.format(
-            win="PARTITION BY user_id ORDER BY ts, event_id",
-            cum="PARTITION BY user_id ORDER BY ts, event_id "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
-        ),
         # list() over the trailing frame is oldest→newest on both
         # engines under the total (ts, event_id) order; list_reduce's
         # first-element seeding equals the acc=0 fold for acc·2+x
@@ -9930,10 +9622,10 @@ def _curation_oracle_sql() -> dict[str, str]:
 
 def _pit_feature_oracle_sql() -> dict[str, str]:
     """Oracles for the recency/expanding/lookahead point-in-time family,
-    the rank/winsorize/drift transforms, vocabulary coverage, and the
-    staleness-bounded as-of join. Every float output is either an exact
-    integer vehicle or ONE division through the nudged rounding; window
-    orders are total (turn_idx derives from (ts, event_id))."""
+    the rank/winsorize/drift transforms and vocabulary coverage. Every
+    float output is either an exact integer vehicle or ONE division
+    through the nudged rounding; window orders are total (turn_idx
+    derives from (ts, event_id))."""
     tr = """
             SELECT CAST(user_id AS VARCHAR) AS conv_id,
                    CAST(row_number() OVER (PARTITION BY user_id
@@ -9994,33 +9686,6 @@ def _pit_feature_oracle_sql() -> dict[str, str]:
                           ROWS BETWEEN 1 FOLLOWING AND 5 FOLLOWING),
                    wf AS (PARTITION BY conv_id ORDER BY turn_idx
                           ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
-        """,
-        # the q_asof_join oracle wrapped in the 1 h TTL: FALSE AND NULL
-        # is FALSE on both engines, so never-matched probes get fresh=0
-        "asof_tolerance": """
-            WITH clicks AS (
-                SELECT user_id, ts, max_by(value, event_id) AS click_value
-                FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-            ), purch AS (
-                SELECT user_id, event_id, ts FROM events
-                WHERE event_type = 'purchase'
-            ), m AS (
-                SELECT p.user_id, p.event_id,
-                       epoch_us(p.ts) AS ts_us,
-                       epoch_us(c.ts) AS matched_ts_us,
-                       c.click_value AS cv
-                FROM purch p ASOF LEFT JOIN clicks c
-                  ON p.user_id = c.user_id AND c.ts <= p.ts
-            ), fm AS (
-                SELECT *, matched_ts_us IS NOT NULL
-                          AND ts_us - matched_ts_us <= 3600000000 AS fresh
-                FROM m
-            )
-            SELECT user_id, event_id, ts_us,
-                   CASE WHEN fresh THEN matched_ts_us END AS matched_ts_us,
-                   CASE WHEN fresh THEN round(cv, 4) END AS click_value,
-                   CAST(fresh AS BIGINT) AS fresh
-            FROM fm
         """,
         "quantile_rank": """
             WITH r AS (
@@ -10291,29 +9956,13 @@ def _analytics_oracle_sql() -> dict[str, str]:
 
 
 def _warehouse_oracle_sql() -> dict[str, str]:
-    """Forward as-of / SCD2 / ROLLUP / pivot / tokenizer-apply oracles.
-    DuckDB's native forward ASOF JOIN replays the time-reversed sorted
-    merge; generate_subscripts+unnest zip replays posexplode."""
+    """SCD2 / ROLLUP / pivot / tokenizer-apply oracles.
+    generate_subscripts+unnest zip replays posexplode."""
     pivots = ", ".join(
         f"CAST(count(*) FILTER (event_type = '{t}') AS BIGINT) AS n_{t}"
         for t in PIVOT_TYPES
     )
     return {
-        "asof_forward": """
-            WITH clicks AS (
-                SELECT user_id, ts, min_by(value, event_id) AS click_value
-                FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-            ), purch AS (
-                SELECT user_id, event_id, ts FROM events
-                WHERE event_type = 'purchase'
-            )
-            SELECT p.user_id, p.event_id,
-                   epoch_us(p.ts) AS ts_us,
-                   epoch_us(c.ts) AS matched_ts_us,
-                   round(c.click_value, 4) AS click_value
-            FROM purch p ASOF LEFT JOIN clicks c
-              ON p.user_id = c.user_id AND c.ts >= p.ts
-        """,
         "scd2_build": """
             WITH t AS (
                 SELECT user_id, event_id, event_type AS state,
@@ -10731,8 +10380,7 @@ def _activity_oracle_sql() -> dict[str, str]:
 def _round4p_oracle_sql() -> dict[str, str]:
     """DuckDB replays of the round-4p batch: JSON schema-on-read
     profile, skew-proof per-group top-k, vocabulary-coverage pruning,
-    higher-order context→next transition counts, hash-bucketed negative
-    sampling. All-integer contracts; hashes are the md5-60-bit family."""
+    hash-bucketed negative sampling. All-integer contracts; hashes are the md5-60-bit family."""
     return {
         "json_props": """
             WITH x AS (
@@ -10784,23 +10432,6 @@ def _round4p_oracle_sql() -> dict[str, str]:
             SELECT term, cnt, cum
             FROM r, t WHERE (cum - cnt) * 100 < 90 * total
         """,
-        "context_pairs": """
-            WITH w AS (
-                SELECT user_id, event_type,
-                       lag(event_type, 3) OVER win AS l3,
-                       lag(event_type, 2) OVER win AS l2,
-                       lag(event_type, 1) OVER win AS l1
-                FROM events
-                WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)
-            )
-            SELECT l3 || '>' || l2 || '>' || l1 AS context,
-                   event_type AS label,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM w
-            WHERE l3 IS NOT NULL AND l2 IS NOT NULL AND l1 IS NOT NULL
-                  AND event_type IS NOT NULL
-            GROUP BY 1, 2
-        """,
         "negative_sample": """
             WITH d AS (
                 SELECT doc_id,
@@ -10836,9 +10467,8 @@ def _round4p_oracle_sql() -> dict[str, str]:
 
 def _round4q_oracle_sql() -> dict[str, str]:
     """DuckDB replays of the round-4q batch: RFM segmentation,
-    session-gap/churn labels, Z-order layout keys, systematic sampling.
-    Integer-only contracts throughout (tiles = rank·5 // n; Morton =
-    shift/mask sums; gaps = BIGINT µs)."""
+    Z-order layout keys, systematic sampling. Integer-only contracts
+    throughout (tiles = rank·5 // n; Morton = shift/mask sums)."""
     return {
         "rfm": """
             WITH pu AS (
@@ -10872,45 +10502,6 @@ def _round4q_oracle_sql() -> dict[str, str]:
                    CAST(r_score * 100 + f_score * 10 + m_score AS BIGINT)
                        AS rfm_code
             FROM s
-        """,
-        "session_gaps": f"""
-            WITH flagged AS (
-                SELECT user_id, ts, event_id,
-                       CASE WHEN lag(ts) OVER win IS NULL
-                                 OR epoch(ts) - epoch(lag(ts) OVER win)
-                                    > {SESSION_GAP_SECONDS}
-                            THEN 1 ELSE 0 END AS new_sess
-                FROM events
-                WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ),
-            sess AS (
-                SELECT user_id, epoch_us(ts) AS us,
-                       CAST(sum(new_sess) OVER (
-                           PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS BIGINT) AS session_id
-                FROM flagged
-            ),
-            g AS (
-                SELECT user_id, session_id,
-                       CAST(min(us) AS BIGINT) AS start_us,
-                       CAST(max(us) AS BIGINT) AS end_us,
-                       CAST(count(*) AS BIGINT) AS n_events
-                FROM sess GROUP BY 1, 2
-            ),
-            l AS (
-                SELECT *,
-                       lead(start_us) OVER (
-                           PARTITION BY user_id ORDER BY session_id
-                       ) - end_us AS next_gap_us
-                FROM g
-            )
-            SELECT user_id, session_id, start_us, end_us, n_events,
-                   CAST(next_gap_us AS BIGINT) AS next_gap_us,
-                   CAST(CASE WHEN next_gap_us IS NULL
-                                  OR next_gap_us > 604800000000
-                             THEN 1 ELSE 0 END AS BIGINT) AS churned
-            FROM l
         """,
         "zorder": """
             WITH t AS (
@@ -11818,7 +11409,7 @@ def _round4x_oracle_sql() -> dict[str, str]:
 
 
 def _round4y_oracle_sql() -> dict[str, str]:
-    """Oracles for the contingency / Markov association reads."""
+    """Oracles for the contingency association read."""
     return {
         "contingency": """
             WITH per AS (
@@ -11872,32 +11463,6 @@ def _round4y_oracle_sql() -> dict[str, str]:
                                    / CAST(n * r * c AS DOUBLE) + 1e-9, 6)
                    END AS chi2_cell
             FROM grid
-        """,
-        "markov": """
-            WITH p AS (
-                SELECT user_id, event_type AS cur,
-                       lag(event_type) OVER (PARTITION BY user_id
-                                             ORDER BY epoch_us(ts),
-                                                      event_id) AS prev
-                FROM events
-            ),
-            pairs AS (SELECT * FROM p WHERE prev IS NOT NULL),
-            cab AS (
-                SELECT user_id, prev, cur, CAST(count(*) AS BIGINT) AS c_ab
-                FROM pairs GROUP BY 1, 2, 3
-            ),
-            ca AS (
-                SELECT user_id, prev, CAST(count(*) AS BIGINT) AS c_a
-                FROM pairs GROUP BY 1, 2
-            ),
-            v AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS v
-                  FROM events)
-            SELECT cab.user_id, cab.prev, cab.cur, cab.c_ab, ca.c_a, v.v,
-                   CAST(cab.c_ab + 1 AS BIGINT) AS prob_num,
-                   CAST(ca.c_a + v.v AS BIGINT) AS prob_den,
-                   round(CAST(cab.c_ab + 1 AS DOUBLE)
-                         / CAST(ca.c_a + v.v AS DOUBLE) + 1e-9, 6) AS prob
-            FROM cab JOIN ca USING (user_id, prev) CROSS JOIN v
         """,
     }
 

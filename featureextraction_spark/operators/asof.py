@@ -134,97 +134,3 @@ def asof_join_salted(
     )
     out_rows = filled.filter(F.col("__tag") == probe_tag)
     return _unpack(out_rows, probes.columns, value_cols, prefix, matched_cols)
-
-
-def apply_staleness(
-    out: DataFrame,
-    on: str = "ts",
-    prefix: str = "",
-    value_cols: Sequence[str] = (),
-    tolerance_us: int = 0,
-) -> DataFrame:
-    """Staleness bound (feature-store TTL) on an as-of join's output.
-
-    Feast/Tecton-style point-in-time semantics: a match older than
-    ``tolerance_us`` microseconds before the probe is EXPIRED — its value
-    columns (and matched-ts/turn bookkeeping) become NULL, exactly as if
-    no data row existed, plus a ``{prefix}fresh`` 0/1 flag (0 covers both
-    "expired" and "never matched"). A pure projection over either as-of
-    strategy's output — the tolerance adds zero shuffles.
-
-    The comparison is on epoch µs (NTZ-safe) and INCLUSIVE at the bound:
-    a match exactly ``tolerance_us`` old is still fresh, mirroring the
-    inclusive backward match at distance 0.
-    """
-    from ..functions.time import epoch_us
-
-    m_ts = f"{prefix}matched_ts"
-    age = epoch_us(out, on) - epoch_us(out, m_ts)
-    fresh = F.col(m_ts).isNotNull() & (age <= F.lit(int(tolerance_us)))
-    sel = []
-    nullable = {m_ts, f"{prefix}matched_turn_idx"} | {
-        f"{prefix}{c}" for c in value_cols
-    }
-    for c in out.columns:
-        if c in nullable:
-            sel.append(F.when(fresh, F.col(c)).alias(c))
-        else:
-            sel.append(F.col(c))
-    sel.append(fresh.cast("long").alias(f"{prefix}fresh"))
-    return out.select(*sel)
-
-
-def asof_join_forward(
-    probes: DataFrame,
-    data: DataFrame,
-    on: str = "ts",
-    by: str = "conv_id",
-    tie: str = "turn_idx",
-    value_cols: Sequence[str] | None = None,
-    prefix: str = "",
-    allow_exact_matches: bool = True,
-) -> DataFrame:
-    """FORWARD as-of join: nearest data row with ``ts >= probe ts``
-    (inclusive; ties on ts broken by the LOWEST tie — the mirror of the
-    backward join's highest-tie rule).
-
-    Implemented by time reversal: negate the µs order AND the tie on both
-    sides and delegate to the backward sorted-merge — one code path, one
-    set of physical strategies, provably mirrored semantics. Output
-    bookkeeping columns are ``{prefix}matched_us`` / ``{prefix}matched_tie``
-    (µs longs, de-negated).
-
-    Needed wherever the label or the next observation is the target
-    ("time TO next event" serving reads, forward-fill duals); the
-    backward join alone cannot express it without re-sorting.
-    """
-    from ..functions.time import epoch_us
-
-    value_cols = list(value_cols) if value_cols is not None else [
-        c for c in data.columns if c not in (by, on, tie)
-    ]
-    p = probes.withColumn("__neg_us", -epoch_us(probes, on))
-    d = data.select(
-        F.col(by),
-        (-epoch_us(data, on)).alias("__neg_us"),
-        (-F.col(tie).cast("long")).alias("__neg_tie"),
-        *[F.col(c) for c in value_cols],
-    )
-    out = asof_join(
-        p,
-        d,
-        on="__neg_us",
-        by=by,
-        tie="__neg_tie",
-        value_cols=value_cols,
-        prefix=prefix,
-        allow_exact_matches=allow_exact_matches,
-        matched_cols=True,
-    )
-    sel = [F.col(c) for c in probes.columns]
-    sel.append((-F.col(f"{prefix}matched_ts")).cast("long").alias(f"{prefix}matched_us"))
-    sel.append(
-        (-F.col(f"{prefix}matched_turn_idx")).cast("long").alias(f"{prefix}matched_tie")
-    )
-    sel += [F.col(f"{prefix}{c}") for c in value_cols]
-    return out.select(*sel)

@@ -1,9 +1,12 @@
-"""Transition counts along an ordered sequence (SURVEY.md A7).
+"""Running transition counts along an ordered sequence (SURVEY.md A7).
 
 Reference: ``count_transitions`` walks a pixel row comparing each value to
 the previous and counts changes (``src/preparation/utils.py:64-76``).
-Transposed: per-conversation count of role/tool switches — expressed as
-``lag`` + conditional sum, fully JVM-side (whole-stage codegen, no UDF).
+Transposed: at every turn, the number of value switches so far in the
+conversation (rows at or before the turn only), expressed as ``lag`` + a
+running conditional sum, fully JVM-side (whole-stage codegen, no UDF).
+``plans.feature_pipeline`` builds the turn state's ``role_transitions``
+with it.
 """
 
 from __future__ import annotations
@@ -18,23 +21,6 @@ def _change_flag(col: str, w) -> Column:
     # values; the first row (prev is null) is not a transition — same as the
     # reference seeding `previous = sequence[0]` (utils.py:66-69).
     return F.when(prev.isNotNull() & ~F.col(col).eqNullSafe(prev), F.lit(1)).otherwise(F.lit(0))
-
-
-def transition_count(
-    df: DataFrame,
-    col: str,
-    key: str = "conv_id",
-    order: tuple[str, ...] = ("turn_idx",),
-    out: str | None = None,
-) -> DataFrame:
-    """Per-key total number of value changes of ``col`` along ``order``."""
-    out = out or f"{col}_transitions"
-    w = Window.partitionBy(key).orderBy(*order)
-    return (
-        df.withColumn("__chg", _change_flag(col, w))
-        .groupBy(key)
-        .agg(F.sum("__chg").cast("long").alias(out))
-    )
 
 
 def running_transitions(
@@ -52,166 +38,3 @@ def running_transitions(
     return df.withColumn("__chg", _change_flag(col, w)).withColumn(
         out, F.sum("__chg").over(cum).cast("long")
     ).drop("__chg")
-
-
-def context_pairs(
-    df: DataFrame,
-    col: str,
-    key: str = "user_id",
-    order: tuple[str, ...] = ("ts", "event_id"),
-    context_len: int = 3,
-    sep: str = ">",
-) -> DataFrame:
-    """Higher-order transition table: (context, label, n) where
-    ``context`` is the ``context_len`` immediately-preceding values of
-    ``col`` joined oldest-first by ``sep`` and ``label`` the current
-    value — the (n-gram context → next event) training-example counts a
-    sequence model is fit on. Rows without a full context are dropped
-    (the first ``context_len`` of each key's timeline).
-
-    One key-partitioned window (a single exchange — the lag/lead shape)
-    feeding one map-side-combinable groupBy onto the context vocabulary;
-    everything is JVM expressions.
-    """
-    w = Window.partitionBy(key).orderBy(*order)
-    lags = [F.lag(col, i).over(w) for i in range(context_len, 0, -1)]
-    ctx = F.concat_ws(sep, *lags)
-    # every lag must be an OBSERVED value: a null event inside the
-    # window would silently vanish from concat_ws and alias contexts
-    full = lags[0].isNotNull()
-    for lg in lags[1:]:
-        full = full & lg.isNotNull()
-    return (
-        df.withColumn("__ctx", F.when(full, ctx))
-        .where(F.col("__ctx").isNotNull() & F.col(col).isNotNull())
-        .groupBy(F.col("__ctx").alias("context"), F.col(col).alias("label"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-def markov_transitions(
-    df: DataFrame,
-    state: str,
-    key: str = "conv_id",
-    order: tuple[str, ...] = ("turn_idx",),
-    smoothing: int = 1,
-) -> DataFrame:
-    """Per-key first-order Markov transition model with Laplace
-    smoothing — the next-action probability features a sequence model
-    conditions on, and the per-entity behavioral fingerprint.
-
-    For each observed (key, prev, cur) bigram:
-
-        prob = (c_ab + s) / (c_a + s·V)
-
-    with ``c_ab`` the bigram count, ``c_a`` the from-state count, ``V``
-    the GLOBAL state-alphabet size and ``s`` the smoothing constant —
-    ``prob_num``/``prob_den`` are the exact BIGINT vehicles, ``prob``
-    the single closing division. Unobserved successors (not emitted —
-    the per-key full grid would be keys×V² rows) implicitly carry
-    ``s / (c_a + s·V)``.
-
-    Scale: one key-partitioned ordered window produces bigrams, then
-    two map-side-combinable aggregates sharing the (key, prev) prefix;
-    the alphabet size joins as an in-plan broadcast 1-row aggregate
-    (no driver collect).
-    """
-    w = Window.partitionBy(key).orderBy(*order)
-    pairs = (
-        df.select(
-            F.col(key),
-            F.col(state).alias("cur"),
-            F.lag(state).over(w).alias("prev"),
-        )
-        .where(F.col("prev").isNotNull())
-    )
-    c_ab = pairs.groupBy(key, "prev", "cur").agg(
-        F.count(F.lit(1)).cast("long").alias("c_ab")
-    )
-    c_a = pairs.groupBy(key, "prev").agg(
-        F.count(F.lit(1)).cast("long").alias("c_a")
-    )
-    v = df.select(F.col(state).alias("s")).agg(
-        F.countDistinct("s").cast("long").alias("v")
-    )
-    out = (
-        c_ab.join(c_a, [key, "prev"])
-        .crossJoin(F.broadcast(v))
-    )
-    s = F.lit(int(smoothing))
-    return out.select(
-        key,
-        "prev",
-        "cur",
-        "c_ab",
-        "c_a",
-        "v",
-        (F.col("c_ab") + s).cast("long").alias("prob_num"),
-        (F.col("c_a") + s * F.col("v")).cast("long").alias("prob_den"),
-        (
-            (F.col("c_ab") + s).cast("double")
-            / (F.col("c_a") + s * F.col("v")).cast("double")
-        ).alias("prob"),
-    )
-
-
-def transition_entropy(
-    df: DataFrame,
-    state: str,
-    key: str = "conv_id",
-    order: tuple[str, ...] = ("turn_idx",),
-) -> DataFrame:
-    """Per-key conditional next-state entropy H(cur|prev) of the action
-    sequence — the predictability dial on top of
-    :func:`markov_transitions`: 0 for deterministic scripts (every
-    state forces its successor), ln|alphabet| for uniform wandering.
-    The behavioral-regularity feature a curriculum or bot-detection
-    pass keys on.
-
-        H(cur|prev) = Σ_a (c_a/T)·[−Σ_b (c_ab/c_a)·ln(c_ab/c_a)]
-                    = ln-sum over the key's bigram cells
-
-    Every share is a single division of exact BIGINT counts
-    (``n_bigrams``/``n_prev``/``n_states`` ship as vehicles); the
-    per-key ≤|alphabet|²-term sum rides the shared nudge.
-
-    Scale: one key-partitioned ordered window produces bigrams (the
-    markov_transitions exchange), then two map-side-combinable
-    aggregates; output is one row per key.
-    """
-    w = Window.partitionBy(key).orderBy(*order)
-    pairs = (
-        df.select(
-            F.col(key),
-            F.col(state).alias("cur"),
-            F.lag(state).over(w).alias("prev"),
-        )
-        .where(F.col("prev").isNotNull())
-    )
-    c_ab = pairs.groupBy(key, "prev", "cur").agg(
-        F.count(F.lit(1)).cast("long").alias("c_ab")
-    )
-    c_a = pairs.groupBy(key, "prev").agg(
-        F.count(F.lit(1)).cast("long").alias("c_a")
-    )
-    cells = c_ab.join(c_a, [key, "prev"])
-    p_ab = F.col("c_ab").cast("double") / F.col("c_a").cast("double")
-    out = cells.groupBy(key).agg(
-        F.sum("c_ab").cast("long").alias("n_bigrams"),
-        F.countDistinct("prev").cast("long").alias("n_prev"),
-        F.countDistinct("cur").cast("long").alias("n_next"),
-        F.sum(
-            F.negate(
-                (F.col("c_ab").cast("double"))
-                * F.log(p_ab)
-            )
-        ).alias("__hnum"),
-    )
-    # Σ c_ab·(−ln p) / T  ==  Σ (c_a/T)·Σ(p·−ln p): divide once at close
-    return out.select(
-        key,
-        "n_bigrams",
-        "n_prev",
-        "n_next",
-        (F.col("__hnum") / F.col("n_bigrams").cast("double")).alias("h_cond"),
-    )

@@ -142,8 +142,8 @@ def role_transition_latency(
     """Corpus-level (prev_role -> role) transition/latency matrix: for
     every ordered pair of consecutive turns within a conversation, how
     often each role handed off to each other role and how long the
-    hand-off took — the timing side of the Markov structure
-    ``transitions.transition_counts`` counts.
+    hand-off took — the timing side of the consecutive-role pairs whose
+    changes ``transitions.running_transitions`` counts.
 
     One row per (prev_role, role) pair:
 

@@ -9,8 +9,8 @@ module path that ``README.md`` and ``COVERAGE.md`` name exists, and every
 retired module or function cannot leave its doc rows behind. No top-level
 import in the package, the scripts or the driver entry goes unread, so it
 cannot leave an import behind either; and no top-level definition of the
-package or the driver entry goes unread anywhere in the repo's code, so a
-retirement cannot leave a dead helper behind."""
+package, the driver entry or the tests goes unread anywhere in the repo's
+code, so a retirement cannot leave a dead helper or test oracle behind."""
 
 from __future__ import annotations
 
@@ -206,20 +206,59 @@ def _reads(tree: ast.AST):
             yield from (a.name for a in n.names)
 
 
+def _fixture_requests(tree: ast.AST):
+    """Every fixture name ``tree`` requests: the parameters of its
+    functions and the names passed to ``usefixtures``."""
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from (a.arg for a in n.args.args + n.args.kwonlyargs)
+        elif isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "usefixtures":
+            yield from (a.value for a in n.args if isinstance(a, ast.Constant))
+
+
+def _fixture_used(node: ast.AST, requested: set[str]) -> bool:
+    """True for a ``pytest.fixture`` that is autouse or requested."""
+    for d in getattr(node, "decorator_list", []):
+        call = d if isinstance(d, ast.Call) else None
+        f = call.func if call else d
+        if getattr(f, "attr", getattr(f, "id", None)) == "fixture":
+            return node.name in requested or any(
+                k.arg == "autouse" and getattr(k.value, "value", False)
+                for k in (call.keywords if call else [])
+            )
+    return False
+
+
+def _pytest_reads(name: str) -> bool:
+    """Names pytest itself reads: tests, hooks and module marks."""
+    return name.startswith(("test_", "pytest_")) or name == "pytestmark"
+
+
 def test_no_unreferenced_top_level_definitions():
     """A definition counts as read when any file of the package, the
     scripts, the tests, the benchmark or the driver entry reads its name
     outside the definition itself. Names are matched, not resolved, so a
-    read of an equal name elsewhere keeps a definition alive."""
+    read of an equal name elsewhere keeps a definition alive. In the
+    tests, pytest reads the tests, hooks and autouse fixtures, and a
+    fixture is also read when a test or fixture requests it."""
     trees = {p: _parse(p) for p in _sources((PKG, "scripts", "perfbench", "tests"))}
     reads = Counter(name for t in trees.values() for name in _reads(t))
+    requested = {
+        name
+        for p, t in trees.items()
+        if os.path.relpath(p, ROOT).startswith("tests" + os.sep)
+        for name in _fixture_requests(t)
+    }
     dead = []
     for path, tree in sorted(trees.items()):
         rel = os.path.relpath(path, ROOT)
-        if not (rel.startswith(PKG) or rel == "__spark_entry__.py"):
+        in_tests = rel.startswith("tests" + os.sep)
+        if not (rel.startswith(PKG) or rel == "__spark_entry__.py" or in_tests):
             continue
         for name, node in _definitions(tree):
             if name.startswith("__") and name.endswith("__"):
+                continue
+            if in_tests and (_pytest_reads(name) or _fixture_used(node, requested)):
                 continue
             if reads[name] == sum(1 for x in _reads(node) if x == name):
                 dead.append(f"{rel}:{node.lineno}: {name}")

@@ -31,10 +31,6 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_of(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def count_exchanges(plan: str) -> int:
     # AQE wraps exchanges; count distinct shuffle origins, not reuses
     return len(re.findall(r"Exchange hashpartitioning|Exchange rangepartitioning", plan))
@@ -554,24 +550,6 @@ def test_top_per_group_two_phase_no_global_window(spark):
     assert plan.count("RunningWindowFunction") + plan.count("Window ") >= 1
 
 
-def test_context_pairs_single_window_exchange(spark):
-    """lag chain + context groupBy: the window costs one user-keyed
-    exchange; the closing agg shuffles only context-vocabulary rows."""
-    import datetime as dt
-
-    from featureextraction_spark.operators.transitions import context_pairs
-
-    df = spark.createDataFrame(
-        [(1, "e1", "click", dt.datetime(2024, 1, 1))],
-        "user_id long, event_id string, event_type string, ts timestamp",
-    )
-    plan = plan_of(
-        context_pairs(df, "event_type", key="user_id", order=("ts", "event_id"))
-    )
-    assert count_exchanges(plan) == 2, plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_negative_sample_is_bucket_equi_join(spark):
     """The probe is a hash EQUI-join on the bucket id — the plan must
     not degenerate to BroadcastNestedLoop/cartesian (what a naive
@@ -605,19 +583,6 @@ def test_rfm_ranks_users_table_not_log(spark):
     assert "windowspecdefinition()" not in plan.lower().replace(" ", "")
     assert "BatchEvalPython" not in plan
     assert "BroadcastNestedLoop" not in plan or "BuildRight" in plan
-
-
-def test_session_gaps_reuses_session_exchange(spark, tr_parquet):
-    """sessionize window + per-session groupBy share the key partition;
-    the lead() re-shuffles only the (key, session) table."""
-    from featureextraction_spark.operators.sessionize import session_gaps
-
-    plan = plan_of(
-        session_gaps(tr_parquet, key="conv_id", ts="ts", tie="turn_idx")
-    )
-    # one exchange for the window chain + ≤2 for the sessions table
-    assert count_exchanges(plan) <= 3, plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_zorder_key_is_codegen_expressions(spark):
@@ -809,22 +774,6 @@ def test_skyline_no_unpartitioned_window_over_data(spark):
         if "windowspecdefinition" in ln and "__b" not in ln:
             assert "__by" in ln or "__sufy" in ln, ln
     assert "CartesianProduct" not in plan
-
-
-def test_markov_alphabet_is_inplan_broadcast(spark):
-    from featureextraction_spark.operators.transitions import (
-        markov_transitions,
-    )
-
-    df = spark.createDataFrame(
-        [(i % 9, i, "s%d" % (i % 4)) for i in range(300)],
-        "user_id long, ord long, s string",
-    )
-    out = markov_transitions(df, state="s", key="user_id", order=("ord",))
-    plan = plan_of(out)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_sorted_blocking_equi_join_no_nested_loop(spark):

@@ -106,46 +106,3 @@ def test_parity_audit_vs_naive(spark):
     assert got["low"]["breaches_parity"] == 1
     assert got["even"]["breaches_parity"] == 0
     assert got["high"]["gap_pct"] > 0 > got["low"]["gap_pct"]
-
-
-def test_session_paths_vs_naive(spark):
-    import datetime as dt
-
-    from featureextraction_spark.operators.sessionize import session_paths
-
-    rng = random.Random(493)
-    rows, eid = [], 0
-    truth_sessions = []
-    for u in range(12):
-        t = 0
-        for _ in range(rng.randint(1, 4)):          # sessions
-            t += 4000 * 10**6                        # > gap
-            steps = [
-                rng.choice(["view", "click", "buy"])
-                for _ in range(rng.randint(1, 6))
-            ]
-            truth_sessions.append(">".join(steps[:3]))
-            for sidx, et in enumerate(steps):
-                rows.append(
-                    (u, eid, dt.datetime(2024, 1, 1)
-                     + dt.timedelta(microseconds=t), et)
-                )
-                t += rng.randrange(1, 1000 * 10**6)  # < gap
-                eid += 1
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts timestamp, event_type string"
-    )
-    got = {
-        r["path"]: (r["path_len"], r["n_sessions"], r["total_sessions"],
-                    r["share_ppm"])
-        for r in session_paths(df, depth=3, top_n=100,
-                               gap_seconds=1800).collect()
-    }
-    from collections import Counter
-    want = Counter(truth_sessions)
-    total = sum(want.values())
-    assert {p: c for p, (_, c, _, _) in got.items()} == dict(want)
-    for p, (plen, c, tot, ppm) in got.items():
-        assert plen == len(p.split(">"))
-        assert tot == total
-        assert ppm == c * 1_000_000 // total

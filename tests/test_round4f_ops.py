@@ -1,14 +1,11 @@
-"""Round-4 additions (sixth batch) — point-in-time session-state
-features (single-exchange base-subtraction), exact dyadic EWMA, and the
-Heaps-law vocabulary-growth profile — vs naive python oracles, plus
-leakage and plan audits."""
+"""Round-4 additions (sixth batch) — exact dyadic EWMA and the Heaps-law
+vocabulary-growth profile — vs naive python oracles."""
 
 from __future__ import annotations
 
 import datetime as dt
 import math
 import random
-import re
 from collections import defaultdict
 
 import pytest
@@ -17,7 +14,6 @@ from pyspark.sql import functions as F
 
 from featureextraction_spark.functions.textstats import vocab_growth
 from featureextraction_spark.operators.rolling import dyadic_ewma
-from featureextraction_spark.operators.sessionize import session_state_features
 
 
 @pytest.fixture(scope="module")
@@ -44,62 +40,6 @@ def events(spark):
     df = spark.createDataFrame(rows)
     df.persist().count()
     return df, rows
-
-
-def _sessions(rows, gap=1800.0):
-    by_u = defaultdict(list)
-    for r in rows:
-        by_u[r.user_id].append(r)
-    out = {}
-    for u, rs in by_u.items():
-        rs = sorted(rs, key=lambda r: (r.ts, r.event_id))
-        sid = 0
-        prev = None
-        for r in rs:
-            if prev is None or (r.ts - prev).total_seconds() > gap:
-                sid += 1
-            out[r.event_id] = (sid, rs)
-            prev = r.ts
-    return out
-
-
-def test_session_state_features_vs_naive(events):
-    df, rows = events
-    got = {
-        r.event_id: r
-        for r in session_state_features(
-            df, key="user_id", ts="ts", tie="event_id", value="value",
-            gap_seconds=1800,
-        ).collect()
-    }
-    sess = _sessions(rows)
-    by_us = defaultdict(list)
-    for r in rows:
-        by_us[(r.user_id, sess[r.event_id][0])].append(r)
-    for (u, sid), rs in by_us.items():
-        rs = sorted(rs, key=lambda r: (r.ts, r.event_id))
-        run = 0
-        for k, r in enumerate(rs):
-            run += math.floor(r.value * 1e6 + 0.5)
-            g = got[r.event_id]
-            assert g.session_id == sid
-            assert g.turn_in_session == k + 1
-            assert g.elapsed_us == int(
-                (r.ts - rs[0].ts).total_seconds() * 1e6
-            )
-            assert g.run_value_sum_q == run
-
-
-def test_session_state_single_exchange_no_python(events):
-    df, _ = events
-    plan = (
-        session_state_features(df, key="user_id", ts="ts", tie="event_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
-    assert "Python" not in plan
 
 
 def test_dyadic_ewma_vs_naive(events):

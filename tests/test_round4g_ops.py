@@ -1,7 +1,7 @@
 """Round-4 additions (seventh batch) — recency / expanding / lookahead
 point-in-time windows, scalable per-group normalized rank, winsorize,
-chi-square drift bins, vocabulary coverage, and staleness-bounded as-of —
-each vs a naive python oracle, plus leakage and plan-shape audits."""
+chi-square drift bins and vocabulary coverage — each vs a naive python
+oracle, plus leakage and plan-shape audits."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from featureextraction_spark.operators.asof import apply_staleness, asof_join
 from featureextraction_spark.operators.curation import vocab_coverage
 from featureextraction_spark.operators.drift import histogram_drift
 from featureextraction_spark.operators.ranking import group_normalized_rank, winsorize
@@ -318,34 +317,3 @@ def test_vocab_coverage_vs_naive(spark):
             assert got.oov_rate == pytest.approx(oov / len(tk), abs=1e-12)
         else:
             assert got.oov_rate is None
-
-
-# ------------------------------------------------- staleness-bounded asof
-
-
-def test_apply_staleness_vs_plain(spark, transcripts, probes):
-    tol = 60 * 1_000_000  # 60 s
-    plain = asof_join(
-        probes, transcripts.select("conv_id", "ts", "turn_idx", "role"),
-        value_cols=["role"],
-    )
-    bounded = apply_staleness(plain, value_cols=["role"], tolerance_us=tol)
-    got = {
-        (r.conv_id, str(r.ts)): r for r in bounded.collect()
-    }
-    n_expired = n_fresh = 0
-    for r in plain.collect():
-        b = got[(r.conv_id, str(r.ts))]
-        if r.matched_ts is not None and (
-            (r.ts - r.matched_ts).total_seconds() * 1e6 <= tol
-        ):
-            assert b.fresh == 1
-            assert b.role == r.role
-            assert b.matched_ts == r.matched_ts
-            n_fresh += 1
-        else:
-            assert b.fresh == 0
-            assert b.role is None and b.matched_ts is None
-            n_expired += 1
-    assert n_fresh > 0 and n_expired > 0  # fixture exercises both arms
-    assert bounded.count() == plain.count()  # still one row per probe

@@ -1,7 +1,5 @@
-"""Round-4 additions (tenth batch) — forward as-of join (time-reversal
-delegation), SCD2 validity intervals, ROLLUP / pivot reports, tokenizer
-apply — vs naive python oracles; the forward join's inclusive/tie edges
-get explicit fixtures."""
+"""Round-4 additions (tenth batch) — SCD2 validity intervals, ROLLUP /
+pivot reports, tokenizer apply — vs naive python oracles."""
 
 from __future__ import annotations
 
@@ -14,69 +12,11 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from featureextraction_spark.operators.asof import asof_join_forward
 from featureextraction_spark.operators.curation import tokenize_to_ids
 from featureextraction_spark.operators.olap import pivot_counts, rollup_counts
 from featureextraction_spark.operators.scd import scd2_intervals
 
 US = 1_000_000
-
-
-def _us(ts) -> int:
-    return int(ts.value // 1000)
-
-
-def test_asof_forward_vs_naive(spark, transcripts, transcripts_pdf, probes, probes_pdf):
-    out = asof_join_forward(
-        probes,
-        transcripts.select("conv_id", "ts", "turn_idx", "role"),
-        value_cols=["role"],
-    )
-    got = {(r.conv_id, str(r.ts)): r for r in out.collect()}
-    assert len(got) == len(probes_pdf)
-    by_conv = defaultdict(list)
-    for r in transcripts_pdf.itertuples():
-        by_conv[r.conv_id].append(r)
-    n_matched = n_null = 0
-    for p in probes_pdf.itertuples():
-        cands = [
-            r for r in by_conv[p.conv_id] if _us(r.ts) >= _us(p.ts)
-        ]
-        g = got[(p.conv_id, str(p.ts))]
-        if not cands:
-            assert g.matched_us is None and g.role is None
-            n_null += 1
-        else:
-            best = min(cands, key=lambda r: (_us(r.ts), r.turn_idx))
-            assert g.matched_us == _us(best.ts)
-            assert g.matched_tie == best.turn_idx
-            assert g.role == best.role
-            n_matched += 1
-    assert n_matched > 0 and n_null > 0
-
-
-def test_asof_forward_edges(spark):
-    data = spark.createDataFrame(
-        [
-            Row(conv_id="c", ts=dt.datetime(2024, 1, 1, 0, 0, 10), turn_idx=2, v="late-tie-hi"),
-            Row(conv_id="c", ts=dt.datetime(2024, 1, 1, 0, 0, 10), turn_idx=1, v="late-tie-lo"),
-            Row(conv_id="c", ts=dt.datetime(2024, 1, 1, 0, 0, 5), turn_idx=0, v="early"),
-        ]
-    )
-    probes = spark.createDataFrame(
-        [
-            Row(conv_id="c", ts=dt.datetime(2024, 1, 1, 0, 0, 5)),   # exact hit
-            Row(conv_id="c", ts=dt.datetime(2024, 1, 1, 0, 0, 7)),   # between
-            Row(conv_id="c", ts=dt.datetime(2024, 1, 1, 0, 0, 11)),  # after all
-        ]
-    )
-    got = {
-        str(r.ts): r
-        for r in asof_join_forward(probes, data, value_cols=["v"]).collect()
-    }
-    assert got["2024-01-01 00:00:05"].v == "early"  # inclusive at 0 distance
-    assert got["2024-01-01 00:00:07"].v == "late-tie-lo"  # lowest tie wins
-    assert got["2024-01-01 00:00:11"].v is None  # nothing ahead
 
 
 def test_scd2_intervals_vs_naive(spark, spark_events_small):

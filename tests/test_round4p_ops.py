@@ -1,7 +1,6 @@
 """Round-4 additions (fifteenth batch): JSON schema-on-read profile,
-skew-proof per-group top-k, vocabulary-coverage pruning, context→next
-transition counts, hash-bucketed negative sampling — each vs a verbatim
-naive python oracle."""
+skew-proof per-group top-k, vocabulary-coverage pruning, hash-bucketed
+negative sampling — each vs a verbatim naive python oracle."""
 
 from __future__ import annotations
 
@@ -20,7 +19,6 @@ from featureextraction_spark.operators.semistructured import (
     json_field_profile,
     with_json_field,
 )
-from featureextraction_spark.operators.transitions import context_pairs
 
 
 def _hash60(s):
@@ -193,37 +191,6 @@ def test_vocab_prefix_is_minimal(spark, docs_df):
     # dropping the least-frequent kept term breaks coverage → minimal
     least = min(out, key=lambda r: (r.cnt, r.term))
     assert (mass - least.cnt) * 100 < 90 * total
-
-
-# -------------------------------------------------------- context pairs
-
-
-def test_context_pairs_vs_naive(spark):
-    rng = random.Random(17)
-    rows = []
-    for u in range(30):
-        for t in range(rng.randrange(1, 15)):
-            et = rng.choice(["a", "b", "c", None])
-            rows.append((u, t, et))
-    df = spark.createDataFrame(rows, "user_id long, seq long, et string")
-    got = {
-        (r.context, r.label): r.n
-        for r in context_pairs(
-            df, "et", key="user_id", order=("seq",), context_len=2
-        ).collect()
-    }
-    naive = Counter()
-    by_user = defaultdict(list)
-    for u, t, et in rows:
-        by_user[u].append((t, et))
-    for u, evs in by_user.items():
-        evs.sort()
-        seq = [et for _t, et in evs]
-        for i in range(2, len(seq)):
-            if None in (seq[i - 2], seq[i - 1], seq[i]):
-                continue
-            naive[(f"{seq[i-2]}>{seq[i-1]}", seq[i])] += 1
-    assert got == dict(naive)
 
 
 # ----------------------------------------------------- negative sample

@@ -1,6 +1,5 @@
-"""Round-4 additions (sixteenth batch): RFM segmentation, session
-gaps/churn, Z-order layout keys, systematic sampling — each vs a
-verbatim naive python oracle."""
+"""Round-4 additions (sixteenth batch): RFM segmentation, Z-order layout
+keys, systematic sampling — each vs a verbatim naive python oracle."""
 
 from __future__ import annotations
 
@@ -17,7 +16,6 @@ from featureextraction_spark.operators.layout import (
     zorder_layout,
 )
 from featureextraction_spark.operators.sampling import systematic_sample
-from featureextraction_spark.operators.sessionize import session_gaps
 
 US_PER_DAY = 86_400_000_000
 EPOCH = dt.datetime(1970, 1, 1)
@@ -83,38 +81,6 @@ def test_rfm_vs_naive(spark, events):
         r.user_id: (r.r_days, r.f_cnt, r.m_q, r.r_score, r.f_score,
                     r.m_score, r.rfm_code)
         for r in rfm_segments(events).collect()
-    }
-    assert got == want
-
-
-def test_session_gaps_vs_naive(spark, events):
-    GAP = 1800
-    rows = [tuple(r) for r in events.collect()]
-    by_user = defaultdict(list)
-    for u, e, _t, ts, _v in rows:
-        by_user[u].append((_us(ts), e))
-    want = {}
-    for u, evs in by_user.items():
-        evs.sort()
-        sessions = []
-        prev = None
-        for us, _e in evs:
-            if prev is None or (us - prev) / 1e6 > GAP:
-                sessions.append([us, us, 0])
-            sessions[-1][1] = us
-            sessions[-1][2] += 1
-            prev = us
-        for i, (s, e, n) in enumerate(sessions):
-            gap = sessions[i + 1][0] - e if i + 1 < len(sessions) else None
-            churned = 1 if gap is None or gap > 7 * US_PER_DAY else 0
-            want[(u, i + 1)] = (s, e, n, gap, churned)
-    got = {
-        (r.user_id, r.session_id):
-            (r.start_us, r.end_us, r.n_events, r.next_gap_us, r.churned)
-        for r in session_gaps(
-            events, key="user_id", ts="ts", tie="event_id",
-            gap_seconds=GAP,
-        ).collect()
     }
     assert got == want
 

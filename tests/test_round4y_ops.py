@@ -1,16 +1,14 @@
 """Round-4 additions (twenty-fourth batch): r×c contingency chi-squared
-grid and Laplace-smoothed Markov transitions — each vs a verbatim naive
-python oracle."""
+grid vs a verbatim naive python oracle."""
 
 from __future__ import annotations
 
 import random
-from collections import Counter, defaultdict
+from collections import Counter
 
 import pytest
 
 from featureextraction_spark.operators.evaluation import contingency_table
-from featureextraction_spark.operators.transitions import markov_transitions
 
 
 def test_contingency_table_vs_naive(spark):
@@ -46,44 +44,3 @@ def test_contingency_table_vs_naive(spark):
     )
     assert chi2 == pytest.approx(chi2_ref)
     assert got[("z", "q")][0] == 0 and got[("z", "q")][4] > 0
-
-
-def test_markov_transitions_vs_naive(spark):
-    rng = random.Random(107)
-    states = ["a", "b", "c", "d"]
-    rows = []
-    for u in range(30):
-        n = rng.randint(1, 40)  # length-1 series emit no bigrams
-        for t in range(n):
-            rows.append((u, t, rng.choice(states)))
-    df = spark.createDataFrame(rows, "user_id long, ord long, s string")
-    got = {
-        (r.user_id, r.prev, r.cur): (
-            r.c_ab, r.c_a, r.v, r.prob_num, r.prob_den, r.prob,
-        )
-        for r in markov_transitions(
-            df, state="s", key="user_id", order=("ord",)
-        ).collect()
-    }
-    seqs = defaultdict(list)
-    for u, t, s in rows:
-        seqs[u].append((t, s))
-    V = len(states)
-    exp = {}
-    for u, sv in seqs.items():
-        sv.sort()
-        ss = [s for _, s in sv]
-        cab = Counter(zip(ss, ss[1:]))
-        ca = Counter(ss[:-1])
-        for (p, c), k in cab.items():
-            exp[(u, p, c)] = (k, ca[p], V, k + 1, ca[p] + V)
-    assert set(got) == set(exp)
-    for key, e in exp.items():
-        assert got[key][:5] == e, key
-        assert got[key][5] == pytest.approx(e[3] / e[4], abs=1e-9)
-    # smoothed probs over a from-state sum to < 1 (mass reserved for
-    # unobserved successors) and each is > 0
-    sums = defaultdict(float)
-    for (u, p, _), (_, _, _, num, den, _) in got.items():
-        sums[(u, p)] += num / den
-    assert all(0 < s <= 1.0 + 1e-9 for s in sums.values())

@@ -1,6 +1,6 @@
 """Round-5 additions (fifth batch): JS slice divergence, Krippendorff's
-alpha, class-balance weights, transition entropy, quantile normalization
-vs verbatim naive oracles."""
+alpha, class-balance weights, quantile normalization vs verbatim naive
+oracles."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from featureextraction_spark.operators.drift import js_divergence
 from featureextraction_spark.operators.encoding import quantile_normalize
 from featureextraction_spark.operators.evaluation import krippendorff_alpha
 from featureextraction_spark.operators.sampling import balance_weights
-from featureextraction_spark.operators.transitions import transition_entropy
 
 
 def _naive_js(rows):
@@ -134,32 +133,6 @@ def test_balance_weights_vs_naive(spark):
     # weight ratio far below the 100x raw frequency ratio
     assert got["c"]["weight"] > got["a"]["weight"]
     assert got["c"]["weight"] / got["a"]["weight"] < 100 * 0.5
-
-
-def test_transition_entropy_vs_naive(spark):
-    # key A: deterministic cycle -> H == 0; key B: planted 50/50 branch
-    rows = []
-    for i in range(30):
-        rows.append(("A", i, ["x", "y", "z"][i % 3]))
-    for i in range(40):
-        rows.append(("B", i, "x" if i % 2 == 0 else ("y" if i % 4 == 1 else "z")))
-    df = spark.createDataFrame(rows, "k string, t long, s string")
-    got = {r["k"]: r for r in transition_entropy(
-        df, "s", key="k", order=("t",)).collect()}
-
-    for key in ("A", "B"):
-        seq = [s for k, _, s in sorted(rows) if k == key]
-        bi = Counter(zip(seq, seq[1:]))
-        ca = Counter(a for a, _ in bi.elements())
-        t = sum(bi.values())
-        h = sum(-c * math.log(c / ca[a]) for (a, _), c in bi.items()) / t
-        r = got[key]
-        assert r["n_bigrams"] == t
-        assert abs(r["h_cond"] - h) < 1e-9
-    assert got["A"]["h_cond"] == 0.0
-    # B's branch: from x it's 50/50 (ln 2), from y/z deterministic (0);
-    # x holds ~half the bigram mass -> h_cond ≈ ln(2)/2
-    assert 0.25 < got["B"]["h_cond"] < math.log(2)
 
 
 def test_quantile_normalize_vs_naive(spark):

@@ -12,6 +12,7 @@ not appended again; the store's rows equal the independent oracle's."""
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import pandas as pd
@@ -67,15 +68,18 @@ def test_run_then_resume(spark, input_path, tmp_path):
 def test_changed_input_recomputes(spark, input_path, tmp_path):
     import run_pipeline
 
+    # rewrite a private copy: the module's other tests share input_path
+    src = str(tmp_path / "tr.parquet")
+    shutil.copyfile(input_path, src)
     work = str(tmp_path / "work2")
-    args = ["--input", input_path, "--work", work, "--probes-per-conv", "1", "--cpus", "4"]
+    args = ["--input", src, "--work", work, "--probes-per-conv", "1", "--cpus", "4"]
     run_pipeline.main(args)
 
     # append a byte to the input dir fingerprint by rewriting the file
     import pyarrow.parquet as pq
 
-    t = pq.read_table(input_path)
-    pq.write_table(t.slice(0, t.num_rows - 1), input_path)
+    t = pq.read_table(src)
+    pq.write_table(t.slice(0, t.num_rows - 1), src)
     out = run_pipeline.main(args)
     assert "features" in out["recomputed"] and "turn_state" in out["recomputed"]
 
