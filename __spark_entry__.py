@@ -1863,29 +1863,6 @@ def q_skew_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return skew_histogram(ev, "user_id")
 
 
-def _near_dup_corpus(docs: DataFrame) -> DataFrame:
-    """documents ∪ deterministic distance-1 clones (text‖'~' for
-    doc_id %3==0, id +1e6) — the raw synthetic corpus has no lev≤2
-    pairs, so the fixture plants them identically on both engines."""
-    clones = docs.where(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + F.lit(1_000_000)).cast("long").alias("doc_id"),
-        F.concat(F.col("text"), F.lit("~")).alias("text"),
-    )
-    return docs.select("doc_id", "text").unionByName(clones)
-
-
-def q_edit_dist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All document pairs within Levenshtein distance 2 WITHOUT the
-    cross join: positional q-gram count filter + rarest-gram prefix
-    filter (Gravano VLDB'01 / Xiao WWW'08 — complete by theorem), then
-    one exact integer `levenshtein` verify per candidate. The oracle is
-    the naive theta join, so completeness is externally gated."""
-    from featureextraction_spark.operators.stringjoin import edit_distance_pairs
-
-    docs = _load(spark, sf_dir, "documents")
-    return edit_distance_pairs(_near_dup_corpus(docs), max_dist=2, q=3)
-
-
 HQ_BIN_WIDTH = 16
 
 
@@ -2765,31 +2742,6 @@ def q_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_link_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi-Sunter-style record-linkage scoring over the
-    sorted-neighborhood candidates: integer agreement weights on lang /
-    source / length-within-10%, exact BIGINT score, threshold match
-    flag — blocking feeds deciding, never all-pairs."""
-    from featureextraction_spark.operators.dedup import (
-        sorted_neighborhood_pairs,
-    )
-    from featureextraction_spark.operators.stringjoin import link_score
-
-    docs = _load(spark, sf_dir, "documents")
-    pairs = sorted_neighborhood_pairs(
-        docs, F.lower(F.substring("text", 1, 12)), "doc_id", window=3
-    ).select("a_id", "b_id")
-    return link_score(
-        pairs,
-        docs,
-        docs,
-        id_col="doc_id",
-        exact_fields=[("lang", 40, -10), ("source", 30, -5)],
-        length_field=("n_chars", 10, 20, -10),
-        threshold=50,
-    )
-
-
 def _copurchase_weighted_edges(spark: SparkSession, sf_dir: str, min_w: int = 2):
     """Co-purchase part graph thinned to pairs sharing >= min_w distinct
     orders — the weight threshold that turns the dense clique union into
@@ -3416,50 +3368,6 @@ def q_neyman_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neyman_sample(
         docs, stratum="source", value="n_chars", id_col="doc_id",
         total_budget=1000,
-    )
-
-
-def q_er_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END entity resolution in ONE plan: sorted-neighborhood
-    blocking → Fellegi-Sunter integer link scoring → threshold match →
-    connected-component clustering → keep-longest golden record →
-    per-cluster summary. The full merge/purge loop the individual
-    queries gate piecewise, composed — blocking keeps it n·w, scoring
-    is integer-exact, closure is the same engine dedup_clusters uses,
-    and the output is the golden-record table a downstream MDM store
-    ingests."""
-    from featureextraction_spark.operators.dedup import (
-        canonical_pick,
-        sorted_neighborhood_pairs,
-    )
-    from featureextraction_spark.operators.graph import dedup_clusters
-    from featureextraction_spark.operators.stringjoin import link_score
-
-    docs = _load(spark, sf_dir, "documents")
-    pairs = sorted_neighborhood_pairs(
-        docs, F.lower(F.substring("text", 1, 12)), "doc_id", window=3
-    ).select("a_id", "b_id")
-    scored = link_score(
-        pairs,
-        docs,
-        docs,
-        id_col="doc_id",
-        exact_fields=[("lang", 40, -10), ("source", 30, -5)],
-        length_field=("n_chars", 10, 20, -10),
-        threshold=50,
-    )
-    matched = scored.filter(F.col("is_match") == 1).select("a_id", "b_id")
-    resolved = canonical_pick(docs, dedup_clusters(matched))
-    meta = docs.select("doc_id", "n_chars", "lang", "source")
-    return (
-        resolved.join(meta, "doc_id")
-        .groupBy("cluster_id", "cluster_size", "canon_id")
-        .agg(
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.countDistinct("lang").cast("long").alias("n_langs"),
-            F.countDistinct("source").cast("long").alias("n_sources"),
-        )
-        .filter(F.col("cluster_size") >= 2)
     )
 
 
@@ -4461,7 +4369,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bloom_probe": q_bloom_probe,
         "skew_topk": q_skew_topk,
         "skew_histogram": q_skew_histogram,
-        "edit_dist_pairs": q_edit_dist_pairs,
         "hist_quantiles": q_hist_quantiles,
         "chi2_terms": q_chi2_terms,
         "rolling_active": q_rolling_active,
@@ -4509,7 +4416,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ks": q_ks,
         "neighbor_agg": q_neighbor_agg,
         "dispersion": q_dispersion,
-        "link_score": q_link_score,
         "gini_split": q_gini_split,
         "gini_best": q_gini_best,
         "kcore": q_kcore,
@@ -4538,7 +4444,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hard_negatives": q_hard_negatives,
         "neyman_alloc": q_neyman_alloc,
         "neyman_sample": q_neyman_sample,
-        "er_pipeline": q_er_pipeline,
         "mmr_rerank": q_mmr_rerank,
         "weighted_median": q_weighted_median,
         "ann_recall": q_ann_recall,
@@ -5215,82 +5120,6 @@ def _round4al_oracle_sql() -> dict[str, str]:
             SELECT r.doc_id, r.source, r.n_chars, r.draw_rank, q.n_target
             FROM ranked r JOIN quota q USING (source)
             WHERE r.draw_rank <= q.n_target
-        """,
-        "er_pipeline": """
-            WITH RECURSIVE r AS (
-                SELECT doc_id, lower(substr(text, 1, 12)) AS k,
-                       row_number() OVER (
-                           ORDER BY lower(substr(text, 1, 12)), doc_id) - 1
-                           AS rnk
-                FROM documents
-            ),
-            p AS (
-                SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                FROM r a JOIN r b ON b.rnk - a.rnk BETWEEN 1 AND 3
-            ),
-            d AS (
-                SELECT p.a_id, p.b_id,
-                       da.lang AS al, db.lang AS bl,
-                       da.source AS asrc, db.source AS bsrc,
-                       CAST(da.n_chars AS BIGINT) AS an,
-                       CAST(db.n_chars AS BIGINT) AS bn
-                FROM p
-                JOIN documents da ON da.doc_id = p.a_id
-                JOIN documents db ON db.doc_id = p.b_id
-            ),
-            m AS (
-                SELECT a_id, b_id
-                FROM d
-                WHERE CASE WHEN al IS NOT NULL AND bl IS NOT NULL
-                                AND al = bl THEN 40 ELSE -10 END
-                    + CASE WHEN asrc IS NOT NULL AND bsrc IS NOT NULL
-                                AND asrc = bsrc THEN 30 ELSE -5 END
-                    + CASE WHEN an IS NOT NULL AND bn IS NOT NULL
-                                AND abs(an - bn) * 100 <= 10 * least(an, bn)
-                           THEN 20 ELSE -10 END >= 50
-            ),
-            edges AS (
-                SELECT a_id AS s, b_id AS dd FROM m
-                UNION SELECT b_id, a_id FROM m
-            ),
-            reach(id, rt) AS (
-                SELECT s, s FROM (SELECT DISTINCT s FROM edges)
-                UNION
-                SELECT e.s, reach.rt FROM edges e JOIN reach ON reach.id = e.dd
-            ),
-            comp AS (
-                SELECT id AS doc_id, min(rt) AS cluster_id
-                FROM reach GROUP BY id
-            ),
-            whole AS (
-                SELECT doc2.doc_id,
-                       coalesce(c.cluster_id, doc2.doc_id) AS cluster_id,
-                       doc2.n_chars, doc2.lang, doc2.source
-                FROM documents doc2
-                LEFT JOIN comp c ON c.doc_id = doc2.doc_id
-            ),
-            csz AS (
-                SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-                FROM whole GROUP BY cluster_id
-            ),
-            rk AS (
-                SELECT w.*, row_number() OVER (
-                    PARTITION BY w.cluster_id
-                    ORDER BY w.n_chars DESC, w.doc_id) AS rn
-                FROM whole w
-            ),
-            canon AS (
-                SELECT cluster_id, doc_id AS canon_id FROM rk WHERE rn = 1
-            )
-            SELECT w.cluster_id, z.cluster_size, c.canon_id,
-                   CAST(sum(w.n_chars) AS BIGINT) AS total_chars,
-                   CAST(count(DISTINCT w.lang) AS BIGINT) AS n_langs,
-                   CAST(count(DISTINCT w.source) AS BIGINT) AS n_sources
-            FROM whole w
-            JOIN csz z ON z.cluster_id = w.cluster_id
-            JOIN canon c ON c.cluster_id = w.cluster_id
-            WHERE z.cluster_size >= 2
-            GROUP BY 1, 2, 3
         """,
     }
 
@@ -10086,7 +9915,7 @@ def _sequential_oracle_sql() -> dict[str, str]:
 
 
 def _round4m_oracle_sql() -> dict[str, str]:
-    """Bloom / skew-profile / edit-distance-join oracles. Every output
+    """Bloom and skew-profile oracles. Every output
     column is an exact integer or a string — no float rounding boundary
     anywhere — except skew_topk.share_ppm, which is ONE shared-shape
     IEEE division (exact small-integer doubles) under floor. Bloom words
@@ -10182,24 +10011,6 @@ def _round4m_oracle_sql() -> dict[str, str]:
                    CAST(count(*) AS BIGINT) AS n_keys,
                    CAST(sum(cnt) AS BIGINT) AS rows_in_bucket
             FROM c GROUP BY bucket
-        """,
-        "edit_dist_pairs": """
-            WITH d0 AS (
-                SELECT doc_id, text FROM documents
-                UNION ALL
-                SELECT doc_id + 1000000 AS doc_id, text || '~' AS text
-                FROM documents WHERE doc_id % 3 = 0
-            ),
-            d AS (
-                SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len
-                FROM d0 WHERE length(text) >= 3
-            )
-            SELECT a.doc_id AS id1, b.doc_id AS id2,
-                   CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist,
-                   a.len AS len1, b.len AS len2
-            FROM d a JOIN d b
-              ON a.doc_id < b.doc_id AND abs(a.len - b.len) <= 2
-            WHERE levenshtein(a.text, b.text) <= 2
         """,
     }
 
@@ -11639,7 +11450,7 @@ def _round4ab_oracle_sql() -> dict[str, str]:
 
 
 def _round4ac_oracle_sql() -> dict[str, str]:
-    """Oracles for neighbor aggregation, dispersion and link scoring."""
+    """Oracles for neighbor aggregation and dispersion."""
     return {
         "neighbor_agg": """
             WITH e0 AS (
@@ -11697,57 +11508,6 @@ def _round4ac_oracle_sql() -> dict[str, str]:
                                       * CAST('10' AS DOUBLE)) + 1e-9, 6)
                    END AS dispersion
             FROM g
-        """,
-        "link_score": """
-            WITH r AS (
-                SELECT doc_id, lower(substr(text, 1, 12)) AS k,
-                       row_number() OVER (
-                           ORDER BY lower(substr(text, 1, 12)), doc_id) - 1
-                           AS rnk
-                FROM documents
-            ),
-            p AS (
-                SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                FROM r a JOIN r b ON b.rnk - a.rnk BETWEEN 1 AND 3
-            ),
-            d AS (
-                SELECT p.a_id, p.b_id,
-                       da.lang AS al, db.lang AS bl,
-                       da.source AS asrc, db.source AS bsrc,
-                       CAST(da.n_chars AS BIGINT) AS an,
-                       CAST(db.n_chars AS BIGINT) AS bn
-                FROM p
-                JOIN documents da ON da.doc_id = p.a_id
-                JOIN documents db ON db.doc_id = p.b_id
-            ),
-            s AS (
-                SELECT a_id, b_id,
-                       CASE WHEN al IS NOT NULL AND bl IS NOT NULL
-                                 AND al = bl THEN 1 ELSE 0 END AS agree_lang,
-                       CASE WHEN asrc IS NOT NULL AND bsrc IS NOT NULL
-                                 AND asrc = bsrc THEN 1 ELSE 0 END
-                           AS agree_source,
-                       CASE WHEN an IS NOT NULL AND bn IS NOT NULL
-                                 AND abs(an - bn) * 100 <= 10 * least(an, bn)
-                            THEN 1 ELSE 0 END AS agree_n_chars
-                FROM d
-            )
-            SELECT a_id, b_id,
-                   CAST(agree_lang AS BIGINT) AS agree_lang,
-                   CAST(agree_source AS BIGINT) AS agree_source,
-                   CAST(agree_n_chars AS BIGINT) AS agree_n_chars,
-                   CAST(CASE WHEN agree_lang = 1 THEN 40 ELSE -10 END
-                        + CASE WHEN agree_source = 1 THEN 30 ELSE -5 END
-                        + CASE WHEN agree_n_chars = 1 THEN 20 ELSE -10 END
-                        AS BIGINT) AS score,
-                   CAST(CASE WHEN CASE WHEN agree_lang = 1 THEN 40
-                                       ELSE -10 END
-                             + CASE WHEN agree_source = 1 THEN 30
-                                    ELSE -5 END
-                             + CASE WHEN agree_n_chars = 1 THEN 20
-                                    ELSE -10 END >= 50
-                             THEN 1 ELSE 0 END AS BIGINT) AS is_match
-            FROM s
         """,
     }
 

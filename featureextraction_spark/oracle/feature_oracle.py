@@ -33,8 +33,9 @@ def point_in_time_features_oracle(
     t = transcripts.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
         drop=True
     )
-    t["n_chars"] = t["text"].map(lambda x: float(len(x)))
-    t["n_tokens"] = t["text"].map(_n_tokens)
+    text = t["text"].fillna("")  # a null text counts as empty
+    t["n_chars"] = text.map(lambda x: float(len(x)))
+    t["n_tokens"] = text.map(_n_tokens)
     gaps = t.groupby("conv_id", sort=False)["ts"].diff().dt.total_seconds()
     t["session_id"] = (
         (gaps.isna() | (gaps > gap_seconds)).groupby(t["conv_id"], sort=False).cumsum()

@@ -82,26 +82,28 @@ _INT_COLS = ("session_id", "turn_count", "role_transitions")
 _EMPTY_STATE = [None, 0, *[math.nan] * len(NUMERIC_FEATURES), None, None, None]
 
 
-def token_count_col(text_col: str):
+def token_count_col(text):
     """Whitespace token count = number of maximal non-whitespace runs;
     empty/blank text → 0 (a 'gap' for the uc series, reference analog:
     column with no black pixels, W2)."""
-    return F.regexp_count(F.col(text_col), F.lit(TOKEN_REGEX)).cast("double")
+    return F.regexp_count(text, F.lit(TOKEN_REGEX)).cast("double")
 
 
 def turn_state(
     transcripts: DataFrame, gap_seconds: int = 1800
 ) -> DataFrame:
     """Per-turn relational state — all five window features share the single
-    (conv_id / ts, turn_idx) sort, so Catalyst plans one exchange + one sort."""
+    (conv_id / ts, turn_idx) sort, so Catalyst plans one exchange + one sort.
+    A null ``text`` counts as empty: 0 chars, 0 tokens."""
+    text = F.coalesce(F.col("text"), F.lit(""))
     d = transcripts.select(
         "conv_id",
         "turn_idx",
         "role",
         "tool",
         "ts",
-        F.length("text").cast("double").alias("n_chars"),
-        token_count_col("text").alias("n_tokens"),
+        F.length(text).cast("double").alias("n_chars"),
+        token_count_col(text).alias("n_tokens"),
     )
     d = sessionize(d, key="conv_id", ts="ts", tie="turn_idx", gap_seconds=gap_seconds)
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")

@@ -6,7 +6,7 @@ positional column merge) as a table-format sink:
 
 * ``append(df)``   — S4: a new snapshot that REFERENCES existing data files
   and adds new ones (no rewrite — exactly Iceberg's append snapshot).
-* ``merge_columns(df, on=...)`` — S5: schema-evolving column merge keyed on
+* ``merge_columns(df)`` — S5: schema-evolving column merge keyed on
   the ROW KEY, never on row position — fixing the defect the reference's own
   TODO admits (``writer.py:47``: "Implement write_features with smarter
   merging such that features are added based on the file names"). Rows are
@@ -186,12 +186,7 @@ class FeatureStore:
         prev_files = snaps[-1]["files"] if snaps else []
         return self._commit("append", prev_files + [group], schema, struct, tag=tag)
 
-    def merge_columns(
-        self,
-        df: DataFrame,
-        new_cols: list[str] | None = None,
-        tag: str | None = None,
-    ) -> int:
+    def merge_columns(self, df: DataFrame, tag: str | None = None) -> int:
         """S5 column merge KEYED ON ``key_cols`` (never positional).
 
         ``df`` must carry the key columns plus the feature columns to adopt;
@@ -205,8 +200,7 @@ class FeatureStore:
             return self.append(df, tag=tag)
         current = self.read()
         schema = snaps[-1]["schema"]
-        if new_cols is None:
-            new_cols = [c for c in df.columns if c not in schema]
+        new_cols = [c for c in df.columns if c not in schema]
         if not new_cols:
             return snaps[-1]["version"]
         right = df.select(*self.key_cols, *new_cols)
@@ -215,7 +209,7 @@ class FeatureStore:
         merged = current.join(right, on=self.key_cols, how="left")
         group = self._write_group(merged)
         return self._commit(
-            "merge_columns", [group], schema + list(new_cols), merged.schema.jsonValue(), tag=tag
+            "merge_columns", [group], schema + new_cols, merged.schema.jsonValue(), tag=tag
         )
 
     def _snapshot(self, version: int | None) -> dict:

@@ -9,6 +9,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from featureextraction_spark.datagen import to_spark
 from featureextraction_spark.oracle.feature_oracle import point_in_time_features_oracle
 from featureextraction_spark.plans.feature_pipeline import (
     BUCKET_BYTES,
@@ -27,6 +28,18 @@ def test_pipeline_matches_oracle(spark, transcripts, transcripts_pdf, probes, pr
     got = point_in_time_features(transcripts, probes).toPandas()
     exp = point_in_time_features_oracle(transcripts_pdf, probes_pdf)
     assert_feature_parity(got, exp)
+
+
+def test_pipeline_null_text_counts_as_empty(spark, transcripts_pdf, probes, probes_pdf):
+    """The schema allows a null ``text``. It is a turn with no characters
+    and no tokens, as ``""`` is, so the probes after it keep their values
+    instead of reading the null as NaN."""
+    pdf = transcripts_pdf.copy()
+    pdf.loc[pdf.index % 7 == 3, "text"] = None
+    got = point_in_time_features(to_spark(spark, pdf), probes).toPandas()
+    assert_feature_parity(got, point_in_time_features_oracle(pdf, probes_pdf))
+    emptied = pdf.fillna({"text": ""})
+    assert_feature_parity(got, point_in_time_features_oracle(emptied, probes_pdf))
 
 
 def test_pipeline_zero_temporal_leakage_on_spark_output(

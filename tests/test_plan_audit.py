@@ -844,28 +844,6 @@ def test_dispersion_index_single_exchange_partial_agg(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_link_score_equi_joins_no_python(spark):
-    from featureextraction_spark.operators.stringjoin import link_score
-
-    attrs = spark.createDataFrame(
-        [(i, "en" if i % 2 else "fr", "web", 100 + i) for i in range(100)],
-        "doc_id long, lang string, source string, n_chars long",
-    )
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(99)], "a_id long, b_id long"
-    )
-    plan = plan_of(
-        link_score(
-            pairs, attrs, attrs, id_col="doc_id",
-            exact_fields=[("lang", 40, -10), ("source", 30, -5)],
-            length_field=("n_chars", 10, 20, -10),
-        )
-    )
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_gini_split_scan_bounded_exchanges_no_python(spark):
     from featureextraction_spark.operators.splits import (
         best_gini_split,

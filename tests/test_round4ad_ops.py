@@ -1,17 +1,14 @@
 """Round-4 additions (twenty-ninth batch): GraphSAGE-style neighbor
-aggregation, dispersion index, Fellegi-Sunter link scoring — each vs a
-verbatim naive python oracle."""
+aggregation and the dispersion index — each vs a verbatim naive python
+oracle."""
 
 from __future__ import annotations
 
 import random
 from collections import defaultdict
 
-from pyspark.sql import functions as F
-
 from featureextraction_spark.operators.graph import neighbor_agg
 from featureextraction_spark.operators.profiling import dispersion_index
-from featureextraction_spark.operators.stringjoin import link_score
 
 
 def test_neighbor_agg_vs_naive(spark):
@@ -86,51 +83,3 @@ def test_dispersion_index_vs_naive(spark):
     # variance-to-mean semantics: clumped > 1 possible, constant group == 0
     assert out["const"][5] == 0.0
 
-
-def test_link_score_vs_naive(spark):
-    rng = random.Random(227)
-    langs = ["en", "fr", None]
-    srcs = ["web", "book", "chat", None]
-    recs = [
-        (i, rng.choice(langs), rng.choice(srcs), rng.randrange(50, 2000))
-        for i in range(40)
-    ]
-    attrs = spark.createDataFrame(
-        recs, "doc_id long, lang string, source string, n_chars long"
-    )
-    cand = [
-        (a, b)
-        for a in range(40)
-        for b in range(40)
-        if a < b and rng.random() < 0.2
-    ]
-    pairs = spark.createDataFrame(cand, "a_id long, b_id long")
-    out = link_score(
-        pairs,
-        attrs,
-        attrs,
-        id_col="doc_id",
-        exact_fields=[("lang", 40, -10), ("source", 30, -5)],
-        length_field=("n_chars", 10, 20, -10),
-        threshold=50,
-    )
-    got = {
-        (r.a_id, r.b_id): (
-            r.agree_lang, r.agree_source, r.agree_n_chars, r.score, r.is_match
-        )
-        for r in out.collect()
-    }
-    rec = {i: (l, s, n) for i, l, s, n in recs}
-    assert set(got) == set(cand)
-    for a, b in cand:
-        al, asrc, an = rec[a]
-        bl, bsrc, bn = rec[b]
-        ag_l = int(al is not None and bl is not None and al == bl)
-        ag_s = int(asrc is not None and bsrc is not None and asrc == bsrc)
-        ag_n = int(abs(an - bn) * 100 <= 10 * min(an, bn))
-        score = (
-            (40 if ag_l else -10)
-            + (30 if ag_s else -5)
-            + (20 if ag_n else -10)
-        )
-        assert got[(a, b)] == (ag_l, ag_s, ag_n, score, int(score >= 50))

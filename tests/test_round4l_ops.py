@@ -1,6 +1,5 @@
-"""Round-4 additions (twelfth batch): Bloom filter build/probe, join-key
-skew profiling and the q-gram-filtered edit-distance self-join — each
-vs a verbatim naive python oracle."""
+"""Round-4 additions (twelfth batch): Bloom filter build/probe and join-key
+skew profiling — each vs a verbatim naive python oracle."""
 
 from __future__ import annotations
 
@@ -8,16 +7,12 @@ import hashlib
 import random
 from collections import Counter, defaultdict
 
-import pytest
-from pyspark.sql import Row
-
 from featureextraction_spark.operators.profiling import skew_histogram, skew_topk
 from featureextraction_spark.operators.sketches import (
     BLOOM_WORD_BITS,
     bloom_build,
     bloom_probe,
 )
-from featureextraction_spark.operators.stringjoin import edit_distance_pairs
 
 
 def _h60(x: str, seed: int) -> int:
@@ -87,44 +82,3 @@ def test_skew_profile_vs_counter(spark):
         exp_hist[b][1] += n
     assert hist == {b: tuple(v) for b, v in exp_hist.items()}
 
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-@pytest.mark.parametrize("max_dist", [1, 2])
-def test_edit_distance_pairs_complete_and_precise(spark, max_dist):
-    rng = random.Random(11)
-    base = [
-        "".join(rng.choice("abcdefgh ") for _ in range(rng.randint(12, 40)))
-        for _ in range(60)
-    ]
-    rows = []
-    did = 0
-    for s in base:
-        rows.append(Row(doc_id=did, text=s)); did += 1
-        if rng.random() < 0.5:  # planted typo variant
-            pos = rng.randrange(len(s))
-            mutated = s[:pos] + rng.choice("abcdefgh") + s[pos + 1 :]
-            rows.append(Row(doc_id=did, text=mutated)); did += 1
-    df = spark.createDataFrame(rows)
-    got = {
-        (r.id1, r.id2): r.dist
-        for r in edit_distance_pairs(df, max_dist=max_dist, q=3).collect()
-    }
-    texts = {r.doc_id: r.text for r in rows}
-    exp = {}
-    ids = sorted(texts)
-    for i, x in enumerate(ids):
-        for y in ids[i + 1 :]:
-            d = _lev(texts[x], texts[y])
-            if d <= max_dist:
-                exp[(x, y)] = d
-    assert got == exp  # complete (prefix filter) AND precise (verify)
-    assert exp  # the fixture actually planted matches

@@ -7,7 +7,9 @@ changing a stage parameter recomputes that stage and everything downstream
 of it; a crash between any stage's data commit and its manifest commit
 reruns to the store a clean run leaves; a store version dropped by
 ``expire_snapshots`` is adopted from the kept snapshot that holds its rows,
-not appended again; the store's rows equal the independent oracle's."""
+not appended again; the store's rows equal the independent oracle's; the
+job shipped by ``spark-submit --py-files`` from a zipped package lands the
+same store, and a new driver resumes it."""
 
 from __future__ import annotations
 
@@ -283,3 +285,45 @@ def test_crash_between_data_and_manifest_commit(spark, input_path, tmp_path, mon
     store = _store(spark, work)
     assert rerun["store_version"] == 0 and len(store.snapshots()) == 1
     assert_pdf_equal(store.read().toPandas(), clean_store, ["conv_id", "ts"])
+
+
+def test_spark_submit_runs_the_zipped_package(spark, input_path, clean_store, tmp_path):
+    """The job as it ships: ``spark-submit --py-files fex.zip
+    run_pipeline.py``, run from a copy of the script outside the checkout
+    with the checkout off ``PYTHONPATH``, so only the zip can supply the
+    package. Its store equals the in-process run's. A rerun on the same
+    --work from a new driver (this process) resumes every stage and adds no
+    snapshot."""
+    import json
+    import subprocess
+
+    import run_pipeline
+
+    submit = shutil.which("spark-submit")
+    assert submit, "spark-submit is not on PATH"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.make_archive(str(tmp_path / "fex"), "zip", root, "featureextraction_spark")
+    shutil.copy(os.path.join(root, "scripts", "run_pipeline.py"), tmp_path)
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYSPARK_DRIVER_PYTHON=sys.executable)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and not os.path.abspath(p).startswith(root)
+    )
+    work = str(tmp_path / "work")
+    args = ["--input", input_path, "--work", work, "--probes-per-conv", "2", "--cpus", "2"]
+    proc = subprocess.run(
+        [submit, "--driver-memory", "1g", "--py-files", "fex.zip", "run_pipeline.py", *args],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    # spark-submit's Python runner writes the driver's traceback to stdout
+    assert proc.returncode == 0, proc.stdout[-3000:] + proc.stderr[-1000:]
+    shipped = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert shipped["recomputed"] == ["features", "probes", "store", "turn_state"]
+    assert shipped["store_version"] == 0
+    store = _store(spark, work)
+    assert_pdf_equal(store.read().toPandas(), clean_store, ["conv_id", "ts"])
+
+    rerun = run_pipeline.main(args)
+    assert rerun["resumed"] == ["features", "probes", "store", "turn_state"]
+    assert rerun["recomputed"] == []
+    assert rerun["store_version"] == 0 and len(store.snapshots()) == 1
